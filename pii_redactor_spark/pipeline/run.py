@@ -13,19 +13,30 @@ Physical plan (SURVEY.md §4): one narrow stage —
   read kept rows with pure partition pruning and the dropped fraction costs
   one directory, not a scan.
 * Resume: work proceeds in groups of ``phash_prefix`` partitions.  Each group
-  is written with dynamic partition overwrite (idempotent), then lineage rows
-  + counters are appended and a manifest snapshot committed.  On restart,
-  committed prefixes are skipped (anti-join semantics, SURVEY.md §2.10):
-  ``todo_prefixes`` filters a driver list while the committed set is small
-  and switches to ``distinct LEFT ANTI committed`` (broadcast) beyond
-  ``ANTI_JOIN_MIN_PARTS``, so the driver only materializes remaining work.
+  runs four steps:
+
+  1. write: dynamic partition overwrite of the group's partitions
+     (idempotent);
+  2. read back: the group's partitions, with the schema just written, so no
+     file footer is read to infer it;
+  3. lineage append: per-partition counters from the read-back, appended
+     with the group's totals observed on the same write (an
+     ``Observation``, not a second aggregation);
+  4. snapshot: the manifest commit of the group's parts and totals.
+
+  Lineage and totals both come from the written data, never from a second
+  run of the scrub UDF.  On restart, committed prefixes are skipped
+  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` filters a driver
+  list while the committed set is small and switches to ``distinct LEFT ANTI
+  committed`` (broadcast) beyond ``ANTI_JOIN_MIN_PARTS``, so the driver only
+  materializes remaining work.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from typing import TYPE_CHECKING
@@ -279,20 +290,20 @@ def run_pipeline(
                 # `keep` stays a typed data column.
                 .withColumn("keep_part", F.col("keep").cast("int"))
             )
-            storage.write_partitioned(
-                out, data_path, ["phash_prefix", "keep_part"]
-            )
+            part_cols = ["phash_prefix", "keep_part"]
         else:
-            result = scrub_decisions(part, salt_partitions=salt_partitions,
-                                     cfg=scrub_cfg, toxicity=toxicity,
-                                     image_quality=image_quality)
-            storage.write_partitioned(result, data_path, ["phash_prefix"])
+            out = scrub_decisions(part, salt_partitions=salt_partitions,
+                                  cfg=scrub_cfg, toxicity=toxicity,
+                                  image_quality=image_quality)
+            part_cols = ["phash_prefix"]
+        storage.write_partitioned(out, data_path, part_cols)
 
         # Counters from the *written* data (column-pruned read; never re-runs
-        # the UDF and never touches bytes).
-        written = storage.read_table(spark, data_path).where(
-            F.col("phash_prefix").isin(group)
-        )
+        # the UDF and never touches bytes), read back with the schema just
+        # written so no footer is read to infer it.
+        written = storage.read_table(
+            spark, data_path, schema=out.schema
+        ).where(F.col("phash_prefix").isin(group))
         counters = (
             written.groupBy("phash_prefix")
             .agg(
@@ -302,13 +313,16 @@ def run_pipeline(
                 F.sum("n_entities").alias("n_entities"),
             )
         )
+        # The group's totals are observed on the lineage rows as the append
+        # writes them: no second pass over the counters.
+        observed = Observation()
         lineage = counters.select(
             F.lit(run_id).alias("run_id"),
             F.lit("scrub").alias("stage"),
             F.col("phash_prefix").alias("part_id"),
             "n_in", "n_kept", "n_dropped", "n_entities",
             F.current_timestamp().alias("committed_at"),
-        )
+        ).observe(observed, *(F.sum(k).alias(k) for k in total))
         storage.append_table(lineage, metrics_path)
 
         if fail_before_snapshot is not None and gi >= fail_before_snapshot:
@@ -318,14 +332,8 @@ def run_pipeline(
             # consumers must read through read_lineage (latest per part).
             raise RuntimeError(f"injected failure before snapshot {gi}")
 
-        agg = counters.agg(
-            F.sum("n_in"), F.sum("n_kept"), F.sum("n_dropped"),
-            F.sum("n_entities"),
-        ).collect()[0]
-        group_counters = {
-            "n_in": int(agg[0] or 0), "n_kept": int(agg[1] or 0),
-            "n_dropped": int(agg[2] or 0), "n_entities": int(agg[3] or 0),
-        }
+        sums = observed.get
+        group_counters = {k: int(sums[k] or 0) for k in total}
         for k in total:
             total[k] += group_counters[k]
         # Commit point: manifest snapshot AFTER data + lineage both landed.

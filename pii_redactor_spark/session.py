@@ -1,7 +1,7 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Tuned for the sandbox (local[N], single JVM) but every setting is the one we
-would ship on a multi-executor cluster:
+Tuned for local[N] (one JVM).  Every setting but one is the one we would
+ship on a multi-executor cluster:
 
 * AQE on (+skew-join splitting + partition coalescing) — the north-star names
   AQE explicitly for heavy-hitter language buckets.
@@ -10,6 +10,25 @@ would ship on a multi-executor cluster:
   flat regardless of partition size.
 * shuffle.partitions sized to cores (overridable); at cluster scale this is
   replaced by AQE coalescing from a high initial value.
+
+The exception is ``spark.sql.sources.parallelPartitionDiscovery.threshold``,
+raised to ``DRIVER_LISTING_MAX_DIRS`` so a table of up to 256 partition
+directories per level (the engine's ``phash_prefix`` fan-out) is listed on
+the driver.  At the default of 32, opening such a table runs a Spark listing
+job with one task per directory; in local mode those tasks are threads of the
+same JVM reading the same disk, so the job is pure fixed cost.  Medians of 10
+interleaved opens at local[4] on a 4-vCPU VM, listing job → driver listing:
+
+* 51 ``phash_prefix`` directories: 0.56 → 0.14 s with footer schema
+  inference, 0.44 → 0.04 s with the schema given;
+* 256 directories, at the cutoff: 1.64 → 0.16 s, and 1.53 → 0.08 s;
+* 256 × 2 (``phash_prefix`` × ``keep_part``, materialize mode): 1.74 → 0.29 s,
+  and 1.61 → 0.14 s.
+
+Tables with more directories than the cutoff (the IVF store's ``ivf_cell``
+fan-out) still get the listing job.  On a cluster over object storage the
+parallel listing is the right choice, so the session builders in
+``jobs/*.py`` do not set it.
 """
 
 from __future__ import annotations
@@ -17,6 +36,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Partition directories per table level listed on the driver, not by a job.
+DRIVER_LISTING_MAX_DIRS = 256
 
 
 def get_spark(
@@ -48,6 +70,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(DRIVER_LISTING_MAX_DIRS))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

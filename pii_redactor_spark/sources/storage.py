@@ -26,10 +26,14 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def read_table(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read a table; ``merge_schema=True`` enables Iceberg-style schema
     evolution on the parquet stand-in: files written before a column was
@@ -38,8 +42,15 @@ def read_table(
     reads every footer at planning time — at 10^6 files that is a real
     planning cost, so callers opt in per read (Iceberg proper keeps the
     schema in table metadata and avoids the scan; the manifest module
-    plays that role here for snapshots, not schemas)."""
+    plays that role here for snapshots, not schemas).
+
+    ``schema``, when the caller knows it (it just wrote the table), is used
+    as is, partition columns included: no footer is read to infer it, which
+    saves the inference job, as Iceberg takes the schema from table
+    metadata.  Columns the files lack read as NULL."""
     reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
@@ -123,6 +134,17 @@ def manifest_path(table_path: str) -> str:
     return os.path.join(table_path, "_manifest.json")
 
 
+def _write_manifest(table_path: str, manifest: dict) -> dict:
+    """The commit step: write ``manifest`` beside the live one, then rename
+    it over it, so a reader sees the old manifest or the new one, never a
+    torn file (single-FS rename is atomic)."""
+    fd, tmp = tempfile.mkstemp(dir=table_path, suffix=".manifest.tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, manifest_path(table_path))
+    return manifest
+
+
 def read_manifest(table_path: str) -> dict:
     p = manifest_path(table_path)
     if not os.path.exists(p):
@@ -156,11 +178,7 @@ def commit_snapshot(table_path: str, committed_parts: list[int],
         }
     )
     os.makedirs(table_path, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=table_path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, manifest_path(table_path))
-    return manifest
+    return _write_manifest(table_path, manifest)
 
 
 def committed_parts(table_path: str) -> set[int]:
@@ -266,8 +284,4 @@ def rollback_to_snapshot(table_path: str, snapshot_id: int) -> dict:
         max(s["snapshot_id"] for s in manifest["snapshots"]),
     )
     manifest["snapshots"] = kept
-    fd, tmp = tempfile.mkstemp(dir=table_path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, manifest_path(table_path))
-    return manifest
+    return _write_manifest(table_path, manifest)

@@ -162,6 +162,90 @@ def test_crash_between_lineage_and_snapshot(spark, tmp_root, fixture_tables):
     assert int(agg) == N_ROWS
 
 
+def _job_descriptions(spark, action) -> list[str]:
+    """Run ``action`` inside a fresh job group; the description of every
+    Spark job it started, in job-id order."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    out = []
+    for job in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        desc = store.job(job).description()
+        out.append(desc.get() if desc.isDefined() else "")
+    return out
+
+
+def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
+    """A one-group decisions run costs six Spark jobs: input schema, the
+    todo distinct (map + result), the data write, and the lineage append
+    (map + write) with the group totals observed on it.  Partition
+    directories are listed on the driver, the written data is read back
+    with its known schema, and the totals take no job of their own."""
+    import pyspark
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_jobcount"
+    summary = {}
+
+    def op():
+        summary.update(run_pipeline(
+            spark, images_path, out, prefixes_per_commit=256,
+            materialize_bytes=False,
+        ))
+
+    jobs = _job_descriptions(spark, op)
+    assert summary["processed_groups"] == 1 and summary["n_in"] == N_ROWS
+    listing = [d for d in jobs
+               if d.startswith("Listing leaf files and directories")]
+    assert not listing, listing
+    assert len(jobs) <= 6, jobs
+    if pyspark.__version__ == "4.1.2":
+        assert len(jobs) == 6, jobs
+
+
+def test_group_totals_match_lineage_and_data(spark, tmp_root,
+                                             fixture_tables):
+    """Every snapshot's counters are its group's totals: the sums of the
+    group's lineage rows, and the counts of the data under its parts."""
+    from pii_redactor_spark.pipeline.run import read_lineage
+    from pii_redactor_spark.sources.storage import read_manifest
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_group_totals"
+    run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                 materialize_bytes=False)
+    keys = ("n_in", "n_kept", "n_dropped", "n_entities")
+    lineage = {r["part_id"]: r for r in read_lineage(spark, out).collect()}
+    data = {
+        r["phash_prefix"]: r
+        for r in spark.read.parquet(f"{out}/data").groupBy("phash_prefix")
+        .agg(
+            F.count("*").alias("n_in"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+            F.sum("n_entities").alias("n_entities"),
+        ).collect()
+    }
+    snaps = read_manifest(f"{out}/data")["snapshots"]
+    assert len(snaps) > 1
+    assert sum(s["counters"]["n_in"] for s in snaps) == N_ROWS
+    for snap in snaps:
+        parts = snap["parts"]
+        from_lineage = {k: sum(lineage[p][k] for p in parts) for k in keys}
+        from_data = {k: sum(data[p][k] for p in parts) for k in keys}
+        assert snap["counters"] == from_lineage == from_data, snap
+
+
 def test_decisions_mode_resumable_and_byte_free(spark, tmp_root, fixture_tables):
     """The at-scale mode: same lineage loop, no bytes read or written."""
     images_path, labels_path = fixture_tables
