@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -180,6 +181,52 @@ EXIF_SCRUB_SCHEMA = (
 )
 
 
+_UNSUPPORTED_REPORT = {"had_exif": False, "had_gps": False,
+                       "had_thumbnail": False, "orientation": 1,
+                       "removed": ""}
+_CORRUPT_REPORT = dict.fromkeys(_UNSUPPORTED_REPORT)
+
+
+def _metadata_scrubber(*, strip_device: bool, strip_timestamps: bool):
+    """The per-image metadata scrub both UDFs below run:
+    ``(data, fmt) -> (bytes, report, flag)``.
+
+    ``report`` carries ``had_exif`` / ``had_gps`` / ``had_thumbnail`` /
+    ``orientation`` and the comma-joined ``removed`` list.  ``flag`` is
+    ``'ok'``; ``'unsupported_fmt'`` (bytes pass through, empty report); or
+    ``'corrupt'`` (original bytes kept, all-NULL report).  NULL bytes scrub
+    as ``b""``, so a NULL row of a supported format comes out corrupt.
+    """
+    from ..fixtures.exif import (
+        scrub_exif,
+        scrub_gif_metadata,
+        scrub_png_metadata,
+        scrub_webp_metadata,
+    )
+
+    strip = {"strip_device": strip_device,
+             "strip_timestamps": strip_timestamps}
+    scrubbers = {
+        "jpeg": partial(scrub_exif, **strip),
+        "png": partial(scrub_png_metadata, **strip),
+        "webp": partial(scrub_webp_metadata, **strip),
+        "gif": scrub_gif_metadata,
+    }
+
+    def scrub_row(data, fmt) -> tuple[bytes, dict, str]:
+        data = bytes(data) if data is not None else b""
+        scrub = scrubbers.get(fmt)
+        if scrub is None:
+            return data, _UNSUPPORTED_REPORT, "unsupported_fmt"
+        try:
+            clean, rep = scrub(data)
+        except ValueError:
+            return data, _CORRUPT_REPORT, "corrupt"
+        return clean, {**rep, "removed": ",".join(rep["removed"])}, "ok"
+
+    return scrub_row
+
+
 def scrub_image_metadata(
     df: DataFrame,
     *,
@@ -203,11 +250,8 @@ def scrub_image_metadata(
     'unsupported_fmt'``; undecodable streams keep their original bytes
     with ``flag = 'corrupt'`` instead of killing the stage.
     """
-    from ..fixtures.exif import (
-        scrub_exif,
-        scrub_gif_metadata,
-        scrub_png_metadata,
-        scrub_webp_metadata,
+    scrub_row = _metadata_scrubber(
+        strip_device=strip_device, strip_timestamps=strip_timestamps
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -216,41 +260,12 @@ def scrub_image_metadata(
             for iid, data, fmt in zip(
                 pdf["image_id"], pdf["bytes"], pdf["fmt"]
             ):
-                data = bytes(data)
-                try:
-                    if fmt == "jpeg":
-                        clean, rep = scrub_exif(
-                            data,
-                            strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "png":
-                        clean, rep = scrub_png_metadata(
-                            data,
-                            strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "webp":
-                        clean, rep = scrub_webp_metadata(
-                            data,
-                            strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "gif":
-                        clean, rep = scrub_gif_metadata(data)
-                    else:
-                        out.append((iid, data, fmt, False, False, False,
-                                    1, "", "unsupported_fmt"))
-                        continue
-                except ValueError:
-                    out.append((iid, data, fmt, None, None, None,
-                                None, None, "corrupt"))
-                    continue
+                clean, rep, flag = scrub_row(data, fmt)
                 out.append((
                     iid, clean, fmt,
                     rep["had_exif"], rep["had_gps"],
                     rep["had_thumbnail"], rep["orientation"],
-                    ",".join(rep["removed"]), "ok",
+                    rep["removed"], flag,
                 ))
             yield pd.DataFrame(
                 out,
@@ -292,11 +307,8 @@ def with_metadata_scrub(
     """
     from pyspark.sql.functions import pandas_udf
 
-    from ..fixtures.exif import (
-        scrub_exif,
-        scrub_gif_metadata,
-        scrub_png_metadata,
-        scrub_webp_metadata,
+    scrub_row = _metadata_scrubber(
+        strip_device=strip_device, strip_timestamps=strip_timestamps
     )
 
     @pandas_udf(META_SCRUB_STRUCT)
@@ -306,34 +318,8 @@ def with_metadata_scrub(
         for blobs, fmts in batches:
             recs = []
             for data, fmt in zip(blobs, fmts):
-                data = bytes(data) if data is not None else b""
-                try:
-                    if fmt == "jpeg":
-                        clean, rep = scrub_exif(
-                            data, strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "png":
-                        clean, rep = scrub_png_metadata(
-                            data, strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "webp":
-                        clean, rep = scrub_webp_metadata(
-                            data, strip_device=strip_device,
-                            strip_timestamps=strip_timestamps,
-                        )
-                    elif fmt == "gif":
-                        clean, rep = scrub_gif_metadata(data)
-                    else:
-                        recs.append((data, False, "", "unsupported_fmt"))
-                        continue
-                except ValueError:
-                    recs.append((data, None, None, "corrupt"))
-                    continue
-                recs.append((
-                    clean, rep["had_gps"], ",".join(rep["removed"]), "ok",
-                ))
+                clean, rep, flag = scrub_row(data, fmt)
+                recs.append((clean, rep["had_gps"], rep["removed"], flag))
             yield pd.DataFrame(
                 recs,
                 columns=["bytes", "meta_had_gps", "meta_removed",

@@ -26,10 +26,9 @@ Physical plan (SURVEY.md §4): one narrow stage —
 
   Lineage and totals both come from the written data, never from a second
   run of the scrub UDF.  On restart, committed prefixes are skipped
-  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` filters a driver
-  list while the committed set is small and switches to ``distinct LEFT ANTI
-  committed`` (broadcast) beyond ``ANTI_JOIN_MIN_PARTS``, so the driver only
-  materializes remaining work.
+  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` collects the
+  input's distinct prefixes and drops the manifest's committed set, which
+  ``storage.committed_parts`` already holds on the driver.
 """
 
 from __future__ import annotations
@@ -53,27 +52,13 @@ DECISION_COLS = [
     "n_chars", "n_tokens", "quality_flags", "keep", "has_pii", "n_entities",
 ]
 
-# Below this many committed parts the todo computation filters a driver list
-# (cheapest for the default 256-prefix layout); at or above it, the LEFT
-# ANTI join form runs so the driver only ever materializes remaining work.
-ANTI_JOIN_MIN_PARTS = 1024
 
-
-def todo_prefixes(
-    spark: SparkSession,
-    src: DataFrame,
-    data_path: str,
-    anti_join_min_parts: int = ANTI_JOIN_MIN_PARTS,
-) -> tuple[list[int], int]:
+def todo_prefixes(src: DataFrame, data_path: str) -> tuple[list[int], int]:
     """Uncommitted partition ids in deterministic order, plus done count.
 
     The resume contract (SURVEY.md §2.10): todo = distinct input partitions
-    minus committed ones.  Fast path — filter the collected prefix list
-    against the manifest's committed set.  At-scale path (many committed
-    parts, e.g. a mostly-finished 65k-partition run) — the committed set
-    becomes a broadcast DataFrame and todo comes from
-    ``distinct LEFT ANTI committed``: the python-side set filter never runs
-    and the collect is bounded by the *remaining* work.
+    minus committed ones, filtered on the driver against the manifest's
+    committed set.
 
     Returns ``(todo, n_skipped)`` where ``n_skipped`` counts only committed
     parts that are prefixes of THIS input (a manifest may carry parts from a
@@ -81,61 +66,9 @@ def todo_prefixes(
     """
     done = storage.committed_parts(data_path)
     distinct = src.select("phash_prefix").distinct()
-    if len(done) < anti_join_min_parts:
-        all_p = sorted(r[0] for r in distinct.collect())
-        todo = [p for p in all_p if p not in done]
-        return todo, len(all_p) - len(todo)
-    done_df = spark.createDataFrame(
-        [(int(p), 1) for p in sorted(done)], "phash_prefix int, _done int"
-    )
-    # One job over the input: broadcast left join, then a single aggregation
-    # producing BOTH the remaining-prefix list (bounded by remaining work,
-    # like the left-anti collect) and the committed-intersection count — no
-    # second distinct scan just for the n_skipped counter.
-    row = (
-        distinct.join(F.broadcast(done_df), "phash_prefix", "left")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("_done").isNull(), F.col("phash_prefix"))
-                )
-            ).alias("todo"),
-            F.count("_done").alias("n_skipped"),
-        )
-        .collect()[0]
-    )
-    return list(row["todo"]), int(row["n_skipped"])
-
-
-def apply_toxicity(scrubbed: DataFrame, toxicity: ToxicityConfig | None) -> DataFrame:
-    """Optional toxicity stage (north rule: "PII/toxicity-scrub"): score the
-    raw caption, mask blocklisted tokens in both scrubbed outputs, AND the
-    gate into ``keep``.  A narrow JVM projection — the plan stays one stage.
-    None (the default) is a no-op, so existing outputs and oracles are
-    byte-identical unless the stage is asked for."""
-    if toxicity is None:
-        return scrubbed
-    return with_toxicity(
-        scrubbed,
-        "caption",
-        cfg=toxicity,
-        mask_cols=("scrubbed", "scrubbed_simple"),
-        keep_col="keep",
-    )
-
-
-def apply_image_quality(
-    df: DataFrame, image_quality: "ImageQualityConfig | None"
-) -> DataFrame:
-    """Optional image-metadata gate (payload side of the quality filter):
-    flag too-small / extreme-aspect / off-format images from the typed
-    ``(w, h, fmt)`` columns and AND the result into ``keep``.  None (the
-    default) is a no-op.  Metadata-only — never reads ``bytes``."""
-    if image_quality is None:
-        return df
-    from ..operators.vision import with_image_quality
-
-    return with_image_quality(df, cfg=image_quality, keep_col="keep")
+    all_p = sorted(r[0] for r in distinct.collect())
+    todo = [p for p in all_p if p not in done]
+    return todo, len(all_p) - len(todo)
 
 
 def scrub_images(
@@ -171,8 +104,27 @@ def scrub_images(
         from ..operators.vision import with_metadata_scrub
 
         df = with_metadata_scrub(df)
-    scrubbed = apply_toxicity(with_scrub(df, cfg=cfg), toxicity)
-    scrubbed = apply_image_quality(scrubbed, image_quality)
+    scrubbed = with_scrub(df, cfg=cfg)
+    if toxicity is not None:
+        # Score the raw caption, mask blocklisted tokens in both scrubbed
+        # outputs and AND the gate into ``keep``: a narrow JVM projection,
+        # so the plan stays one stage.
+        scrubbed = with_toxicity(
+            scrubbed,
+            "caption",
+            cfg=toxicity,
+            mask_cols=("scrubbed", "scrubbed_simple"),
+            keep_col="keep",
+        )
+    if image_quality is not None:
+        # Payload side of the quality filter: flag too-small / extreme-aspect
+        # / off-format images from the typed ``(w, h, fmt)`` columns and AND
+        # the result into ``keep``.
+        from ..operators.vision import with_image_quality
+
+        scrubbed = with_image_quality(
+            scrubbed, cfg=image_quality, keep_col="keep"
+        )
     return scrubbed.withColumn("n_entities", F.size("entities"))
 
 
@@ -188,13 +140,13 @@ def scrub_decisions(
 
     Rewriting 100 TB of image bytes that pass through unchanged is the one
     thing a 10^12-row pipeline must never do.  This variant projects the
-    caption-side columns BEFORE the UDF stage, so parquet/Iceberg column
-    pruning never reads ``bytes`` from storage (verify: ReadSchema in
-    ``.explain`` has no bytes field), and the output is the small decisions
-    table keyed by ``image_id`` — keep/drop + scrubbed caption + quality
-    metrics.  Consumers apply it with a partition-pruned equi join against
-    the source table (or an Iceberg metadata-only row-delete); the pixels
-    stay where they are.
+    caption-side columns, then runs ``scrub_images`` over them, so
+    parquet/Iceberg column pruning never reads ``bytes`` from storage
+    (verify: ReadSchema in ``.explain`` has no bytes field), and the output
+    is the small decisions table keyed by ``image_id`` — keep/drop +
+    scrubbed caption + quality metrics.  Consumers apply it with a
+    partition-pruned equi join against the source table (or an Iceberg
+    metadata-only row-delete); the pixels stay where they are.
     """
     # Image-quality gating widens the projection by three narrow int/str
     # metadata columns — still no bytes, still fully column-pruned.  The
@@ -208,18 +160,13 @@ def scrub_decisions(
     else:
         meta = ["w", "h", "fmt"]
     pruned = df.select("image_id", "phash_prefix", "caption", *meta)
-    if salt_partitions:
-        pruned = pruned.repartition(
-            salt_partitions,
-            F.col("phash_prefix"),
-            (F.rand(seed) * 16).cast("int"),
-        )
-    scrubbed = apply_toxicity(with_scrub(pruned, cfg=cfg), toxicity)
-    scrubbed = apply_image_quality(scrubbed, image_quality)
+    scrubbed = scrub_images(pruned, salt_partitions=salt_partitions,
+                            seed=seed, cfg=cfg, toxicity=toxicity,
+                            image_quality=image_quality)
     extra = [] if toxicity is None else list(TOXICITY_COLS)
     if image_quality is not None:
         extra = [*extra, "image_flags"]
-    return scrubbed.withColumn("n_entities", F.size("entities")).select(
+    return scrubbed.select(
         *DECISION_COLS, "scrubbed", "scrubbed_simple", *extra
     )
 
@@ -234,7 +181,6 @@ def run_pipeline(
     run_id: str | None = None,
     materialize_bytes: bool = True,
     fail_before_snapshot: int | None = None,
-    anti_join_min_parts: int = ANTI_JOIN_MIN_PARTS,
     scrub_cfg: ScrubConfig = DEFAULT_SCRUB,
     toxicity: ToxicityConfig | None = None,
     image_quality: "ImageQualityConfig | None" = None,
@@ -262,9 +208,7 @@ def run_pipeline(
     metrics_path = f"{out_dir}/metrics"
 
     src = storage.read_table(spark, images_path)
-    todo, n_done = todo_prefixes(
-        spark, src, data_path, anti_join_min_parts=anti_join_min_parts
-    )
+    todo, n_done = todo_prefixes(src, data_path)
 
     groups = [
         todo[i:i + prefixes_per_commit]

@@ -267,7 +267,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id: int) -> dict:
     """Drop every snapshot after ``snapshot_id`` from the manifest (atomic
     tmp+rename).  The Iceberg ``rollback_to_snapshot`` analog — and fully
     sound in this layout: rolled-back partitions simply leave the
-    committed set, so the resumable pipeline's LEFT-ANTI todo recomputes
+    committed set, so the resumable pipeline's todo recomputes
     and re-overwrites them on the next run (idempotent dynamic partition
     overwrite)."""
     manifest = read_manifest(table_path)

@@ -7,8 +7,8 @@ natural production shape at 10^12 rows, so the engine also exposes the scrub
 stage as a streaming transform:
 
     readStream(parquet dir, Iceberg-style layout)
-      -> scrub UDF (same vectorized stage as batch — stateless, so the
-         batch/stream plans are identical above the source)
+      -> scrub_decisions (the batch decisions transform itself — stateless,
+         so the batch/stream plans are identical above the source)
       -> writeStream parquet sink, exactly-once via checkpoint + file-sink log
 
 ``Trigger.AvailableNow`` drains everything present then stops — the
@@ -22,12 +22,11 @@ downstream consumers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.toxicity import TOXICITY_COLS, ToxicityConfig
-from ..operators.scrub import DEFAULT_SCRUB, ScrubConfig, with_scrub
-from ..pipeline.run import DECISION_COLS, apply_toxicity
+from ..functions.toxicity import ToxicityConfig
+from ..operators.scrub import DEFAULT_SCRUB, ScrubConfig
+from ..pipeline.run import scrub_decisions
 
 
 def scrub_file_stream(
@@ -40,8 +39,9 @@ def scrub_file_stream(
 ) -> DataFrame:
     """Streaming DataFrame of scrub decisions over a growing parquet dir.
 
-    Column pruning applies to streaming scans exactly as to batch ones:
-    only caption-side columns are read; image bytes never enter the stream.
+    The stream is ``scrub_decisions`` over a file-source stream, so the two
+    share one schema and one column-pruned scan: only caption-side columns
+    are read; image bytes never enter the stream.
     """
     reader = spark.readStream
     if schema is not None:
@@ -51,17 +51,8 @@ def scrub_file_stream(
         reader = reader.schema(static.schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-    pruned = src.select("image_id", "phash_prefix", "caption")
-    # Stateless projections compose identically under streaming, so the
-    # optional toxicity stage (score + mask + keep-gate) is the exact batch
-    # code path — schemas stay in lockstep with scrub_decisions.
-    scrubbed = apply_toxicity(with_scrub(pruned, cfg=cfg), toxicity)
-    extra = [] if toxicity is None else list(TOXICITY_COLS)
-    # Same projection as the batch decisions table (scrub_decisions) —
-    # consumers written against one schema must work on both.
-    return scrubbed.withColumn("n_entities", F.size("entities")).select(
-        *DECISION_COLS, "scrubbed", "scrubbed_simple", *extra
+    return scrub_decisions(
+        reader.parquet(input_dir), cfg=cfg, toxicity=toxicity
     )
 
 

@@ -430,6 +430,7 @@ def test_scrub_image_metadata_spark(spark):
         ("png_row", bytearray(png_tagged), "png"),
         ("bmp_row", bytearray(b"BM fake"), "bmp"),
         ("corrupt", bytearray(b"\xff\xd8\xff"), "jpeg"),
+        ("null_bytes", None, "jpeg"),
     ]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
     out = {r["image_id"]: r for r in scrub_image_metadata(df).collect()}
@@ -447,6 +448,10 @@ def test_scrub_image_metadata_spark(spark):
     assert out["bmp_row"]["flag"] == "unsupported_fmt"
     assert out["corrupt"]["flag"] == "corrupt"
     assert bytes(out["corrupt"]["bytes"]) == b"\xff\xd8\xff"
+    # a NULL payload is an empty stream: corrupt, not a dead stage
+    assert out["null_bytes"]["flag"] == "corrupt"
+    assert bytes(out["null_bytes"]["bytes"]) == b""
+    assert out["null_bytes"]["had_gps"] is None
 
 
 def test_with_metadata_scrub_in_place(spark):
@@ -455,7 +460,10 @@ def test_with_metadata_scrub_in_place(spark):
     jp, jx = _tagged_jpeg()
     df = spark.createDataFrame(
         [("a", bytearray(jx), "jpeg", "a cat", 7),
-         ("b", bytearray(jp), "jpeg", "a dog", 8)],
+         ("b", bytearray(jp), "jpeg", "a dog", 8),
+         ("bmp", bytearray(b"BM fake"), "bmp", "a bird", 9),
+         ("trunc", bytearray(jx[:len(jx) // 2]), "jpeg", "a fox", 10),
+         ("null", None, "jpeg", "an owl", 11)],
         "image_id string, bytes binary, fmt string, caption string, "
         "phash long",
     )
@@ -468,6 +476,23 @@ def test_with_metadata_scrub_in_place(spark):
         decode_jpeg(bytes(out["a"]["bytes"])), decode_jpeg(jp)
     )
     assert bytes(out["b"]["bytes"]) == jp and not out["b"]["meta_had_gps"]
+    assert out["b"]["meta_flag"] == "ok"
+    # unknown formats pass through with an empty report
+    bmp = out["bmp"]
+    assert bytes(bmp["bytes"]) == b"BM fake"
+    assert (bmp["meta_had_gps"], bmp["meta_removed"], bmp["meta_flag"]) == (
+        False, "", "unsupported_fmt")
+    # an undecodable stream keeps its original bytes
+    trunc = out["trunc"]
+    assert bytes(trunc["bytes"]) == jx[:len(jx) // 2]
+    assert (trunc["meta_had_gps"], trunc["meta_removed"],
+            trunc["meta_flag"]) == (None, None, "corrupt")
+    assert trunc["caption"] == "a fox"
+    # a NULL payload scrubs as an empty stream
+    null = out["null"]
+    assert bytes(null["bytes"]) == b""
+    assert (null["meta_had_gps"], null["meta_removed"], null["meta_flag"]) == (
+        None, None, "corrupt")
 
 
 def test_pipeline_materialize_scrubs_metadata(spark, tmp_root):

@@ -291,34 +291,28 @@ def test_resume_after_crash(spark, tmp_root, fixture_tables):
     assert dupes == 0
 
 
-def test_resume_via_anti_join_path(spark, tmp_root, fixture_tables):
-    """The at-scale todo computation: anti_join_min_parts=0 forces the
-    LEFT ANTI form on resume (committed parts as a broadcast DataFrame);
-    coverage and zero-dup guarantees must be identical to the driver-list
-    fast path, with prefixes >> prefixes_per_commit."""
+def test_resume_decisions_many_small_groups(spark, tmp_root, fixture_tables):
+    """Decisions-mode crash -> resume with prefixes >> prefixes_per_commit:
+    the resumed run skips exactly the committed parts and covers the rest
+    with no duplicates."""
     from pii_redactor_spark.pipeline.run import todo_prefixes
 
     images_path, _ = fixture_tables
-    out = f"{tmp_root}/out_antijoin"
+    out = f"{tmp_root}/out_resume_small_groups"
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(
             spark, images_path, out, prefixes_per_commit=5,
             fail_after_groups=3, materialize_bytes=False,
-            anti_join_min_parts=0,
         )
     src = spark.read.parquet(images_path)
-    todo_anti, done_anti = todo_prefixes(spark, src, f"{out}/data",
-                                         anti_join_min_parts=0)
-    todo_fast, done_fast = todo_prefixes(spark, src, f"{out}/data",
-                                         anti_join_min_parts=10**9)
-    assert (todo_anti, done_anti) == (todo_fast, done_fast)
-    assert done_anti == 15 and len(todo_anti) > 0
+    todo, done = todo_prefixes(src, f"{out}/data")
+    assert done == 15 and len(todo) > 0
     summary = run_pipeline(
         spark, images_path, out, prefixes_per_commit=5,
-        materialize_bytes=False, anti_join_min_parts=0,
+        materialize_bytes=False,
     )
     assert summary["resumed_skipped"] == 15
-    assert summary["prefixes"] == 15 + len(todo_anti)
+    assert summary["prefixes"] == 15 + len(todo)
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == N_ROWS
     assert data.groupBy("image_id").count().where(
@@ -387,7 +381,7 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_root, fixture_tables):
     """Iceberg-analog snapshot ops on the decisions store: the snapshots
     metadata view, as-of-snapshot partition-pruned reads, and rollback +
     resume (rolled-back partitions leave the committed set and get
-    recomputed by the LEFT-ANTI todo on the next run)."""
+    recomputed by the resume todo on the next run)."""
     import contextlib
     import io
 

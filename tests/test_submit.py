@@ -123,38 +123,6 @@ def test_submit_decisions_with_toxicity(spark, small_images, pyfiles_zip,
     assert agg["hits"] > 0 and agg["kept_flagged"] == 0
 
 
-def test_committed_pyfiles_zip_is_fresh():
-    """The checked-in dist/ zip must byte-match the working tree: a stale
-    artifact means spark-submit ships code that silently diverges from the
-    tested package (this happened twice in round 3 — hence the pin)."""
-    import pathlib
-    import zipfile
-
-    zpath = pathlib.Path(REPO) / "dist" / "pii_redactor_spark.zip"
-    assert zpath.exists(), "dist/pii_redactor_spark.zip missing — run tools/make_pyfiles.py"
-    with zipfile.ZipFile(zpath) as z:
-        names = set(z.namelist())
-        stale = [
-            n for n in names
-            if n.endswith(".py")
-            and (pathlib.Path(REPO) / n).exists()
-            and z.read(n) != (pathlib.Path(REPO) / n).read_bytes()
-        ]
-        tree = {
-            str(p.relative_to(REPO))
-            for p in (pathlib.Path(REPO) / "pii_redactor_spark").rglob("*.py")
-            if "__pycache__" not in p.parts
-        }
-        missing = sorted(tree - names)
-        orphans = sorted(
-            n for n in names
-            if n.endswith(".py") and not (pathlib.Path(REPO) / n).exists()
-        )
-    assert not stale, f"stale in zip (rerun tools/make_pyfiles.py): {stale}"
-    assert not missing, f"missing from zip: {missing}"
-    assert not orphans, f"deleted files still in zip: {orphans}"
-
-
 def test_table_pins_resolve_from_pyfiles_zip(tmp_path):
     """Round-4 review: the shared-table pin file must ship in the
     --py-files zip AND load through importlib.resources — a plain
