@@ -14,15 +14,27 @@ mask rather than ``[NAME_REDACTED]``.
 
 from __future__ import annotations
 
+import re
+
+from .detect import AT, DIG, required_guards
 from .patterns import COMPILED_CLASSIFY, ENGLISH_NAME_RE, HEBREW_NAME_RE
+
+# Exact guard: every classify pattern but EMAIL needs a \d and EMAIL needs a
+# literal '@', so a span with neither goes straight to the name fallbacks.
+assert all(
+    required_guards(pat) & (AT if ptype == "EMAIL" else DIG)
+    for ptype, pats in COMPILED_CLASSIFY for pat in pats
+)
+_MAY_MATCH_BANK = re.compile(r"[\d@]").search
 
 
 def classify_entity(text: str) -> str:
     """Classify a detected PII span's type.  Reference: inference.py:188-213."""
-    for ptype, pats in COMPILED_CLASSIFY:
-        for pat in pats:
-            if pat.search(text):
-                return ptype
+    if _MAY_MATCH_BANK(text):
+        for ptype, pats in COMPILED_CLASSIFY:
+            for pat in pats:
+                if pat.search(text):
+                    return ptype
 
     stripped = text.strip()
     if HEBREW_NAME_RE.match(stripped):

@@ -17,6 +17,10 @@ pandas UDF.  Consequences at scale:
 * Unlike the reference's ``redact_with_info`` which runs inference twice
   (inference.py:420-421), everything is computed once and emitted as one
   struct.
+* Each stage runs over the whole batch: langid and quality score one
+  shared codepoint array (``core.quality.flat_codes``), and detection is
+  one ``core.detect.detect_batch`` call in which each regex bank scans the
+  batch's guarded captions once.  Only classify and splice run per row.
 """
 
 from __future__ import annotations
@@ -30,11 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..core.classify import classify_entity
-from ..core.detect import (
-    DEFAULT_CONFIDENCE_THRESHOLD,
-    detect_spans,
-    guard_flags_batch,
-)
+from ..core.detect import DEFAULT_CONFIDENCE_THRESHOLD, detect_batch
 from ..core.langid import classify_batch
 from ..core.patterns import DEFAULT_MASK
 from ..core.quality import (
@@ -108,14 +108,13 @@ def scrub_batch(
     flat = flat_codes(texts)
     langs, confs = classify_batch(texts, flat)
     flags, bpc, metrics = quality_flags_batch(texts, cfg.quality, flat)
-    gflags = guard_flags_batch(len(texts), *flat)
+    spans_col = detect_batch(texts, cfg.confidence_threshold, flat)
 
     entities_col: list[list[tuple]] = []
     scrubbed_col: list[str] = []
     simple_col: list[str] = []
     has_pii_col: list[bool] = []
-    for text, gf in zip(texts, gflags):
-        spans = detect_spans(text, cfg.confidence_threshold, gf)
+    for text, spans in zip(texts, spans_col):
         ents = [
             (classify_entity(text[s:e]), text[s:e], s, e, c)
             for s, e, _, c in spans

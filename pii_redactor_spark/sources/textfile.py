@@ -8,7 +8,10 @@ loops line-by-line on one machine; here the same surface is
 
 Unlike the full scrub stage, ``process_file`` only *redacts* — no
 quality filtering, every line is emitted (inference.py:530-533) — so the
-line UDF runs just detect -> classify -> splice.
+line UDF runs just detect -> classify -> splice.  Detection runs once per
+Arrow batch, not once per line: ``core.detect.detect_batch`` scans each
+regex bank over the batch's guarded lines joined together, and only the
+lines that hold spans go on to classify and splice.
 
 Encoding: ``process_file(encoding=...)`` (inference.py:512) is honored on
 both sides.  UTF-8 uses the native text source/sink.  Any other charset
@@ -65,7 +68,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from ..core.classify import classify_entity
-from ..core.detect import detect_spans
+from ..core.detect import detect_batch
 from ..core.redact import redact_typed
 from ..operators.scrub import DEFAULT_SCRUB, ScrubConfig
 
@@ -156,13 +159,16 @@ def _raw_has_blank_line(spark: SparkSession, input_path: str) -> bool:
 
 
 def redact_lines(texts: list[str], cfg: ScrubConfig = DEFAULT_SCRUB) -> list[str]:
-    """process_file's per-line work: strip, detect, classify, splice."""
+    """process_file's per-line work on one Arrow batch: strip each line,
+    detect over the whole batch (``core.detect.detect_batch``), then
+    classify and splice the lines that hold spans."""
+    lines = [(t or "").strip() for t in texts]
     out: list[str] = []
-    for t in texts:
-        t = (t or "").strip()
-        spans = detect_spans(t, cfg.confidence_threshold)
-        typed = [(s, e, classify_entity(t[s:e])) for s, e, _k, _c in spans]
-        out.append(redact_typed(t, typed, cfg.replacement, cfg.preserve_format))
+    for t, spans in zip(lines, detect_batch(lines, cfg.confidence_threshold)):
+        if spans:
+            typed = [(s, e, classify_entity(t[s:e])) for s, e, _k, _c in spans]
+            t = redact_typed(t, typed, cfg.replacement, cfg.preserve_format)
+        out.append(t)
     return out
 
 
@@ -198,8 +204,15 @@ def scrub_text_file(
     whitespace-only lines under every encoding; ``"error"`` (default)
     raises on them for non-UTF-8 encodings (which cannot round-trip
     them) and preserves them exactly under UTF-8 (module docstring).
+    Any other ``blank_lines`` value raises ``ValueError`` before any work.
     Returns the written DataFrame.
     """
+    if blank_lines not in ("error", "drop"):
+        # a typo must not skip the blank-line check: the CSV path would
+        # then drop blank lines silently
+        raise ValueError(
+            f"blank_lines must be 'error' or 'drop', not {blank_lines!r}"
+        )
     lines = read_text_lines(spark, input_path, encoding)
     if _is_utf8(encoding) and blank_lines == "drop":
         # uniform semantics across encodings: "drop" omits blank/

@@ -8,10 +8,18 @@ optimization).
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from pii_redactor_spark.core.detect import detect_spans
+from pii_redactor_spark.core import gazetteers as gz
+from pii_redactor_spark.core.detect import (
+    _DATE_HE_CONFIDENCE,
+    _GAZ_CONFIDENCE,
+    _STRUCTURED_CONFIDENCE,
+    detect_batch,
+    detect_spans,
+)
+from pii_redactor_spark.core.patterns import COMPILED_DETECT, HEBREW_MONTHS
 from pii_redactor_spark.core.langid import classify_batch
 from pii_redactor_spark.core.quality import DEFAULT_QUALITY, quality_flags_batch
 from pii_redactor_spark.core.redact import redact_simple, redact_typed
@@ -163,3 +171,78 @@ def test_engine_matches_independent_oracle_walk(text):
     assert r.scrubbed_simple == _oracle_scrubbed_simple(text, spans), text
     assert r.lang == _oracle_langid(text, stop_re, marker_re), text
     assert r.keep == _oracle_keep(text, lm), text
+
+
+# --- batch kernel vs a plain per-text scan -----------------------------------
+# detect_batch scans guarded joins of many texts with rewritten fast-scan
+# patterns; the reference below scans each text alone with every documented
+# bank, unguarded, and resolves overlaps longest-span-wins.
+_DOCUMENTED_BANKS = [
+    (t, p, _GAZ_CONFIDENCE[t]) for t, p in gz.GAZETTEER_PATTERNS
+] + [
+    (t, p, _STRUCTURED_CONFIDENCE.get(p.pattern, _DATE_HE_CONFIDENCE))
+    for t, p in COMPILED_DETECT
+]
+
+
+def _reference_spans(text, thr):
+    cands = [
+        (m.start(), m.end(), t, c)
+        for t, p, c in _DOCUMENTED_BANKS if c >= thr
+        for m in p.finditer(text)
+    ]
+    kept = []
+    # stable sort: equal lengths keep bank-then-position discovery order
+    for s, e, t, c in sorted(cands, key=lambda x: x[0] - x[1]):
+        if all(e <= ks or s >= ke for ks, ke, _t, _c in kept):
+            kept.append((s, e, t, c))
+    return sorted(kept)
+
+
+_GAZ_WORDS = sorted({
+    w
+    for words in (
+        gz.HE_FIRST_NAMES, gz.HE_SURNAMES, gz.HE_CITIES, gz.HE_STREETS,
+        HEBREW_MONTHS, gz.HE_FIRST_NAMES_DETECT_EXTRA,
+        gz.LATIN_FIRST_DETECT_EXTRA, gz.LATIN_LAST_DETECT_EXTRA,
+        *(v for lang in gz.LATIN_NAMES.values() for v in lang.values()),
+    )
+    for w in words
+})
+# digits come in runs of one script at a time (ASCII, Arabic-Indic, or the
+# astral mathematical digits), so some texts hold no ASCII digit at all
+_digit_run = st.sampled_from([
+    "0123456789", "".join(map(chr, range(0x660, 0x66A))),
+    "".join(map(chr, range(0x1D7CE, 0x1D7D8))),
+]).flatmap(lambda ds: st.text(alphabet=ds + "-", min_size=1, max_size=12))
+_kernel_text = st.lists(
+    st.one_of(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E,
+                      blacklist_characters="0123456789"),
+        st.sampled_from("\x00\n\t@-./()+*_ "),
+        st.characters(min_codepoint=0x5D0, max_codepoint=0x5EA),
+        st.sampled_from(_GAZ_WORDS),
+        _digit_run,
+        _pii_fragments,
+    ),
+    max_size=30,
+).map("".join)
+
+
+@given(
+    st.one_of(
+        st.just([]),
+        st.lists(_kernel_text, min_size=1, max_size=1),
+        st.lists(_kernel_text, min_size=2, max_size=16),
+    ),
+    st.sampled_from([0.0, 0.5, 0.7, 0.8, 0.9, 0.96, 1.0]),
+)
+@example([
+    "\U0001D7CF\U0001D7D0\U0001D7D1\U0001D7D2\U0001D7D3\U0001D7D4"
+    "\U0001D7D5\U0001D7D6\U0001D7D7",                 # astral digits only
+    "id \u0663\u0663\u0663-\u0663\u0663-\u0663\u0663\u0663\u0663",  # Arabic-Indic only
+    "a\x00123-45-6789\x00John Smith",
+], 0.5)
+@settings(max_examples=400, deadline=None)
+def test_detect_batch_equals_unguarded_per_text_scan(texts, thr):
+    assert detect_batch(texts, thr) == [_reference_spans(t, thr) for t in texts]

@@ -169,10 +169,48 @@ def test_encoding_blank_lines_error_and_drop(spark, tmp_root):
     assert _concat_parts(out8) == want8
 
 
+def test_blank_lines_rejects_unknown_value(spark, tmp_root):
+    """A typo in ``blank_lines`` fails up front instead of skipping the
+    blank-line check (the latin-1 CSV path would drop the blank line)."""
+    import pytest
+
+    inp = f"{tmp_root}/latin_typo_in.txt"
+    with open(inp, "wb") as f:
+        f.write("première ligne\n\ndernière ligne\n".encode("latin-1"))
+    for bad in ("keep", "Drop", ""):
+        with pytest.raises(ValueError, match="blank_lines"):
+            scrub_text_file(spark, inp, f"{tmp_root}/latin_typo_out",
+                            encoding="latin-1", blank_lines=bad)
+
+
 def test_redact_lines_strips_like_reference():
     """process_file calls redact(line.strip()) — inference.py:530-533."""
     got = redact_lines(["  a@b.co  ", "\tno pii here\t", ""])
     assert got == ["[EMAIL_REDACTED]", "no pii here", ""]
+
+
+def test_redact_lines_no_cross_line_match():
+    """The batch kernel scans many lines joined together.  No match may
+    cross from one line into the next, and each line's ends must act as
+    text ends for ``\\b``.  Joined by a space, a newline or nothing, some
+    pair below would come out differently."""
+    lines = [
+        "call (555)", "123-4567",          # (555) 123-4567 across lines
+        "My name is John", "Smith here",   # John Smith across lines
+        "abc", "123456789",                # abc123456789 has no \b
+        "05", "0-1234567",                 # 050-1234567 across lines
+        "id\x00123-45-6789",               # a NUL inside one line
+    ]
+    assert redact_lines(lines) == [
+        "call (555)", "123-4567",
+        "My name is John", "Smith here",
+        "abc", "[ID_REDACTED]",
+        "05", "0-1234567",
+        "id\x00[ID_REDACTED]",
+    ]
+    assert redact_lines(["call (555) 123-4567", "John Smith"]) == [
+        "call [REDACTED]", "[NAME_REDACTED]",
+    ]
 
 
 def test_textfile_config_plumbs_through(spark, tmp_root):
