@@ -8,7 +8,9 @@ The reference's ``BatchProcessor.process_file``
         jobs/scrub_textfile_job.py --input in.txt --output out_dir \
         [--replacement TOKEN] [--no-preserve-format] [--unordered] \
         [--confidence-threshold 0.5] [--encoding latin-1] \
-        [--output-files N] [--drop-blank-lines]
+        [--drop-blank-lines]
+
+One part file per input split (``spark.sql.files.maxPartitionBytes``).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--unordered", action="store_true")
     p.add_argument("--confidence-threshold", type=float, default=0.5)
     p.add_argument("--encoding", default="UTF-8")
-    p.add_argument("--output-files", type=int, default=None)
     p.add_argument("--drop-blank-lines", action="store_true")
     args = p.parse_args(argv)
 
@@ -47,7 +48,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     scrub_text_file(
         spark, args.input, args.output, cfg, ordered=not args.unordered,
-        encoding=args.encoding, output_files=args.output_files,
+        encoding=args.encoding,
         blank_lines="drop" if args.drop_blank_lines else "error",
     )
     spark.stop()

@@ -78,7 +78,8 @@ _XMP_PREFIX = b"http://ns.adobe.com/xap/1.0/\x00"
 class ExifTag:
     """One IFD entry: ``tag`` id, TIFF ``type``, decoded ``values``.
 
-    values: str for ASCII (no trailing NUL), bytes for BYTE/UNDEFINED,
+    values: str for ASCII (no trailing NUL; each byte one latin-1 char,
+    so any byte round-trips), bytes for BYTE/UNDEFINED,
     list[int] for SHORT/LONG/SLONG, list[(num, den)] for rationals.
     """
 
@@ -102,7 +103,7 @@ class ExifTag:
 
 def _decode_values(type_: int, count: int, raw: bytes, endian: str):
     if type_ == TYPE_ASCII:
-        return raw.split(b"\x00", 1)[0].decode("ascii", "replace")
+        return raw.split(b"\x00", 1)[0].decode("latin-1")
     if type_ in (TYPE_BYTE, TYPE_UNDEFINED):
         return raw[:count]
     if type_ == TYPE_SHORT:
@@ -132,7 +133,7 @@ def _encode_values(tag: ExifTag) -> tuple[int, bytes]:
     """-> (count, payload bytes), little-endian canonical."""
     t, v = tag.type, tag.values
     if t == TYPE_ASCII:
-        data = v.encode("ascii") + b"\x00"
+        data = v.encode("latin-1") + b"\x00"
         return len(data), data
     if t in (TYPE_BYTE, TYPE_UNDEFINED):
         return len(v), bytes(v)
@@ -189,6 +190,18 @@ def _parse_ifd(data: bytes, off: int, endian: str):
     return tags, nxt
 
 
+def _first_int(tag: ExifTag | None) -> int | None:
+    """First value of a pointer, thumbnail or orientation tag (None when
+    absent or empty).  A crafted type (ASCII, RATIONAL, FLOAT) or a
+    negative value is a malformed stream: ValueError, not TypeError."""
+    if tag is None or not tag.values:
+        return None
+    v = tag.values[0]
+    if not isinstance(v, int) or v < 0:
+        raise ValueError(f"exif: tag 0x{tag.tag:04X} needs an int >= 0")
+    return v
+
+
 def parse_tiff(data: bytes) -> dict:
     """TIFF stream -> {'ifd0': {...}, 'exif': {...}, 'gps': {...},
     'ifd1': {...}, 'thumbnail': bytes | None}.  Handles both byte
@@ -209,15 +222,14 @@ def parse_tiff(data: bytes) -> dict:
            "thumbnail": None}
     out["ifd0"], next_off = _parse_ifd(data, ifd0_off, endian)
     for key, ptr_tag in (("exif", TAG_EXIF_IFD), ("gps", TAG_GPS_IFD)):
-        ptr = out["ifd0"].get(ptr_tag)
-        if ptr is not None and ptr.values:
-            out[key], _ = _parse_ifd(data, ptr.values[0], endian)
+        ptr = _first_int(out["ifd0"].get(ptr_tag))
+        if ptr is not None:
+            out[key], _ = _parse_ifd(data, ptr, endian)
     if next_off:
         out["ifd1"], _ = _parse_ifd(data, next_off, endian)
-        jif = out["ifd1"].get(TAG_JPEG_IF)
-        jlen = out["ifd1"].get(TAG_JPEG_IF_LEN)
-        if jif is not None and jlen is not None:
-            start, length = jif.values[0], jlen.values[0]
+        start = _first_int(out["ifd1"].get(TAG_JPEG_IF))
+        length = _first_int(out["ifd1"].get(TAG_JPEG_IF_LEN))
+        if start is not None and length is not None:
             if start + length > len(data):
                 raise ValueError("exif: thumbnail out of bounds")
             out["thumbnail"] = data[start : start + length]
@@ -358,8 +370,8 @@ def orientation_of(jpeg: bytes) -> int:
     parsed = extract_exif(jpeg)
     if not parsed:
         return 1
-    tag = parsed["ifd0"].get(TAG_ORIENTATION)
-    return int(tag.values[0]) if tag and tag.values else 1
+    o = _first_int(parsed["ifd0"].get(TAG_ORIENTATION))
+    return 1 if o is None else o
 
 
 def _fresh_report() -> dict:
@@ -390,9 +402,9 @@ def _scrub_tiff_payload(
     if parsed["ifd1"] or parsed["thumbnail"] is not None:
         report["had_thumbnail"] = True
         report["removed"].append("Thumbnail")
-    o = parsed["ifd0"].get(TAG_ORIENTATION)
-    if o and o.values:
-        report["orientation"] = int(o.values[0])
+    o = _first_int(parsed["ifd0"].get(TAG_ORIENTATION))
+    if o is not None:
+        report["orientation"] = o
     drop0 = dict(PII_TAGS_IFD0)
     drop1 = dict(PII_TAGS_EXIF)
     if strip_device:
@@ -428,8 +440,10 @@ def scrub_exif(
     and — under ``drop_xmp`` — whole XMP APP1 segments (XMP can carry
     GPS and creator identity in XML, which this module does not parse).
     Orientation, Make/Model (unless ``strip_device``), and timestamps
-    (unless ``strip_timestamps``) survive.  The compressed image data
-    is copied verbatim: decoded pixels are byte-identical.
+    (unless ``strip_timestamps``) survive.  An Exif APP1 whose rebuild
+    would not fit a segment is dropped whole (``removed`` gets
+    ``Exif``).  The compressed image data is copied verbatim: decoded
+    pixels are byte-identical.
 
     -> (scrubbed bytes, report dict).
     """
@@ -445,8 +459,13 @@ def scrub_exif(
             )
             out += jpeg[consumed:s]
             payload = _EXIF_PREFIX + tiff
-            out += struct.pack(">BBH", 0xFF, 0xE1, len(payload) + 2)
-            out += payload
+            if len(payload) + 2 > 0xFFFF:
+                # the canonical rebuild pads odd-length values, so a
+                # near-limit APP1 can outgrow its length field: drop it
+                report["removed"].append("Exif")
+            else:
+                out += struct.pack(">BBH", 0xFF, 0xE1, len(payload) + 2)
+                out += payload
             consumed = e
         elif marker == 0xE1 and drop_xmp and jpeg[s + 4 : e].startswith(
             _XMP_PREFIX

@@ -191,61 +191,6 @@ def with_scrub(
     ).drop("_scrub")
 
 
-# Partition-count probe cache: file count is a wrong proxy in both
-# directions (64 tiny files pack into ~2 partitions; one huge splittable
-# file yields many), so the truthful probe stays rdd.getNumPartitions() —
-# but its RDD conversion is paid once per distinct input, not per call.
-# The key carries everything the split computation depends on: the file
-# list, EVERY file's (size, mtime_ns) — so any in-place rewrite re-probes,
-# including content rewrites that leave directory entries untouched — and
-# the session confs that change packing (maxPartitionBytes /
-# openCostInBytes / defaultParallelism).  Local stats are ~1 µs each, so
-# statting every file is cheap up to thousands of files; beyond
-# _NPART_STAT_MAX_FILES the input is not cached at all (a stale-serving
-# heuristic like directory mtimes misses in-place rewrites — correctness
-# over cache hits).  Non-local URIs (no stat) are likewise not cached.
-_NPART_CACHE: dict[tuple, int] = {}
-_NPART_STAT_MAX_FILES = 4096
-
-
-def _npart_cache_key(df: DataFrame, target: int) -> tuple | None:
-    import os
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return None
-    if not files or len(files) > _NPART_STAT_MAX_FILES:
-        return None
-
-    def local(f: str) -> str:
-        return f[len("file:"):] if f.startswith("file:") else f
-
-    try:
-        stats = tuple(
-            (st.st_size, st.st_mtime_ns)
-            for st in (os.stat(local(f)) for f in files)
-        )
-    except OSError:
-        return None
-    conf = df.sparkSession.conf
-    # digest the (large) identity tuple: the cache key is 64 chars, not a
-    # 4096-entry file list, so superseded keys left behind by in-place
-    # rewrites cost bytes, not megabytes (the >256-entry clear bounds the
-    # count as before)
-    import hashlib
-
-    ident = repr((
-        files,
-        stats,
-        target,
-        conf.get("spark.sql.files.maxPartitionBytes", "0"),
-        conf.get("spark.sql.files.openCostInBytes", "0"),
-        df.sparkSession.sparkContext.defaultParallelism,
-    ))
-    return (hashlib.sha256(ident.encode()).hexdigest(),)
-
-
 def parallelize_for_udf(df: DataFrame, min_factor: int = 2) -> DataFrame:
     """Ensure the CPU-bound UDF stage has >= cores*min_factor partitions.
 
@@ -254,14 +199,6 @@ def parallelize_for_udf(df: DataFrame, min_factor: int = 2) -> DataFrame:
     serialize the whole UDF stage — one round-robin repartition (cheap: the
     table is small precisely when this fires) restores parallelism."""
     target = df.sparkSession.sparkContext.defaultParallelism * min_factor
-    key = _npart_cache_key(df, target)
-    n = _NPART_CACHE.get(key) if key else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if key:
-            if len(_NPART_CACHE) > 256:
-                _NPART_CACHE.clear()
-            _NPART_CACHE[key] = n
-    if n < target:
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

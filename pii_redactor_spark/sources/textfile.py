@@ -36,29 +36,29 @@ blank-line probe assume single-byte newline framing, and accepting such
 a codec would corrupt lines silently at split boundaries
 (``_require_ascii_compatible``).
 
-Ordering (``ordered=True``, the parity mode): output lines are globally
-ordered by ``(input file name, read-order id)`` and written through a
-RANGE-partitioned sink — partition ``i`` of ``repartitionByRange`` holds
-an ascending key range and becomes part file ``part-0000i``, so
-concatenating the part files in name order reproduces the input order
-byte-for-byte while the write itself stays fully parallel (the round-2
-``coalesce(1)`` single-task sink is gone).
-
-The per-file order guarantee rests on how Spark packs read splits: all
-non-tail splits of a file are exactly ``maxPartitionBytes`` and the
-planner's sort-by-length-descending is stable (TimSort), so within one
-file splits keep offset order (equal lengths preserve listing order; the
-smaller tail sorts after).  ``monotonically_increasing_id`` is monotone
-within each split, hence ``(file, id)`` is monotone in file offset.
-Across MULTIPLE input files (a glob), "input order" is defined as files
-in lexicographic name order — callers needing listing order should pass
-files individually.  At 100 TB a caller passes ``ordered=False``: no
-range shuffle at all, and line order across part files is not meaningful
-(the usual contract for distributed text corpora).
+Ordering (``ordered=True``, the parity mode): the redaction is a narrow
+projection of the scan, so part file ``part-0000i`` is scan partition
+``i`` and the part files concatenated in name order are the input, in
+order.  No shuffle, sort or sort key; the part count follows Spark's
+split confs (``spark.sql.files.maxPartitionBytes``).  Within one file the
+scan keeps offset order: all non-tail splits are exactly
+``maxPartitionBytes`` and the planner's size-descending sort is stable
+(TimSort), so equal splits keep listing order and the smaller tail sorts
+after.  Across files that packing interleaves, so for a glob "input
+order" is files in lexicographic name order (the sorted ``inputFiles()``
+URIs): the ordered path unions one read per file in that order, and
+``Union`` keeps its children's partition order (``_literal_path`` makes
+each URI a path that reads back exactly that file).  Callers needing
+listing order pass files individually.  At 100 TB a caller passes
+``ordered=False``: one read of the whole glob, line order across part
+files not meaningful (the usual contract for distributed text corpora).
 """
 
 from __future__ import annotations
 
+import functools
+import re
+import urllib.parse
 from collections.abc import Iterator
 
 import pandas as pd
@@ -183,6 +183,13 @@ def make_redact_line_udf(cfg: ScrubConfig = DEFAULT_SCRUB):
     return _impl.asNondeterministic()
 
 
+def _literal_path(uri: str) -> str:
+    """An ``inputFiles()`` URI as a path that reads back exactly that file:
+    percent-decoded (else ``%20`` names a different file) with glob
+    metacharacters escaped (else ``[`` or ``{`` in a name globs)."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", urllib.parse.unquote(uri))
+
+
 def scrub_text_file(
     spark: SparkSession,
     input_path: str,
@@ -190,17 +197,16 @@ def scrub_text_file(
     cfg: ScrubConfig = DEFAULT_SCRUB,
     ordered: bool = True,
     encoding: str = "UTF-8",
-    output_files: int | None = None,
     blank_lines: str = "error",
 ) -> DataFrame:
     """Read ``input_path`` (newline-delimited, ``encoding``), redact, write
     ``output_path`` (a Spark text output directory, same ``encoding``).
 
     ``ordered=True``: part files concatenated in name order are byte-equal
-    to redacting the input in order (see module docstring for the
-    multi-file contract); the write is range-partitioned across
-    ``output_files`` (default: the session's default parallelism) part
-    files, not a single task.  ``blank_lines``: ``"drop"`` omits blank/
+    to redacting the input in order, files taken in lexicographic name
+    order (module docstring); one part file per scan partition, no
+    shuffle.  ``ordered=False`` reads a glob in one scan, in no defined
+    order across files.  ``blank_lines``: ``"drop"`` omits blank/
     whitespace-only lines under every encoding; ``"error"`` (default)
     raises on them for non-UTF-8 encodings (which cannot round-trip
     them) and preserves them exactly under UTF-8 (module docstring).
@@ -214,6 +220,14 @@ def scrub_text_file(
             f"blank_lines must be 'error' or 'drop', not {blank_lines!r}"
         )
     lines = read_text_lines(spark, input_path, encoding)
+    if ordered:
+        # one read per file, unioned in name order (module docstring)
+        files = sorted(lines.inputFiles())
+        if len(files) > 1:
+            lines = functools.reduce(DataFrame.union, (
+                read_text_lines(spark, _literal_path(f), encoding)
+                for f in files
+            ))
     if _is_utf8(encoding) and blank_lines == "drop":
         # uniform semantics across encodings: "drop" omits blank/
         # whitespace-only lines in UTF-8 mode too (the CSV charset path
@@ -235,26 +249,7 @@ def scrub_text_file(
                 "to omit them, or re-encode the input as UTF-8"
             )
     redact = make_redact_line_udf(cfg)
-    keyed = lines.select(
-        F.input_file_name().alias("_file"),
-        F.monotonically_increasing_id().alias("_line"),
-        "value",
-    )
-    if ordered:
-        # Shuffle FIRST, redact AFTER: repartitionByRange samples its child
-        # to pick range boundaries, so putting the UDF below the shuffle
-        # would evaluate the whole redaction twice (once for the sampling
-        # pass, once for the real exchange — measured 2x).  Ordering is
-        # preserved because the UDF is applied per-partition after the
-        # range sort, as a narrow projection.
-        n_out = output_files or spark.sparkContext.defaultParallelism
-        out = (
-            keyed.repartitionByRange(n_out, "_file", "_line")
-            .sortWithinPartitions("_file", "_line")
-            .select(redact(F.col("value")).alias("value"))
-        )
-    else:
-        out = keyed.select(redact(F.col("value")).alias("value"))
+    out = lines.select(redact(F.col("value")).alias("value"))
     if _is_utf8(encoding):
         out.write.mode("overwrite").text(output_path)
     else:

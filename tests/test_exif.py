@@ -454,6 +454,104 @@ def test_scrub_image_metadata_spark(spark):
     assert out["null_bytes"]["had_gps"] is None
 
 
+def _raw_exif_jpeg(tiff: bytes) -> tuple[bytes, bytes]:
+    """(plain JPEG, the same JPEG with ``tiff`` spliced in verbatim as its
+    Exif APP1) — no rebuild, so crafted structure survives."""
+    jp = encode_jpeg(_px())
+    payload = b"Exif\x00\x00" + tiff
+    app1 = struct.pack(">BBH", 0xFF, 0xE1, len(payload) + 2) + payload
+    return jp, jp[:2] + app1 + jp[2:]
+
+
+def _retyped_pointer_tiff(tag: int, typ: int) -> bytes:
+    """IFD0 holding only a sub-IFD pointer declared ASCII (inline "ab")
+    or RATIONAL (one out-of-line value at offset 26)."""
+    head = struct.pack("<2sHIH", b"II", 42, 8, 1)
+    if typ == E.TYPE_ASCII:
+        return head + struct.pack("<HHI4sI", tag, typ, 3, b"ab", 0)
+    return head + struct.pack("<HHIII", tag, typ, 1, 26, 0) + struct.pack(
+        "<II", 8, 1
+    )
+
+
+def _oversized_app1_tiff() -> bytes:
+    """A valid TIFF whose APP1 length field reads 64,622: 3,796 ASCII
+    values of 5 bytes packed without the word padding the canonical
+    rebuild adds, a 26-byte filler value and a GPS IFD.  Rebuilt, the
+    APP1 outgrows 0xFFFF."""
+    values = [b"abcd\x00"] * 3796 + [b"x" * 25 + b"\x00"]
+    ifd_end = 8 + 2 + 12 * (len(values) + 1) + 4
+    gps_off = ifd_end + sum(map(len, values))
+    tiff = bytearray(struct.pack("<2sHIH", b"II", 42, 8, len(values) + 1))
+    off = ifd_end
+    for i, v in enumerate(values):
+        tiff += struct.pack("<HHII", 0x2000 + i, E.TYPE_ASCII, len(v), off)
+        off += len(v)
+    tiff += struct.pack("<HHII", E.TAG_GPS_IFD, E.TYPE_LONG, 1, gps_off)
+    tiff += struct.pack("<I", 0) + b"".join(values)
+    # GPS IFD: GPSVersionID 2.3.0.0
+    tiff += struct.pack("<HHHI4sI", 1, 0, E.TYPE_BYTE, 4, b"\x02\x03", 0)
+    assert len(tiff) + 8 == 64_622
+    return bytes(tiff)
+
+
+@pytest.mark.parametrize("row", [
+    "exif_pointer_ascii", "gps_pointer_rational", "app1_64622_bytes",
+])
+def test_scrub_image_metadata_crafted_exif_row(spark, row):
+    """Crafted rows that used to kill the whole stage: a pointer tag typed
+    ASCII or RATIONAL (TypeError) and a 64,622-byte APP1 whose rebuild
+    needs more than 0xFFFF bytes (struct.error).  A retyped pointer is a
+    malformed stream (``corrupt``); the oversized APP1 is dropped whole,
+    GPS with it."""
+    from pii_redactor_spark.operators.vision import scrub_image_metadata
+
+    tiff = {
+        "exif_pointer_ascii": lambda: _retyped_pointer_tiff(
+            E.TAG_EXIF_IFD, E.TYPE_ASCII),
+        "gps_pointer_rational": lambda: _retyped_pointer_tiff(
+            E.TAG_GPS_IFD, E.TYPE_RATIONAL),
+        "app1_64622_bytes": _oversized_app1_tiff,
+    }[row]()
+    jp, jx = _raw_exif_jpeg(tiff)
+    df = spark.createDataFrame(
+        [(row, bytearray(jx), "jpeg")],
+        "image_id string, bytes binary, fmt string",
+    )
+    (r,) = scrub_image_metadata(df).collect()
+    if row != "app1_64622_bytes":
+        assert r["flag"] == "corrupt"
+        return
+    assert r["flag"] == "ok" and r["had_gps"]
+    assert "GPS" in r["removed"] and "Exif" in r["removed"]
+    clean = bytes(r["bytes"])
+    assert E.extract_exif(clean) is None
+    assert np.array_equal(decode_jpeg(clean), decode_jpeg(jp))
+
+
+def test_scrub_image_metadata_latin1_tag_beside_gps(spark):
+    """A Latin-1 byte in a kept ASCII tag must not turn the row corrupt
+    (which keeps the original bytes, GPS included): ASCII values
+    round-trip byte for byte and the GPS IFD goes."""
+    from pii_redactor_spark.operators.vision import scrub_image_metadata
+
+    ifds = _full_ifds()
+    ifds["ifd0"][0x010E] = E.ExifTag(0x010E, E.TYPE_ASCII, "Caf? owner")
+    jx = E.insert_exif(encode_jpeg(_px()), ifds)
+    assert jx.count(b"Caf? owner") == 1
+    jx = jx.replace(b"Caf? owner", b"Caf\xe9 owner")
+    df = spark.createDataFrame(
+        [("latin1", bytearray(jx), "jpeg")],
+        "image_id string, bytes binary, fmt string",
+    )
+    (r,) = scrub_image_metadata(df).collect()
+    assert r["flag"] == "ok" and r["had_gps"]
+    parsed = E.extract_exif(bytes(r["bytes"]))
+    assert parsed["gps"] == {} and E.TAG_GPS_IFD not in parsed["ifd0"]
+    assert parsed["ifd0"][0x010E].values == "Caf\xe9 owner"
+    assert b"Caf\xe9 owner\x00" in bytes(r["bytes"])
+
+
 def test_with_metadata_scrub_in_place(spark):
     from pii_redactor_spark.operators.vision import with_metadata_scrub
 

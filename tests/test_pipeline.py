@@ -344,39 +344,6 @@ def test_decisions_with_plain_replacement_config(spark, fixture_tables):
         with_pii.count()
 
 
-def test_parallelize_for_udf_reprobes_after_inplace_overwrite(
-    spark, tmp_root
-):
-    """The partition-count probe cache must not serve a stale count when a
-    table is overwritten in place under the same file names (cache key
-    carries file size/mtime and the split-packing confs)."""
-    import os
-
-    from pii_redactor_spark.operators.scrub import (
-        _NPART_CACHE,
-        parallelize_for_udf,
-    )
-
-    path = os.path.join(tmp_root, "npart_cache_probe")
-    spark.range(10).coalesce(1).write.mode("overwrite").parquet(path)
-    df1 = spark.read.parquet(path)
-    _NPART_CACHE.clear()
-    parallelize_for_udf(df1)
-    assert len(_NPART_CACHE) == 1
-    (key1,) = _NPART_CACHE
-
-    # overwrite in place: bigger data, same directory
-    spark.range(200_000).selectExpr(
-        "id", "repeat('x', 64) AS pad"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    df2 = spark.read.parquet(path)
-    parallelize_for_udf(df2)
-    # a fresh probe happened: the stale key did not satisfy the lookup
-    assert len(_NPART_CACHE) == 2
-    (key2,) = [k for k in _NPART_CACHE if k != key1]
-    assert key2 != key1
-
-
 def test_snapshot_time_travel_and_rollback(spark, tmp_root, fixture_tables):
     """Iceberg-analog snapshot ops on the decisions store: the snapshots
     metadata view, as-of-snapshot partition-pruned reads, and rollback +

@@ -241,50 +241,6 @@ def test_capped_jaccard_plan_theta_free_and_guard_switches(spark, monkeypatch):
     assert "Window" in plan, plan  # the hot-shingle chain generator
 
 
-def test_ordered_text_sink_udf_above_range_exchange(spark, tmp_root):
-    """Regression pin for the double-evaluation bug: in the ordered sink
-    the redact UDF must sit ABOVE the range-partitioning exchange, so the
-    boundary-sampling pass reads raw lines instead of running the whole
-    redaction a second time."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pii_redactor_spark.sources.textfile import (
-        make_redact_line_udf,
-        read_text_lines,
-    )
-
-    inp = os.path.join(tmp_root, "plan_pin_in.txt")
-    with open(inp, "w", encoding="utf-8") as f:
-        f.write("\n".join(f"line {i}" for i in range(100)) + "\n")
-    lines = read_text_lines(spark, inp)
-    redact = make_redact_line_udf()
-    out = (
-        lines.select(
-            F.input_file_name().alias("_file"),
-            F.monotonically_increasing_id().alias("_line"),
-            "value",
-        )
-        .repartitionByRange(4, "_file", "_line")
-        .sortWithinPartitions("_file", "_line")
-        .select(redact(F.col("value")).alias("value"))
-    )
-    plan = _plan(out)
-    import re
-
-    udf = re.search(r"\((\d+)\) ArrowEvalPython", plan)
-    exchanges = [
-        int(m.group(1))
-        for m in re.finditer(r"\((\d+)\) Exchange\n(?:.*\n)*?Arguments: "
-                             r"rangepartitioning", plan)
-    ]
-    assert udf and exchanges, plan
-    # larger id = later (downstream) in formatted explain numbering: the
-    # UDF must evaluate after the range exchange, not feed it
-    assert int(udf.group(1)) > max(exchanges), plan
-
-
 def test_round4_tpch_shapes_are_hash_joins(spark):
     """The Q4/Q19/Q21-shape queries must plan as hash joins with residual
     conditions (semi/anti with non-equi residuals on the equi key) —

@@ -38,9 +38,9 @@ def _concat_parts(out_dir: str, encoding: str = "utf-8") -> str:
 
 def test_ordered_distributed_sink_multi_partition_byte_equal(spark, tmp_root):
     """Order-preserving DISTRIBUTED sink: a file large enough to split into
-    many read partitions, written through >1 range partition — the
-    name-ordered concatenation must be byte-equal to redacting in input
-    order (no coalesce(1) single-task sink)."""
+    many read partitions, one part file per split — the name-ordered
+    concatenation must be byte-equal to redacting in input order (no
+    coalesce(1) single-task sink)."""
     inp = f"{tmp_root}/big_in.txt"
     out = f"{tmp_root}/big_out"
     lines = [f"row {i:06d} mail{i}@x.co padding {'x' * (i % 37)}"
@@ -50,7 +50,7 @@ def test_ordered_distributed_sink_multi_partition_byte_equal(spark, tmp_root):
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
     try:
-        scrub_text_file(spark, inp, out, output_files=6)
+        scrub_text_file(spark, inp, out)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     parts = sorted(glob.glob(f"{out}/part-*"))
@@ -60,28 +60,36 @@ def test_ordered_distributed_sink_multi_partition_byte_equal(spark, tmp_root):
     assert _concat_parts(out) == want
 
 
-def test_ordered_multi_file_glob_lexicographic(spark, tmp_root):
-    """Multi-file input: output order is files in lexicographic name
-    order, each file's lines in offset order — including files of
-    different sizes (the split-packing case the advisor flagged)."""
+def _write_multi_file_glob(d: str) -> dict[str, list[str]]:
+    """Three files whose size order (b, c, a) differs from their name
+    order, two with glob metacharacters and a space in the name."""
     import os
 
-    d = f"{tmp_root}/multi_in"
     os.makedirs(d, exist_ok=True)
     files = {
         "a_small.txt": [f"alpha {i} a{i}@x.co" for i in range(5)],
-        "b_large.txt": [f"beta {i} b{i}@x.co extra padding here {'y' * 40}"
-                        for i in range(800)],
-        "c_mid.txt": [f"gamma {i}" for i in range(50)],
+        "b[1]large.txt": [f"beta {i} b{i}@x.co extra padding here {'y' * 40}"
+                          for i in range(800)],
+        "c_mid {x}.txt": [f"gamma {i}" for i in range(50)],
     }
     for name, lines in files.items():
         with open(os.path.join(d, name), "w", encoding="utf-8") as f:
             f.write("\n".join(lines) + "\n")
+    return files
+
+
+def test_ordered_multi_file_glob_lexicographic(spark, tmp_root):
+    """Multi-file input: output order is files in lexicographic name
+    order, each file's lines in offset order — including files of
+    different sizes (the split-packing case the advisor flagged) and
+    names that hold glob metacharacters and a space."""
+    d = f"{tmp_root}/multi_in"
+    files = _write_multi_file_glob(d)
     out = f"{tmp_root}/multi_out"
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
     try:
-        scrub_text_file(spark, d, out, output_files=4)
+        scrub_text_file(spark, d, out)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     want = "".join(
@@ -90,6 +98,33 @@ def test_ordered_multi_file_glob_lexicographic(spark, tmp_root):
         for l in files[name]
     )
     assert _concat_parts(out) == want
+
+
+def test_ordered_plan_has_no_exchange_or_sort(spark, tmp_root):
+    """The ordered path is one narrow pass: for one file and for the
+    3-file glob, the executed plan holds no Exchange and no Sort, the glob
+    is a Union of one scan per file, and one file costs one Spark job
+    (the write)."""
+    from tests.test_pipeline import _job_descriptions
+    from tests.test_plans import _plan
+
+    d = f"{tmp_root}/plan_multi_in"
+    _write_multi_file_glob(d)
+    one = f"{tmp_root}/plan_one_in.txt"
+    with open(one, "w", encoding="utf-8") as f:
+        f.write("".join(f"line {i} m{i}@x.co\n" for i in range(2000)))
+    written = {}
+    for inp in (one, d):
+        jobs = _job_descriptions(spark, lambda: written.update(
+            df=scrub_text_file(spark, inp, f"{tmp_root}/plan_out")
+        ))
+        plan = _plan(written["df"])
+        assert "Exchange" not in plan and "Sort" not in plan, plan
+        if inp == one:
+            assert len(jobs) == 1, jobs
+        else:
+            assert "Union" in plan, plan
+            assert plan.count("Location: InMemoryFileIndex") == 3, plan
 
 
 def test_encoding_latin1_round_trip(spark, tmp_root):
