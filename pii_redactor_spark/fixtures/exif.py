@@ -403,7 +403,8 @@ def _scrub_tiff_payload(
         report["had_thumbnail"] = True
         report["removed"].append("Thumbnail")
     o = _first_int(parsed["ifd0"].get(TAG_ORIENTATION))
-    if o is not None:
+    if o is not None and 1 <= o <= 8:
+        # Exif 2.3 defines 1..8; any other value is treated as absent
         report["orientation"] = o
     drop0 = dict(PII_TAGS_IFD0)
     drop1 = dict(PII_TAGS_EXIF)
@@ -440,10 +441,11 @@ def scrub_exif(
     and — under ``drop_xmp`` — whole XMP APP1 segments (XMP can carry
     GPS and creator identity in XML, which this module does not parse).
     Orientation, Make/Model (unless ``strip_device``), and timestamps
-    (unless ``strip_timestamps``) survive.  An Exif APP1 whose rebuild
-    would not fit a segment is dropped whole (``removed`` gets
-    ``Exif``).  The compressed image data is copied verbatim: decoded
-    pixels are byte-identical.
+    (unless ``strip_timestamps``) survive.  Only the first Exif APP1 is
+    scrubbed and rebuilt; a later one, and one whose rebuild would not
+    fit a segment, is dropped whole (``removed`` gets ``Exif`` once).
+    The compressed image data is copied verbatim: decoded pixels are
+    byte-identical.
 
     -> (scrubbed bytes, report dict).
     """
@@ -452,21 +454,22 @@ def scrub_exif(
     consumed = 0
     for marker, s, e in iter_segments(jpeg):
         if marker == 0xE1 and jpeg[s + 4 : s + 10] == _EXIF_PREFIX:
-            tiff = _scrub_tiff_payload(
-                jpeg[s + 10 : e], report,
-                strip_device=strip_device,
-                strip_timestamps=strip_timestamps,
-            )
             out += jpeg[consumed:s]
-            payload = _EXIF_PREFIX + tiff
-            if len(payload) + 2 > 0xFFFF:
-                # the canonical rebuild pads odd-length values, so a
-                # near-limit APP1 can outgrow its length field: drop it
-                report["removed"].append("Exif")
-            else:
+            consumed = e
+            payload = None
+            if not report["had_exif"]:  # the first Exif APP1
+                payload = _EXIF_PREFIX + _scrub_tiff_payload(
+                    jpeg[s + 10 : e], report,
+                    strip_device=strip_device,
+                    strip_timestamps=strip_timestamps,
+                )
+            # the canonical rebuild pads odd-length values, so a
+            # near-limit APP1 can outgrow its length field: drop it
+            if payload is not None and len(payload) + 2 <= 0xFFFF:
                 out += struct.pack(">BBH", 0xFF, 0xE1, len(payload) + 2)
                 out += payload
-            consumed = e
+            elif "Exif" not in report["removed"]:
+                report["removed"].append("Exif")
         elif marker == 0xE1 and drop_xmp and jpeg[s + 4 : e].startswith(
             _XMP_PREFIX
         ):

@@ -6,6 +6,13 @@ JVM-expression scan of narrow metadata that never touches the blob
 (``audio_quality_flags``); the heavy per-byte work (chunking, resample)
 is Arrow-batched ``mapInPandas`` — no row-at-a-time Python anywhere.
 
+Poison rows: every decoding operator here is a per-row function run
+through ``operators/rows.py::map_rows``, whose one ``except Exception``
+hands a failing row (corrupt or foreign container, NULL bytes) to the
+operator's fallback — ``ok = false`` with NULL metrics for
+``audio_stats`` / ``audio_fingerprints``, no output rows for
+``chunk_audio`` / ``resample_audio`` — so no clip kills a stage.
+
 Determinism note: ``audio_stats`` quantizes its quality metrics to
 integers at ingest — clipping as parts-per-million, loudness as
 centi-dB — so downstream gates compare exact integers (immune to the
@@ -21,12 +28,12 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .rows import map_rows
 
 STATS_SCHEMA = (
     "audio_id string, ok boolean, sample_rate int, channels int, "
@@ -39,6 +46,10 @@ CHUNK_SCHEMA = (
     "n_samples bigint, sample_rate int"
 )
 
+RESAMPLE_SCHEMA = (
+    "audio_id string, bytes binary, n_samples bigint, sample_rate int"
+)
+
 _SILENT_CENTI_DB = -9600  # digital-silence floor (< 16-bit LSB)
 
 
@@ -48,8 +59,8 @@ def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     array, rate), every parse failure a ``ValueError`` — so the
     operators below stay container-agnostic the way ``decode_image``
     dispatches on ``fmt`` for the image axis.  Unknown magic raises
-    ``NotImplementedError`` (env-honest refusal, caught by the same
-    poison-row guards)."""
+    ``NotImplementedError`` (env-honest refusal, which the operators'
+    poison-row policy turns into their fallback row)."""
     head = bytes(data[:4])
     if head == b"RIFF":
         from ..fixtures.wav import decode_wav
@@ -101,29 +112,20 @@ def _measure(samples: np.ndarray, rate: int) -> tuple[int, ...]:
 def audio_stats(df: DataFrame) -> DataFrame:
     """Decode WAV blobs ONCE into the typed metadata row every later gate
     reads — (rate, channels, samples, duration, bit depth, clipping ppm,
-    RMS centi-dB, zero-crossing permille).  Corrupt/out-of-scope rows
-    survive as ok=false with NULL metrics (poison-row guard, same
-    contract as ``vision.decode_stats``).  Input: (audio_id, bytes).
+    RMS centi-dB, zero-crossing permille).  A row that fails anywhere
+    (corrupt or out-of-scope container, NULL bytes) survives as ok=false
+    with NULL metrics (``operators/rows.py``'s poison-row policy, the
+    same as ``vision.decode_stats``).  Input: (audio_id, bytes).
     """
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    samples, rate = decode_audio(bytes(data))
-                    out.append((aid, True, *_measure(samples, rate)))
-                except (ValueError, NotImplementedError):
-                    out.append((aid, False) + (None,) * 8)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "audio_id", "ok", "sample_rate", "channels",
-                    "n_samples", "duration_ms", "bits",
-                    "clipping_ppm", "rms_centi_db", "zero_cross_permille",
-                ],
-            )
+    def row(aid, data):
+        samples, rate = decode_audio(bytes(data))
+        return [(aid, True, *_measure(samples, rate))]
 
-    return df.mapInPandas(gen, schema=STATS_SCHEMA)
+    def failed(aid, data):
+        return [(aid, False) + (None,) * 8]
+
+    return map_rows(df.select("audio_id", "bytes"), STATS_SCHEMA,
+                    row, failed)
 
 
 # --- metadata-only quality gate (JVM expressions, blob never read) -----------
@@ -262,24 +264,16 @@ def _spectral_fingerprint(samples: np.ndarray, rate: int) -> int:
 def audio_fingerprints(df: DataFrame) -> DataFrame:
     """One 64-bit spectral fingerprint per clip (ingest-time, like
     ``audio_stats``) — the audio analog of the image phash column.
-    Corrupt rows survive as ok=false with a NULL fingerprint.  Input:
-    (audio_id, bytes)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    samples, rate = decode_audio(bytes(data))
-                    out.append(
-                        (aid, True, _spectral_fingerprint(samples, rate))
-                    )
-                except (ValueError, NotImplementedError):
-                    out.append((aid, False, None))
-            yield pd.DataFrame(
-                out, columns=["audio_id", "ok", "fingerprint"]
-            )
+    A row that fails anywhere survives as ok=false with a NULL
+    fingerprint.  Input: (audio_id, bytes)."""
+    def row(aid, data):
+        samples, rate = decode_audio(bytes(data))
+        return [(aid, True, _spectral_fingerprint(samples, rate))]
 
-    return df.mapInPandas(gen, schema=FP_SCHEMA)
+    def failed(aid, data):
+        return [(aid, False, None)]
+
+    return map_rows(df.select("audio_id", "bytes"), FP_SCHEMA, row, failed)
 
 
 def audio_neardup_pairs(
@@ -303,6 +297,12 @@ def audio_neardup_pairs(
 # --- per-byte stages: chunking + resample (Arrow-batched) ---------------------
 
 
+def _dropped(aid, data) -> list[tuple]:
+    """The per-byte stages' fallback: a clip that fails to decode or
+    rewrite yields no rows (``audio_stats`` is where it is accounted)."""
+    return []
+
+
 def chunk_audio(df: DataFrame, chunk_ms: int = 30_000) -> DataFrame:
     """Split each clip into fixed ``chunk_ms`` windows (the audio analog
     of video frame sampling): one output row per chunk, re-encoded as a
@@ -316,35 +316,16 @@ def chunk_audio(df: DataFrame, chunk_ms: int = 30_000) -> DataFrame:
     if chunk_ms <= 0:
         raise ValueError(f"chunk_ms must be positive, got {chunk_ms}")
 
-    cols = ["audio_id", "chunk_no", "bytes", "n_samples", "sample_rate"]
+    def row(aid, data):
+        samples, rate = decode_audio(bytes(data))
+        step = max(1, rate * chunk_ms // 1000)
+        windows = (samples[lo:lo + step]
+                   for lo in range(0, samples.shape[0], step))
+        return [(aid, i, encode_wav(win, rate), win.shape[0], rate)
+                for i, win in enumerate(windows)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Fan-out stage: one input clip can yield hundreds of chunk rows
-        # (a 4-minute clip at 500 ms windows is 480), so the output is
-        # flushed in bounded slices instead of buffering a whole Arrow
-        # batch's fan-out in one pandas frame — at 10k-row input batches
-        # the unbounded form is a per-task OOM at exactly the corpus
-        # shapes chunking exists for.
-        out: list[tuple] = []
-        for pdf in batches:
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    samples, rate = decode_audio(bytes(data))
-                except (ValueError, NotImplementedError):
-                    continue
-                step = max(1, rate * chunk_ms // 1000)
-                for i, lo in enumerate(range(0, samples.shape[0], step)):
-                    win = samples[lo:lo + step]
-                    out.append(
-                        (aid, i, encode_wav(win, rate),
-                         win.shape[0], rate)
-                    )
-                if len(out) >= 2048:
-                    yield pd.DataFrame(out, columns=cols)
-                    out = []
-        yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(gen, schema=CHUNK_SCHEMA)
+    return map_rows(df.select("audio_id", "bytes"), CHUNK_SCHEMA,
+                    row, _dropped)
 
 
 def resample_audio(df: DataFrame, target_rate: int) -> DataFrame:
@@ -360,40 +341,25 @@ def resample_audio(df: DataFrame, target_rate: int) -> DataFrame:
     if target_rate <= 0:
         raise ValueError(f"bad target rate {target_rate}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    samples, rate = decode_audio(bytes(data))
-                except (ValueError, NotImplementedError):
-                    continue
-                x = _to_float(samples)
-                n = x.shape[0]
-                m = max(1, round(n * target_rate / rate))
-                # sample-position grid: index i of the output sits at
-                # i * (n - 1) / (m - 1) in the input (endpoints pinned)
-                if m == 1 or n == 1:
-                    y = np.repeat(x[:1], m, axis=0)
-                else:
-                    pos = np.linspace(0.0, n - 1.0, m)
-                    y = np.stack(
-                        [np.interp(pos, np.arange(n), x[:, c])
-                         for c in range(x.shape[1])],
-                        axis=1,
-                    )
-                pcm = np.clip(np.round(y * 32768.0), -32768, 32767)
-                out.append(
-                    (aid, encode_wav(pcm.astype(np.int16), target_rate),
-                     m, target_rate)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["audio_id", "bytes", "n_samples", "sample_rate"],
+    def row(aid, data):
+        samples, rate = decode_audio(bytes(data))
+        x = _to_float(samples)
+        n = x.shape[0]
+        m = max(1, round(n * target_rate / rate))
+        # sample-position grid: index i of the output sits at
+        # i * (n - 1) / (m - 1) in the input (endpoints pinned)
+        if m == 1 or n == 1:
+            y = np.repeat(x[:1], m, axis=0)
+        else:
+            pos = np.linspace(0.0, n - 1.0, m)
+            y = np.stack(
+                [np.interp(pos, np.arange(n), x[:, c])
+                 for c in range(x.shape[1])],
+                axis=1,
             )
+        pcm = np.clip(np.round(y * 32768.0), -32768, 32767)
+        return [(aid, encode_wav(pcm.astype(np.int16), target_rate),
+                 m, target_rate)]
 
-    return df.mapInPandas(
-        gen,
-        schema="audio_id string, bytes binary, n_samples bigint, "
-               "sample_rate int",
-    )
+    return map_rows(df.select("audio_id", "bytes"), RESAMPLE_SCHEMA,
+                    row, _dropped)

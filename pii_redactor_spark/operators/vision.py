@@ -6,6 +6,14 @@ here is a ``mapInPandas`` batch transform — Arrow moves whole column batches
 across the JVM<->Python boundary, NumPy does the pixel math, and nothing ever
 touches the driver.
 
+Poison rows: ``decode_stats``, ``resize_images``, ``scrub_image_metadata``,
+``with_metadata_scrub`` and ``verify_integrity`` are per-row functions run
+under ``operators/rows.py``'s one exception policy, so a row that fails
+anywhere (corrupt stream, foreign codec, NULL bytes) takes its operator's
+fallback row and never kills the stage.  The metadata scrub's fallback
+fails closed: NULL bytes, never the original stream.  ``sample_frames``
+stays outside it: a foreign video codec is a stage-level refusal.
+
 Codec support (round 4-5): PNG (spec-compliant 8-bit RGB subset), REAL
 JPEG/JFIF — baseline AND progressive (SOF2) since round 5 — REAL
 GIF89a (round 5: full LZW, interlacing, transparency, animation), and
@@ -49,6 +57,7 @@ from ..fixtures.codecs import (
     phash64,
     psnr,
 )
+from .rows import guard, map_rows
 
 STATS_SCHEMA = (
     "image_id string, fmt string, w int, h int, decoded boolean, "
@@ -80,10 +89,10 @@ def decode_stats(df: DataFrame, apply_orientation: bool = False) -> DataFrame:
     """Per-image feature extraction: channel means, stddev, entropy, and a
     phash recomputation check against the stored ``phash`` column.
 
-    Input requires columns (image_id, bytes, fmt, phash).  Rows whose format
-    can't be decoded in this environment come back ``decoded = false`` with
-    null features instead of failing the job — at 10^12 rows a poison row
-    must never kill the stage.
+    Input requires columns (image_id, bytes, fmt, phash).  A row that
+    fails anywhere (undecodable or foreign format, NULL bytes or phash)
+    comes back ``decoded = false`` with null features instead of failing
+    the job — at 10^12 rows a poison row must never kill the stage.
 
     ``apply_orientation=True`` reports w/h/features in DISPLAY orientation
     for JPEGs carrying an Exif orientation tag (a cheap marker walk, no
@@ -92,48 +101,32 @@ def decode_stats(df: DataFrame, apply_orientation: bool = False) -> DataFrame:
     phash check stays on the raw decode — the stored phash contract is
     encode-time pixels.
     """
+    from ..fixtures.exif import normalize_orientation, orientation_of
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if apply_orientation:
-            from ..fixtures.exif import normalize_orientation, orientation_of
-        for pdf in batches:
-            out = []
-            for iid, data, fmt, ph in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["phash"]
-            ):
-                try:
-                    raw = decode_image(bytes(data), fmt)
-                    px = raw
-                    if apply_orientation and fmt == "jpeg":
-                        px = normalize_orientation(
-                            raw, orientation_of(bytes(data))
-                        )
-                except (NotImplementedError, ValueError):
-                    out.append((iid, fmt, None, None, False,
-                                None, None, None, None, None, None, None))
-                    continue
-                means = px.reshape(-1, 3).mean(axis=0)
-                dist = int(
-                    bin((phash64(raw) ^ int(ph)) & 0xFFFFFFFFFFFFFFFF).count("1")
-                )
-                tol = _LOSSY_PHASH_TOL if fmt != "png" else 0
-                out.append((
-                    iid, fmt, int(px.shape[1]), int(px.shape[0]), True,
-                    float(means[0]), float(means[1]), float(means[2]),
-                    float(px.astype(np.float64).std()),
-                    _entropy(px),
-                    dist,
-                    dist <= tol,
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "fmt", "w", "h", "decoded", "mean_r",
-                         "mean_g", "mean_b", "stddev", "entropy",
-                         "phash_dist", "phash_check"],
-            )
+    def row(iid, data, fmt, ph):
+        raw = decode_image(bytes(data), fmt)
+        px = raw
+        if apply_orientation and fmt == "jpeg":
+            px = normalize_orientation(raw, orientation_of(bytes(data)))
+        means = px.reshape(-1, 3).mean(axis=0)
+        dist = int(
+            bin((phash64(raw) ^ int(ph)) & 0xFFFFFFFFFFFFFFFF).count("1")
+        )
+        tol = _LOSSY_PHASH_TOL if fmt != "png" else 0
+        return [(
+            iid, fmt, int(px.shape[1]), int(px.shape[0]), True,
+            float(means[0]), float(means[1]), float(means[2]),
+            float(px.astype(np.float64).std()),
+            _entropy(px),
+            dist,
+            dist <= tol,
+        )]
+
+    def undecoded(iid, data, fmt, ph):
+        return [(iid, fmt, None, None, False) + (None,) * 7]
 
     cols = df.select("image_id", "bytes", "fmt", "phash")
-    return cols.mapInPandas(gen, schema=STATS_SCHEMA)
+    return map_rows(cols, STATS_SCHEMA, row, undecoded)
 
 
 def resize_images(df: DataFrame, max_side: int = 32) -> DataFrame:
@@ -143,35 +136,27 @@ def resize_images(df: DataFrame, max_side: int = 32) -> DataFrame:
     Output is always lossless PNG: a resize stage must not stack a second
     lossy generation on top of the source's.
 
-    Poison rows (undecodable format/bytes) pass through untouched — original
-    bytes and fmt, null dims — instead of killing the stage, mirroring
-    ``decode_stats``; a resize stage must not drop data it cannot improve.
+    Poison rows (undecodable format/bytes, NULL bytes) pass through
+    untouched — original bytes and fmt, null dims — instead of killing
+    the stage; a resize stage must not drop data it cannot improve.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = decode_image(bytes(data), fmt)
-                except (NotImplementedError, ValueError):
-                    out.append((iid, bytes(data), None, None, fmt))
-                    continue
-                h, w = px.shape[:2]
-                scale = max(h, w) / max_side
-                if scale > 1:
-                    ys = (np.arange(int(h / scale)) * scale).astype(int)
-                    xs = (np.arange(int(w / scale)) * scale).astype(int)
-                    px = px[ys][:, xs]
-                out.append((iid, encode_png(px),
-                            int(px.shape[1]), int(px.shape[0]), "png"))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
+    def row(iid, data, fmt):
+        px = decode_image(bytes(data), fmt)
+        h, w = px.shape[:2]
+        scale = max(h, w) / max_side
+        if scale > 1:
+            ys = (np.arange(int(h / scale)) * scale).astype(int)
+            xs = (np.arange(int(w / scale)) * scale).astype(int)
+            px = px[ys][:, xs]
+        return [(iid, encode_png(px), int(px.shape[1]), int(px.shape[0]),
+                 "png")]
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=RESIZE_SCHEMA
-    )
+    def passthrough(iid, data, fmt):
+        return [(iid, data, None, None, fmt)]
+
+    return map_rows(df.select("image_id", "bytes", "fmt"), RESIZE_SCHEMA,
+                    row, passthrough)
 
 
 EXIF_SCRUB_SCHEMA = (
@@ -181,21 +166,17 @@ EXIF_SCRUB_SCHEMA = (
 )
 
 
-_UNSUPPORTED_REPORT = {"had_exif": False, "had_gps": False,
-                       "had_thumbnail": False, "orientation": 1,
-                       "removed": ""}
-_CORRUPT_REPORT = dict.fromkeys(_UNSUPPORTED_REPORT)
+def _metadata_scrub_row(*, strip_device: bool, strip_timestamps: bool):
+    """The per-image metadata scrub both operators below run, as a
+    ``(row, corrupt)`` pair over ``(image_id, data, fmt)`` whose tuples
+    follow ``EXIF_SCRUB_SCHEMA``.
 
-
-def _metadata_scrubber(*, strip_device: bool, strip_timestamps: bool):
-    """The per-image metadata scrub both UDFs below run:
-    ``(data, fmt) -> (bytes, report, flag)``.
-
-    ``report`` carries ``had_exif`` / ``had_gps`` / ``had_thumbnail`` /
-    ``orientation`` and the comma-joined ``removed`` list.  ``flag`` is
-    ``'ok'``; ``'unsupported_fmt'`` (bytes pass through, empty report); or
-    ``'corrupt'`` (original bytes kept, all-NULL report).  NULL bytes scrub
-    as ``b""``, so a NULL row of a supported format comes out corrupt.
+    ``row`` reports ``had_exif`` / ``had_gps`` / ``had_thumbnail`` /
+    ``orientation`` and the comma-joined ``removed`` list with ``flag =
+    'ok'``; an unknown format passes through with an empty report and
+    ``'unsupported_fmt'``.  ``corrupt`` is the fail-closed fallback: NULL
+    bytes, all-NULL report, ``'corrupt'`` — a stream the scrubber cannot
+    parse never leaves with its original bytes, GPS included.
     """
     from ..fixtures.exif import (
         scrub_exif,
@@ -213,18 +194,20 @@ def _metadata_scrubber(*, strip_device: bool, strip_timestamps: bool):
         "gif": scrub_gif_metadata,
     }
 
-    def scrub_row(data, fmt) -> tuple[bytes, dict, str]:
-        data = bytes(data) if data is not None else b""
+    def row(iid, data, fmt):
         scrub = scrubbers.get(fmt)
         if scrub is None:
-            return data, _UNSUPPORTED_REPORT, "unsupported_fmt"
-        try:
-            clean, rep = scrub(data)
-        except ValueError:
-            return data, _CORRUPT_REPORT, "corrupt"
-        return clean, {**rep, "removed": ",".join(rep["removed"])}, "ok"
+            return [(iid, data, fmt, False, False, False, 1, "",
+                     "unsupported_fmt")]
+        clean, rep = scrub(bytes(data))
+        return [(iid, clean, fmt, rep["had_exif"], rep["had_gps"],
+                 rep["had_thumbnail"], rep["orientation"],
+                 ",".join(rep["removed"]), "ok")]
 
-    return scrub_row
+    def corrupt(iid, data, fmt):
+        return [(iid, None, fmt) + (None,) * 5 + ("corrupt",)]
+
+    return row, corrupt
 
 
 def scrub_image_metadata(
@@ -247,36 +230,15 @@ def scrub_image_metadata(
     (tEXt/zTXt/iTXt drop, eXIf scrub-and-rebuild), WebP (EXIF/XMP chunk
     drop + VP8X flag clear), GIF (comment + XMP application extension
     drop).  Unknown formats pass through with ``flag =
-    'unsupported_fmt'``; undecodable streams keep their original bytes
-    with ``flag = 'corrupt'`` instead of killing the stage.
+    'unsupported_fmt'``.  A stream that fails to scrub (malformed, NULL)
+    fails closed: ``flag = 'corrupt'`` with NULL bytes, never the
+    original stream.
     """
-    scrub_row = _metadata_scrubber(
+    row, corrupt = _metadata_scrub_row(
         strip_device=strip_device, strip_timestamps=strip_timestamps
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                clean, rep, flag = scrub_row(data, fmt)
-                out.append((
-                    iid, clean, fmt,
-                    rep["had_exif"], rep["had_gps"],
-                    rep["had_thumbnail"], rep["orientation"],
-                    rep["removed"], flag,
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "bytes", "fmt", "had_exif",
-                         "had_gps", "had_thumbnail", "orientation",
-                         "removed", "flag"],
-            )
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=EXIF_SCRUB_SCHEMA
-    )
+    return map_rows(df.select("image_id", "bytes", "fmt"),
+                    EXIF_SCRUB_SCHEMA, row, corrupt)
 
 
 META_SCRUB_STRUCT = (
@@ -301,25 +263,25 @@ def with_metadata_scrub(
     One struct-returning iterator pandas UDF — no join back, no second
     decode, no shuffle; the pipeline's materialize mode composes this
     with the caption scrub as two ArrowEvalPython nodes over the same
-    narrow pass.  Corrupt streams keep their original bytes
-    (``meta_flag = 'corrupt'``); unknown formats pass through
-    (``'unsupported_fmt'``).
+    narrow pass.  It runs ``scrub_image_metadata``'s row under the same
+    guard: a stream that fails to scrub gets NULL bytes (``meta_flag =
+    'corrupt'``); unknown formats pass through (``'unsupported_fmt'``).
     """
     from pyspark.sql.functions import pandas_udf
 
-    scrub_row = _metadata_scrubber(
+    scrub = guard(*_metadata_scrub_row(
         strip_device=strip_device, strip_timestamps=strip_timestamps
-    )
+    ))
 
     @pandas_udf(META_SCRUB_STRUCT)
     def _scrub(
         batches: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.DataFrame]:
         for blobs, fmts in batches:
-            recs = []
-            for data, fmt in zip(blobs, fmts):
-                clean, rep, flag = scrub_row(data, fmt)
-                recs.append((clean, rep["had_gps"], rep["removed"], flag))
+            recs = [(clean, had_gps, removed, flag)
+                    for data, fmt in zip(blobs, fmts)
+                    for _, clean, _, _, had_gps, _, _, removed, flag
+                    in scrub(None, data, fmt)]
             yield pd.DataFrame(
                 recs,
                 columns=["bytes", "meta_had_gps", "meta_removed",
@@ -344,7 +306,9 @@ def verify_integrity(df_after: DataFrame, df_before: DataFrame,
     """The north-star image gate as a distributed operator: join the pipeline
     output back to the source on image_id (broadcast-or-shuffle equi join —
     AQE picks) and decode both sides; ``ok`` iff pixels are allclose for
-    lossless fmt / PSNR >= ``min_psnr_db`` for lossy fmt.
+    lossless fmt / PSNR >= ``min_psnr_db`` for lossy fmt.  A pair where
+    either side fails to decode (corrupt, foreign format, NULL bytes) is
+    ``ok = false`` with NULL ``psnr``.
     """
     before = df_before.select(
         "image_id",
@@ -355,27 +319,22 @@ def verify_integrity(df_after: DataFrame, df_before: DataFrame,
         before, "image_id"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, a, fa, b, fb in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"],
-                pdf["bytes_before"], pdf["fmt_before"],
-            ):
-                pa = decode_image(bytes(a), fa)
-                pb = decode_image(bytes(b), fb)
-                if pa.shape != pb.shape:
-                    out.append((iid, fa, False, 0.0))
-                    continue
-                val = psnr(pa, pb)
-                lossless = fa == "png" and fb == "png"
-                ok = bool(np.array_equal(pa, pb)) if lossless else bool(
-                    val >= min_psnr_db
-                )
-                out.append((iid, fa, ok, float(min(val, 1e9))))
-            yield pd.DataFrame(out, columns=["image_id", "fmt", "ok", "psnr"])
+    def row(iid, a, fa, b, fb):
+        pa = decode_image(bytes(a), fa)
+        pb = decode_image(bytes(b), fb)
+        if pa.shape != pb.shape:
+            return [(iid, fa, False, 0.0)]
+        val = psnr(pa, pb)
+        lossless = fa == "png" and fb == "png"
+        ok = bool(np.array_equal(pa, pb)) if lossless else bool(
+            val >= min_psnr_db
+        )
+        return [(iid, fa, ok, float(min(val, 1e9)))]
 
-    return joined.mapInPandas(gen, schema=INTEGRITY_SCHEMA)
+    def undecodable(iid, a, fa, b, fb):
+        return [(iid, fa, False, None)]
+
+    return map_rows(joined, INTEGRITY_SCHEMA, row, undecodable)
 
 
 FRAME_SCHEMA = (

@@ -92,7 +92,8 @@ def scrub_images(
     with_metadata_scrub``).  Materialize-mode only by design: it is the
     one transform that must touch bytes, and decisions mode exists
     precisely to never do that — pair a decisions run with a later
-    bytes pass over kept partitions instead.
+    bytes pass over kept partitions instead.  A row whose metadata scrub
+    failed (``meta_flag = 'corrupt'``, NULL bytes) is never kept.
     """
     if salt_partitions:
         df = df.repartition(
@@ -105,6 +106,10 @@ def scrub_images(
 
         df = with_metadata_scrub(df)
     scrubbed = with_scrub(df, cfg=cfg)
+    if scrub_metadata:
+        scrubbed = scrubbed.withColumn(
+            "keep", F.col("keep") & (F.col("meta_flag") != "corrupt")
+        )
     if toxicity is not None:
         # Score the raw caption, mask blocklisted tokens in both scrubbed
         # outputs and AND the gate into ``keep``: a narrow JVM projection,

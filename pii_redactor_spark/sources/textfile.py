@@ -30,11 +30,13 @@ blank/whitespace-only line exists; ``"drop"`` omits such lines under
 EVERY encoding — the usual distributed-corpus contract — so the flag
 behaves identically whatever charset is in play.  UTF-8 mode with the
 default ``"error"`` preserves blank lines exactly (no error is raised;
-the native text path round-trips them).  Non-ASCII-compatible charsets
-(UTF-16/32, EBCDIC) are rejected loudly up front — split reads and the
-blank-line probe assume single-byte newline framing, and accepting such
-a codec would corrupt lines silently at split boundaries
-(``_require_ascii_compatible``).
+the native text path round-trips them).  Besides UTF-8, only the two
+ASCII-compatible charsets Spark's CSV source accepts are taken:
+ISO-8859-1 and US-ASCII, under any Python alias (``latin-1``).  Every
+other name is rejected loudly up front (``_csv_charset``): split reads
+and the blank-line probe assume single-byte newline framing, which wide
+codecs (UTF-16/32) and EBCDIC break silently, and Spark rejects the
+remaining single-byte names mid-job.
 
 Ordering (``ordered=True``, the parity mode): the redaction is a narrow
 projection of the scan, so part file ``part-0000i`` is scan partition
@@ -77,43 +79,40 @@ def _is_utf8(encoding: str) -> bool:
     return encoding.replace("-", "").replace("_", "").upper() == "UTF8"
 
 
-# ASCII canary: newline/CR framing bytes, the \x01 separator, and plain
-# letters — the bytes the CSV line path and the blank-line probe depend on.
-_ASCII_CANARY = "\r\nA z01\x01"
+# The ASCII-compatible charsets Spark's CSV source accepts besides UTF-8
+# (CSVOptions also lists UTF-16/32, which break newline framing), keyed by
+# Python's canonical codec name.
+_CSV_CHARSETS = {"iso8859-1": "ISO-8859-1", "ascii": "US-ASCII"}
 
 
-def _require_ascii_compatible(encoding: str) -> None:
-    """Reject charsets the CSV line path cannot frame correctly.
+def _csv_charset(encoding: str) -> str:
+    """The Spark charset name the CSV line path reads and writes a
+    non-UTF-8 ``encoding`` with; any Python alias (``latin-1``, ``l1``,
+    ``646``) maps to its Spark name.
 
     The non-UTF-8 read/write path and ``_raw_has_blank_line`` assume
     ASCII-compatible newline framing: one line per ``\\n`` byte, the
     ``\\x01`` separator byte never produced by payload re-encoding.  Wide
-    charsets (UTF-16/32: multi-byte code units + BOM) and non-ASCII
-    single-byte codecs (EBCDIC) break that silently — corrupt lines at
-    split boundaries, missed blank-line errors — so they fail loudly here
-    instead (round-3 advice).  The check is behavioral, not an allowlist:
-    a codec qualifies iff it encodes the ASCII canary to the identical
-    ASCII bytes (true for UTF-8, latin-1/ISO-8859-*, cp125x, KOI8,
-    Shift_JIS/EUC-family ASCII planes; false for UTF-16/32, EBCDIC).
+    charsets (UTF-16/32) and non-ASCII single-byte codecs (EBCDIC) break
+    that silently, and every other single-byte name (cp1252, KOI8,
+    Shift_JIS) fails inside Spark with ``INVALID_PARAMETER_VALUE.CHARSET``
+    after the job has started — so all of them raise ``ValueError`` here,
+    before any work.
     """
     import codecs
 
     try:
-        info = codecs.lookup(encoding)
+        name = codecs.lookup(encoding).name
     except LookupError as e:
         raise ValueError(f"unknown encoding {encoding!r}") from e
-    try:
-        ok = _ASCII_CANARY.encode(info.name) == _ASCII_CANARY.encode("ascii")
-    except UnicodeError:
-        ok = False
-    if not ok:
+    if name not in _CSV_CHARSETS:
         raise ValueError(
-            f"encoding {encoding!r} is not ASCII-compatible: the "
-            "charset-honoring line path relies on single-byte newline "
-            "framing, which UTF-16/32-style wide or non-ASCII codecs "
-            "violate (silent line corruption at split boundaries); "
-            "re-encode the input as UTF-8 or a single-byte charset"
+            f"encoding {encoding!r} is not supported: the charset path "
+            "takes UTF-8 or an ASCII-compatible charset Spark's CSV "
+            "source reads and writes (ISO-8859-1, US-ASCII); re-encode "
+            "the input as one of those"
         )
+    return _CSV_CHARSETS[name]
 
 
 def read_text_lines(
@@ -128,10 +127,9 @@ def read_text_lines(
     """
     if _is_utf8(encoding):
         return spark.read.text(input_path)
-    _require_ascii_compatible(encoding)
     return (
         spark.read.format("csv")
-        .option("encoding", encoding)
+        .option("encoding", _csv_charset(encoding))
         .option("sep", "\x01")
         .option("quote", "")
         .option("header", False)
@@ -260,7 +258,7 @@ def scrub_text_file(
         (
             out.write.mode("overwrite")
             .format("csv")
-            .option("encoding", encoding)
+            .option("encoding", _csv_charset(encoding))
             .option("sep", "\x01")
             .option("quote", "")
             .option("escape", "")

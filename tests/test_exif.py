@@ -446,11 +446,12 @@ def test_scrub_image_metadata_spark(spark):
     assert "tEXt" in out["png_row"]["removed"]
     assert b"Jane" not in bytes(out["png_row"]["bytes"])
     assert out["bmp_row"]["flag"] == "unsupported_fmt"
+    # a stream that fails to scrub fails closed: NULL bytes
     assert out["corrupt"]["flag"] == "corrupt"
-    assert bytes(out["corrupt"]["bytes"]) == b"\xff\xd8\xff"
-    # a NULL payload is an empty stream: corrupt, not a dead stage
+    assert out["corrupt"]["bytes"] is None
+    # a NULL payload is corrupt, not a dead stage
     assert out["null_bytes"]["flag"] == "corrupt"
-    assert bytes(out["null_bytes"]["bytes"]) == b""
+    assert out["null_bytes"]["bytes"] is None
     assert out["null_bytes"]["had_gps"] is None
 
 
@@ -580,15 +581,15 @@ def test_with_metadata_scrub_in_place(spark):
     assert bytes(bmp["bytes"]) == b"BM fake"
     assert (bmp["meta_had_gps"], bmp["meta_removed"], bmp["meta_flag"]) == (
         False, "", "unsupported_fmt")
-    # an undecodable stream keeps its original bytes
+    # an undecodable stream fails closed: NULL bytes, never the original
     trunc = out["trunc"]
-    assert bytes(trunc["bytes"]) == jx[:len(jx) // 2]
+    assert trunc["bytes"] is None
     assert (trunc["meta_had_gps"], trunc["meta_removed"],
             trunc["meta_flag"]) == (None, None, "corrupt")
     assert trunc["caption"] == "a fox"
-    # a NULL payload scrubs as an empty stream
+    # a NULL payload is corrupt, not a dead stage
     null = out["null"]
-    assert bytes(null["bytes"]) == b""
+    assert null["bytes"] is None
     assert (null["meta_had_gps"], null["meta_removed"], null["meta_flag"]) == (
         None, None, "corrupt")
 
@@ -790,3 +791,226 @@ def test_decode_stats_apply_orientation(spark):
     assert (disp["w"], disp["h"]) == (16, 24)
     assert abs(raw["mean_r"] - disp["mean_r"]) < 1e-9
     assert disp["phash_check"]
+
+
+# ---------------------------------------------------------------------------
+# Fail-closed metadata scrub: orientation range, duplicate APP1s, the
+# corrupt row's keep, and a mutation fuzz of the guarded row function
+
+
+def test_scrub_image_metadata_orientation_out_of_range(spark):
+    """An orientation outside Exif's 1..8 (here a LONG 2^32-1, which
+    overflowed the ``orientation int`` column and killed the stage) is
+    treated as absent: the row scrubs ``ok`` with orientation 1."""
+    from pii_redactor_spark.operators.vision import scrub_image_metadata
+
+    ifds = _full_ifds()
+    ifds["ifd0"][E.TAG_ORIENTATION] = E.ExifTag(
+        E.TAG_ORIENTATION, E.TYPE_LONG, [2**32 - 1])
+    jx = E.insert_exif(encode_jpeg(_px()), ifds)
+    df = spark.createDataFrame(
+        [("o", bytearray(jx), "jpeg")],
+        "image_id string, bytes binary, fmt string",
+    )
+    (r,) = scrub_image_metadata(df).collect()
+    assert (r["flag"], r["orientation"], r["had_gps"]) == ("ok", 1, True)
+    parsed = E.extract_exif(bytes(r["bytes"]))
+    assert parsed["gps"] == {} and E.TAG_GPS_IFD not in parsed["ifd0"]
+
+
+def test_scrub_exif_two_app1_segments():
+    """Only the first Exif APP1 is scrubbed; a later one is dropped
+    whole.  One APP1 out, no GPS, no duplicate ``removed`` names, and
+    the first segment's orientation."""
+    jp = encode_jpeg(_px())
+    jx = E.insert_exif(E.insert_exif(jp, _full_ifds(orientation=3)),
+                       _full_ifds(orientation=6))
+    clean, rep = E.scrub_exif(jx)
+    app1 = [s for m, s, _ in E.iter_segments(clean)
+            if m == 0xE1 and clean[s + 4:s + 10] == b"Exif\x00\x00"]
+    assert len(app1) == 1
+    assert E.extract_exif(clean)["gps"] == {}
+    assert rep["had_gps"] and rep["orientation"] == 6
+    assert len(rep["removed"]) == len(set(rep["removed"]))
+    assert "Exif" in rep["removed"]
+    assert np.array_equal(decode_jpeg(clean), decode_jpeg(jp))
+
+
+def test_scrub_images_corrupt_metadata_row_not_kept(spark):
+    """``scrub_images(scrub_metadata=True)`` never keeps a row whose
+    metadata scrub failed: its bytes are NULL and ``keep`` is false,
+    while the same caption on a good stream is kept."""
+    from pii_redactor_spark.pipeline.run import scrub_images
+
+    _, jx = _tagged_jpeg()
+    cap = "A golden retriever puppy playing with a red ball on the grass"
+    df = spark.createDataFrame(
+        [("good", bytearray(jx), 24, 16, "jpeg", cap, 0, 0),
+         ("bad", bytearray(jx[:len(jx) // 3]), 24, 16, "jpeg", cap, 0, 0)],
+        "image_id string, bytes binary, w int, h int, fmt string, "
+        "caption string, phash long, phash_prefix int",
+    )
+    out = {r["image_id"]: r
+           for r in scrub_images(df, scrub_metadata=True).collect()}
+    assert out["good"]["keep"] and out["good"]["meta_flag"] == "ok"
+    assert out["bad"]["meta_flag"] == "corrupt"
+    assert out["bad"]["bytes"] is None and not out["bad"]["keep"]
+
+
+_PLANTED = (b"SN-PLANTED", b"OWNER-PLANTED", b"GPS-PLANTED")
+
+
+def _planted_ifds() -> dict:
+    """IFDs carrying the planted serial, owner and GPS strings, beside a
+    kept Latin-1 ``ImageDescription``."""
+    ifds = _full_ifds()
+    ifds["ifd0"][0x010E] = E.ExifTag(0x010E, E.TYPE_ASCII, "Caf\xe9 photo")
+    ifds["ifd0"][0x013B] = E.ExifTag(0x013B, E.TYPE_ASCII, "OWNER-PLANTED")
+    ifds["exif"][0xA431] = E.ExifTag(0xA431, E.TYPE_ASCII, "SN-PLANTED-77")
+    ifds["gps"][0x1B] = E.ExifTag(0x1B, E.TYPE_ASCII, "GPS-PLANTED 40N")
+    return ifds
+
+
+def _retype_pointer(tiff: bytes, tag: int, typ: int) -> bytes:
+    """A canonical (little-endian) TIFF with IFD0's ``tag`` entry
+    retyped in place, its value field untouched."""
+    (n,) = struct.unpack_from("<H", tiff, 8)
+    for i in range(n):
+        at = 10 + 12 * i
+        if struct.unpack_from("<H", tiff, at)[0] == tag:
+            return tiff[:at + 2] + struct.pack("<H", typ) + tiff[at + 4:]
+    raise AssertionError(f"tag 0x{tag:04X} not in IFD0")
+
+
+def _planted_streams() -> dict[str, tuple[bytes, str, int]]:
+    """name -> (stream, fmt, end of its metadata carriers).  Every
+    container carries the planted strings in its native vehicles; the
+    JPEG variants add two Exif APP1s, a GPS pointer retyped ASCII or
+    RATIONAL, and the 64,622-byte APP1."""
+    from pii_redactor_spark.fixtures.codecs import encode_png
+    from pii_redactor_spark.fixtures.gif import encode_gif
+    from pii_redactor_spark.fixtures.webp import encode_webp
+
+    tiff = E.build_tiff(_planted_ifds())
+
+    def jpeg(*tiffs):
+        jp = encode_jpeg(_px())
+        app1 = b"".join(
+            struct.pack(">BBH", 0xFF, 0xE1, len(t) + 8) + b"Exif\x00\x00" + t
+            for t in tiffs
+        )
+        return jp[:2] + app1 + jp[2:], "jpeg", 2 + len(app1)
+
+    def png(*chunks):
+        body = b"".join(chunks)
+        p = encode_png(_px())
+        return p[:33] + body + p[33:], "png", 33 + len(body)
+
+    def webp(*chunks):
+        body = b"".join(t + struct.pack("<I", len(c)) + c + b"\x00" * (len(c) & 1)
+                        for t, c in chunks)
+        w = encode_webp(_px())
+        riff = body + w[12:]
+        return (b"RIFF" + struct.pack("<I", 4 + len(riff)) + b"WEBP" + riff,
+                "webp", 12 + len(body))
+
+    g = encode_gif(_px())
+    cut = 13 + (3 * (2 << (g[10] & 0x07)) if g[10] & 0x80 else 0)
+    note = b" ".join(_PLANTED)
+    comment = b"\x21\xfe" + bytes([len(note)]) + note + b"\x00"
+    owner = _png_chunk(b"tEXt", b"Author\x00OWNER-PLANTED")
+    return {
+        "jpeg": jpeg(tiff),
+        "jpeg_two_app1": jpeg(tiff, tiff),
+        "jpeg_gps_ascii": jpeg(_retype_pointer(tiff, E.TAG_GPS_IFD,
+                                               E.TYPE_ASCII)),
+        "jpeg_gps_rational": jpeg(_retype_pointer(tiff, E.TAG_GPS_IFD,
+                                                  E.TYPE_RATIONAL)),
+        "jpeg_app1_64622": jpeg(_oversized_app1_tiff()),
+        "png": png(owner, _png_chunk(b"eXIf", tiff)),
+        "png_gps_rational": png(_png_chunk(b"eXIf", _retype_pointer(
+            tiff, E.TAG_GPS_IFD, E.TYPE_RATIONAL))),
+        "webp": webp((b"EXIF", tiff), (b"XMP ", b"<x>OWNER-PLANTED</x>")),
+        "webp_gps_ascii": webp((b"EXIF", _retype_pointer(
+            tiff, E.TAG_GPS_IFD, E.TYPE_ASCII))),
+        "gif": (g[:cut] + comment + g[cut:], "gif", cut + len(comment)),
+    }
+
+
+_STREAMS = _planted_streams()
+
+
+@st.composite
+def _mutation(draw):
+    """(stream name, mutated bytes, whether the planted strings must be
+    gone).  Truncation anywhere and bit flips after the metadata
+    carriers must leave no planted string; bit flips anywhere need only
+    leave the row function standing (see the test docstring)."""
+    name = draw(st.sampled_from(sorted(_STREAMS)))
+    data, _, end = _STREAMS[name]
+    kind = draw(st.sampled_from(("as_is", "truncate", "flip_payload",
+                                 "flip_any")))
+    if kind == "truncate":
+        return name, data[:draw(st.integers(0, len(data) - 1))], True
+    buf = bytearray(data)
+    if kind != "as_is":
+        lo = 0 if kind == "flip_any" else end
+        for pos in draw(st.lists(st.integers(lo, len(buf) - 1),
+                                 min_size=1, max_size=4)):
+            buf[pos] ^= 1 << draw(st.integers(0, 7))
+    return name, bytes(buf), kind != "flip_any"
+
+
+@settings(max_examples=400, deadline=None)
+@given(_mutation())
+def test_metadata_scrub_row_fuzz_fails_closed(mutation):
+    """The guarded metadata-scrub row, in process, over mutated JPEG,
+    PNG, WebP and GIF streams that plant a GPS IFD, a serial and an
+    owner string: it never raises, a ``corrupt`` row has NULL bytes, and
+    no output holds a planted string or (JPEG) a GPS IFD.
+
+    Flips inside the carriers themselves are held only to the first
+    property: the scrub removes tags and chunks by name, so a flip that
+    renames a carrier (an APP1 marker, a PNG chunk type, a GIF label, a
+    PII tag id) or widens a kept tag's count over other bytes carries
+    them through as unknown data."""
+    from pii_redactor_spark.operators.rows import guard
+    from pii_redactor_spark.operators.vision import _metadata_scrub_row
+
+    name, data, must_be_clean = mutation
+    fmt = _STREAMS[name][1]
+    scrub = guard(*_metadata_scrub_row(strip_device=False,
+                                       strip_timestamps=False))
+    (row,) = scrub("x", data, fmt)
+    out, flag = row[1], row[-1]
+    assert flag in ("ok", "corrupt")
+    assert (out is None) == (flag == "corrupt")
+    if out is None or not must_be_clean:
+        return
+    assert not any(m in out for m in _PLANTED), name
+    if fmt == "jpeg":
+        parsed = E.extract_exif(out)
+        assert parsed is None or parsed["gps"] == {}, name
+
+
+def test_planted_streams_scrub_clean_as_is():
+    """Unmutated, every planted stream scrubs ``ok`` with nothing planted
+    left, except a JPEG whose GPS pointer is retyped: that one is
+    ``corrupt`` (a PNG ``eXIf`` or WebP ``EXIF`` carrier holding the same
+    TIFF is dropped whole instead)."""
+    from pii_redactor_spark.operators.rows import guard
+    from pii_redactor_spark.operators.vision import _metadata_scrub_row
+
+    scrub = guard(*_metadata_scrub_row(strip_device=False,
+                                       strip_timestamps=False))
+    flags = {}
+    for name, (data, fmt, _) in _STREAMS.items():
+        assert sum(data.count(m) for m in _PLANTED) > 0 or "64622" in name
+        (row,) = scrub("x", data, fmt)
+        flags[name] = row[-1]
+        if row[-1] == "ok":
+            assert not any(m in row[1] for m in _PLANTED), name
+    assert flags == {
+        name: "corrupt" if name.startswith("jpeg_gps_") else "ok"
+        for name in _STREAMS
+    }

@@ -146,32 +146,55 @@ def test_encoding_latin1_round_trip(spark, tmp_root):
     assert "[EMAIL_REDACTED]" in got  # redaction really ran
 
 
+def test_encoding_python_alias_end_to_end(spark, tmp_root):
+    """A Python alias of a charset Spark's CSV source accepts
+    (``latin-1`` for ISO-8859-1) runs end to end under both
+    ``blank_lines`` values: it is passed to Spark under its Spark name."""
+    inp = f"{tmp_root}/alias_in.txt"
+    lines = ["café owner María, mail cafe@muenchen.de", "",
+             "l'été à Paris, tél 01-23-45-67-89"]
+    with open(inp, "wb") as f:
+        f.write(("\n".join(lines[::2]) + "\n").encode("latin-1"))
+    want = "".join(scrub_text(l).scrubbed + "\n" for l in lines if l)
+    scrub_text_file(spark, inp, f"{tmp_root}/alias_out", encoding="latin-1")
+    assert _concat_parts(f"{tmp_root}/alias_out", encoding="latin-1") == want
+    with open(inp, "wb") as f:
+        f.write(("\n".join(lines) + "\n").encode("latin-1"))
+    scrub_text_file(spark, inp, f"{tmp_root}/alias_drop_out",
+                    encoding="latin-1", blank_lines="drop")
+    assert _concat_parts(f"{tmp_root}/alias_drop_out",
+                         encoding="latin-1") == want
+
+
 def test_non_ascii_compatible_encodings_rejected(spark, tmp_root):
     """Round-3 advice: UTF-16/32 (wide code units) and EBCDIC (non-ASCII
     single-byte) break the CSV line path's newline framing — they must
     fail loudly up front, never silently corrupt lines at split
-    boundaries.  ASCII-compatible charsets keep working."""
+    boundaries.  Other single-byte names (cp1252, KOI8, Shift_JIS) fail
+    up front too: Spark's CSV source rejects them mid-job.  ISO-8859-1
+    and US-ASCII keep working under any alias."""
     import pytest
 
     from pii_redactor_spark.sources.textfile import (
-        _require_ascii_compatible,
+        _csv_charset,
         read_text_lines,
     )
 
     inp = f"{tmp_root}/wide_in.txt"
     with open(inp, "wb") as f:
         f.write("hello\nworld\n".encode("utf-16"))
-    for bad in ("UTF-16", "utf-32", "UTF-16LE", "cp500"):
+    for bad in ("UTF-16", "utf-32", "UTF-16LE", "cp500", "cp1252", "koi8-r",
+                "shift_jis"):
         with pytest.raises(ValueError, match="ASCII-compatible"):
             read_text_lines(spark, inp, encoding=bad)
         with pytest.raises(ValueError, match="ASCII-compatible"):
             scrub_text_file(spark, inp, f"{tmp_root}/wide_out",
                             encoding=bad)
     with pytest.raises(ValueError, match="unknown encoding"):
-        _require_ascii_compatible("no-such-charset")
-    # the single-byte / UTF-8-family allow side stays open
-    for ok in ("ISO-8859-1", "latin-1", "cp1252", "koi8-r", "shift_jis"):
-        _require_ascii_compatible(ok)
+        _csv_charset("no-such-charset")
+    # the ASCII-compatible charsets Spark's CSV source takes, any alias
+    for ok in ("ISO-8859-1", "latin-1", "US-ASCII", "ascii"):
+        _csv_charset(ok)
 
 
 def test_encoding_blank_lines_error_and_drop(spark, tmp_root):
