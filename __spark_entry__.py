@@ -19,12 +19,90 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# ---------------------------------------------------------------------------
+# Money: one exact integer-cents rule, as a Spark Column and as DuckDB SQL
+# ---------------------------------------------------------------------------
+
+def money(
+    x: Column | str,
+    *,
+    rate: Column | None = None,
+    per: Column | int | None = None,
+    over: WindowSpec | None = None,
+) -> Column:
+    """The money aggregate every contract query uses: ``SUM(x)`` (times
+    ``rate`` per row, divided by ``per``) as an exact 2-decimal double.
+    ``money_sql`` is the same rule as DuckDB SQL for the oracles.
+
+    Why not ``round(sum(double), 2)``: (1) a double sum depends on the
+    partial-aggregation merge order, which follows shuffle fetch order,
+    so its last ulp differs run to run and engine to engine; (2) even on
+    a bit-identical double, Spark's round() goes through Java
+    ``BigDecimal.valueOf`` (the SHORTEST decimal repr, so "153.855"
+    rounds up) while DuckDB and Python round the EXACT binary expansion
+    (153.85499... rounds down).  A group that sums to a half cent — or
+    any exact-decimal quotient such as cents / quantity — lands on
+    different cents in the two engines.
+
+    The rule, identical in both engines:
+
+    - each ``x`` (and ``rate``, a fraction in whole percents such as
+      ``1 - l_discount``) becomes whole units with ``ROUND(v * 100)`` cast
+      to BIGINT; every money column holds whole cents, so the product
+      never sits near .5 and this is exact;
+    - the units sum as integers, in any order;
+    - where the unit is finer than a cent (``rate``: cents × percent) or
+      a divisor applies (``per``: a constant, ``COUNT(x)`` for an
+      average, or an integer aggregate), the sum P is rounded over
+      Q = unit × divisor with one integer division,
+      ``(2P + sign(P)·Q) div (2Q)``: half away from zero, like ROUND.
+      Both engines truncate integer division toward zero, so the
+      ``sign(P)`` term is what keeps a negative quotient (an average
+      balance) rounding like a positive one;
+    - one exact ``/ 100.0`` at the end.
+
+    Range: the cents × percent units of one group must stay below 2^63
+    (Spark's BIGINT sum errors past it under ANSI; DuckDB widens to
+    HUGEINT).  At about 5e8 units per lineitem that holds for a sum over
+    the whole lineitem table up to roughly sf1000."""
+    x = F.col(x) if isinstance(x, str) else x
+    units = F.round(x * 100).cast("long")
+    if rate is not None:
+        units = units * F.round(rate * 100).cast("long")
+    p = F.sum(units) if over is None else F.sum(units).over(over)
+    if per is None and rate is None:
+        return p / 100.0
+    q = per if isinstance(per, Column) else F.lit(per or 1)
+    if rate is not None:
+        q = q * 100
+    half_up = 2 * p + F.when(p < 0, -q).otherwise(q)
+    return F.call_function("div", half_up, 2 * q) / 100.0
+
+
+def money_sql(
+    x: str, *, rate: str | None = None, per: str | None = None,
+    over: str | None = None,
+) -> str:
+    """``money`` as a DuckDB SQL fragment; see ``money`` for the rule.
+    ``over`` is the text of a window definition (``PARTITION BY …``)."""
+    units = f"CAST(ROUND(({x}) * 100) AS BIGINT)"
+    if rate is not None:
+        units += f" * CAST(ROUND(({rate}) * 100) AS BIGINT)"
+    p = f"SUM({units})" + ("" if over is None else f" OVER ({over})")
+    if per is None and rate is None:
+        return f"({p} / 100.0)"
+    q = f"({per or 1})"
+    if rate is not None:
+        q += " * 100"
+    return f"(((2 * {p} + SIGN({p}) * {q}) // (2 * {q})) / 100.0)"
 
 
 # ---------------------------------------------------------------------------
@@ -58,11 +136,11 @@ def q_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
         li.where(F.col("l_shipdate") <= F.lit("1998-09-01"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
+            F.sum("l_quantity").alias("sum_qty"),
+            money("l_extendedprice").alias("sum_base_price"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "sum_disc_price"
+            ),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.count("*").alias("count_order"),
         )
@@ -79,9 +157,9 @@ def q_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy("o_orderkey")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "revenue"
+            )
         )
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
@@ -102,9 +180,9 @@ def q_local_supplier_volume(spark: SparkSession, sf: str) -> DataFrame:
         .join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_items"),
         )
     )
@@ -185,7 +263,7 @@ def q_revenue_rollup(spark: SparkSession, sf: str) -> DataFrame:
         orders.withColumn("order_year", F.year("o_orderdate"))
         .rollup("order_year", "o_orderpriority")
         .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+            money("o_totalprice").alias("revenue"),
             F.count("*").alias("n_orders"),
         )
     )
@@ -221,11 +299,11 @@ def q_customer_spend_deciles(spark: SparkSession, sf: str) -> DataFrame:
     global sort); the ranking window then runs over the driver-bounded
     100-row frame, so the empty-partitionBy window is O(k) — the same
     pattern as q_corpus_token_zipf, never a whole-table single-partition
-    window.  Ordering ranks the ROUNDED spend (with custkey tiebreak) so
-    cross-engine double-summation noise cannot reorder near-equal rows."""
+    window.  Spend is ``money`` (exact, order-independent), ranked with a
+    custkey tiebreak, so both engines order near-equal rows the same."""
     orders = _t(spark, sf, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.round(F.sum("o_totalprice"), 2).alias("spend")
+        money("o_totalprice").alias("spend")
     )
     top = spend.orderBy(F.col("spend").desc(), "o_custkey").limit(100)
     w = Window.orderBy(F.col("spend").desc(), "o_custkey")
@@ -245,7 +323,7 @@ def q_revenue_cube(spark: SparkSession, sf: str) -> DataFrame:
     per-grouping-set rescan."""
     li = _t(spark, sf, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_extendedprice"), 2).alias("revenue"),
+        money("l_extendedprice").alias("revenue"),
         F.count("*").alias("n_items"),
         F.grouping_id().cast("int").alias("gid"),
     )
@@ -303,7 +381,7 @@ def q_orders_monthly_growth(spark: SparkSession, sf: str) -> DataFrame:
     monthly = (
         orders.withColumn("month", F.date_trunc("month", "o_orderdate"))
         .groupBy("month")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
+        .agg(money("o_totalprice").alias("revenue"))
     )
     w = Window.orderBy("month")
     return (
@@ -332,7 +410,7 @@ def q_events_hourly(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("day", "hour", "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+            money("value").alias("total_value"),
         )
     )
 
@@ -368,7 +446,7 @@ def q_events_running_total(spark: SparkSession, sf: str) -> DataFrame:
     return ev.select(
         "user_id",
         "event_id",
-        F.round(F.sum("value").over(w), 2).alias("running_value"),
+        money("value", over=w).alias("running_value"),
     )
 
 
@@ -421,13 +499,13 @@ def q_events_sessions(spark: SparkSession, sf: str) -> DataFrame:
         sess.groupBy("user_id", "session_no")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
+            money("value").alias("session_value"),
         )
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_sessions"),
             F.round(F.avg("n_events"), 4).alias("avg_events_per_session"),
-            F.round(F.sum("session_value"), 2).alias("total_value"),
+            money("session_value").alias("total_value"),
         )
     )
 
@@ -480,7 +558,7 @@ def q_events_session_windows(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
+            money("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -517,7 +595,7 @@ def q_events_value_band_join(spark: SparkSession, sf: str) -> DataFrame:
     return j.groupBy("band_id", "lo", "hi").agg(
         F.count("*").alias("n_events"),
         F.round(F.avg("value"), 4).alias("avg_value"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
+        money("value").alias("sum_value"),
     )
 
 
@@ -595,9 +673,9 @@ def q_part_supplier_revenue(spark: SparkSession, sf: str) -> DataFrame:
         .join(nation, supp.s_nationkey == nation.n_nationkey)
         .groupBy("p_brand", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_items"),
         )
     )
@@ -636,7 +714,7 @@ def q_small_qty_order_revenue(spark: SparkSession, sf: str) -> DataFrame:
         li.join(thr, li.l_partkey == thr.pk)
         .where(F.col("l_quantity") < F.col("qty_thr"))
         .agg(
-            F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"),
+            money("l_extendedprice", per=7).alias("avg_yearly"),
             F.count("*").alias("n_items"),
         )
     )
@@ -674,15 +752,13 @@ def q_supplier_balance_share(spark: SparkSession, sf: str) -> DataFrame:
     over one row — constant cost at any scale)."""
     supp = _t(spark, sf, "supplier")
     per_nation = supp.groupBy("s_nationkey").agg(
-        F.sum("s_acctbal").alias("nation_bal")
+        money("s_acctbal").alias("nation_bal")
     )
-    total = supp.agg((F.sum("s_acctbal") * 0.04).alias("bal_thr"))
+    total = supp.agg((money("s_acctbal") * 0.04).alias("bal_thr"))
     return (
         per_nation.crossJoin(F.broadcast(total))
         .where(F.col("nation_bal") > F.col("bal_thr"))
-        .select(
-            "s_nationkey", F.round("nation_bal", 2).alias("nation_bal")
-        )
+        .select("s_nationkey", "nation_bal")
     )
 
 
@@ -698,7 +774,7 @@ def q_events_type_pivot(spark: SparkSession, sf: str) -> DataFrame:
     pivoted = (
         events.groupBy("user_id")
         .pivot("event_type", EVENT_TYPES)
-        .agg(F.round(F.sum("value"), 2))
+        .agg(money("value"))
     )
     return pivoted
 
@@ -769,28 +845,20 @@ def q_nation_market_share(spark: SparkSession, sf: str) -> DataFrame:
         .join(supp_nation, li.l_suppkey == F.col("s_suppkey"))
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust_region, orders.o_custkey == F.col("c_custkey"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            "supp_nation",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "volume"
-            ),
+        .groupBy(F.year("o_orderdate").alias("o_year"), "supp_nation")
+        .agg(
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "nation_volume"
+            )
         )
-        .groupBy("o_year", "supp_nation")
-        .agg(F.sum("volume").alias("nation_volume"))
     )
     w = Window.partitionBy("o_year")
-    rounded = rev.select(
-        "o_year",
-        "supp_nation",
-        F.round("nation_volume", 2).alias("nation_volume"),
-    )
-    return rounded.select(
+    return rev.select(
         "o_year",
         "supp_nation",
         "nation_volume",
         F.round(
-            F.col("nation_volume") / F.sum("nation_volume").over(w), 4
+            F.col("nation_volume") / money("nation_volume", over=w), 4
         ).alias("mkt_share"),
     )
 
@@ -799,23 +867,20 @@ def q_promo_revenue_share(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q14 shape (promotion effect): per ship month, the revenue
     fraction coming from PROMO-type parts.  One broadcast dim join plus a
     conditional aggregation — the share is a ratio of two sums computed in
-    the same grouped pass, never a second scan.  Both sums are rounded to 2
-    decimals BEFORE the division so the ratio of two correctly-rounded
-    doubles is bit-identical across engines (sum order is not)."""
+    the same grouped pass, never a second scan.  Both sums are ``money``,
+    so their ratio is bit-identical across engines."""
     part = F.broadcast(_t(spark, sf, "part").select("p_partkey", "p_type"))
     li = _t(spark, sf, "lineitem").where(
         F.col("l_shipdate").between("1996-01-01", "1996-12-31")
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    promo = F.when(F.col("p_type") == "PROMO", F.col("l_extendedprice"))
+    rate = 1 - F.col("l_discount")
     agg = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
         .agg(
-            F.round(
-                F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))),
-                2,
-            ).alias("promo_revenue"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
+            money(promo.otherwise(0.0), rate=rate).alias("promo_revenue"),
+            money("l_extendedprice", rate=rate).alias("total_revenue"),
         )
     )
     return agg.select(
@@ -835,14 +900,14 @@ def q_valuable_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
     threshold is a 1-row aggregate cross-joined in (BroadcastNestedLoopJoin
     over one row — free); "lapsed" is a LEFT ANTI join on custkey against
     the date-filtered orders, the filter pushed to the orders scan.  The
-    threshold is rounded to 2 decimals on both engines so the > comparison
-    cannot flip on sum-order float noise."""
+    threshold is a ``money`` average, so the > comparison cannot flip on
+    sum-order float noise."""
     cust = _t(spark, sf, "customer")
     orders = _t(spark, sf, "orders").where(
         F.col("o_orderdate") >= F.lit("1999-01-01")
     )
     thresh = cust.where(F.col("c_acctbal") > 0).agg(
-        F.round(F.avg("c_acctbal"), 2).alias("avg_bal")
+        money("c_acctbal", per=F.count("c_acctbal")).alias("avg_bal")
     )
     return (
         cust.crossJoin(F.broadcast(thresh))
@@ -851,7 +916,7 @@ def q_valuable_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_balance"),
+            money("c_acctbal").alias("total_balance"),
         )
     )
 
@@ -865,24 +930,13 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB oracle instead uses QUALIFY row_number() = 1, deliberately a
     different mechanism for the same semantics.
 
-    The unit price is the quantity-weighted SUM(price)/SUM(qty) in
-    ALL-INTEGER cent arithmetic: round 5's tri-scale sweep caught the
-    previous AVG(double)-then-ROUND flipping a cent at 8 of 3,919 sf0.1
-    parts, for TWO stacked reasons: (1) float partial-aggregation merge
-    order is shuffle-fetch-order dependent, so the last ulp of AVG is
-    nondeterministic run-to-run; (2) even on a bit-identical double,
-    Spark's round() goes through Java BigDecimal.valueOf (the SHORTEST
-    decimal repr — "153.855" rounds UP) while DuckDB/Python round the
-    EXACT binary expansion (153.85499999... rounds DOWN), so any
-    quotient whose shortest repr lands on a .xx5 boundary diverges
-    across engines deterministically.  Integer cents (per-row *100
-    rounding can never sit near .5 for 2-decimal inputs), integer
-    half-up division ``(2P + Q) div (2Q)``, and one exact /100.0 are
-    bit-equal everywhere.  Ties break on the smaller suppkey via the
-    struct order.  The part filter reaches lineitem BEFORE the first
-    aggregation (broadcast semi-join — Catalyst cannot push an inner
-    join below two aggs itself), so no hash-agg state is built for
-    parts the final join would drop."""
+    The unit price is the quantity-weighted SUM(price)/SUM(qty), a
+    ``money`` quotient: AVG(double)-then-ROUND flipped a cent at 8 of
+    3,919 sf0.1 parts (see ``money`` for why).  Ties break on the
+    smaller suppkey via the struct order.  The part filter reaches
+    lineitem BEFORE the first aggregation (broadcast semi-join —
+    Catalyst cannot push an inner join below two aggs itself), so no
+    hash-agg state is built for parts the final join would drop."""
     part = F.broadcast(
         _t(spark, sf, "part")
         .where(F.col("p_size") <= 10)
@@ -893,20 +947,10 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l_partkey") == F.col("p_partkey"),
         "left_semi",
     )
-    per_supp = (
-        li.groupBy("l_partkey", "l_suppkey")
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("_pc"),
-            F.sum(F.round(F.col("l_quantity")).cast("long")).alias("_q"),
-        )
-        .select(
-            "l_partkey",
-            "l_suppkey",
-            (F.expr("(2 * _pc + _q) div (2 * _q)") / 100.0)
-            .alias("avg_unit_price"),
-        )
+    per_supp = li.groupBy("l_partkey", "l_suppkey").agg(
+        money(
+            "l_extendedprice", per=F.sum(F.col("l_quantity").cast("long"))
+        ).alias("avg_unit_price")
     )
     best = (
         per_supp.groupBy("l_partkey")
@@ -2134,10 +2178,9 @@ def q_nation_pair_volume(spark: SparkSession, sf: str) -> DataFrame:
             F.year("l_shipdate").alias("l_year"),
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("revenue"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2174,10 +2217,9 @@ def q_supplier_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
             "supp_nation", F.year("o_orderdate").alias("o_year")
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("profit"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "profit"
+            ),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2186,16 +2228,13 @@ def q_supplier_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
 def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item reporting): the 20 customers who
     lost the most revenue to returned lineitems ('R' flag) on orders
-    placed in 1996H1.  Revenue is ALL-INTEGER cent×percent arithmetic
-    (see q_cheapest_supplier_per_part: doubles summed under shuffle-
-    fetch merge order are last-ulp nondeterministic, and a top-k cut
-    line must be bit-stable across engines); the exact /10000.0 at the
-    end is the only float op.  Plan shape for scale: both filters push
-    into their scans, lineitem⋈orders is the one big shuffle, the
-    per-customer aggregate REDUCES to ≤|customer| rows BEFORE touching
-    the customer table (never join-then-aggregate a wide row), nation
-    is broadcast, and the top-20 is a TakeOrdered (per-partition heaps,
-    no global sort).  Ties break on c_custkey."""
+    placed in 1996H1.  Revenue is ``money``, so the top-k cut line is
+    bit-stable across engines and runs.  Plan shape for scale: both
+    filters push into their scans, lineitem⋈orders is the one big
+    shuffle, the per-customer aggregate REDUCES to ≤|customer| rows
+    BEFORE touching the customer table (never join-then-aggregate a wide
+    row), nation is broadcast, and the top-20 is a TakeOrdered
+    (per-partition heaps, no global sort).  Ties break on c_custkey."""
     li = _t(spark, sf, "lineitem").where(F.col("l_returnflag") == "R")
     orders = (
         _t(spark, sf, "orders")
@@ -2209,10 +2248,9 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey")
         .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (100 - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("_rc"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "lost_revenue"
+            ),
             F.count("*").alias("n_returned_lines"),
         )
     )
@@ -2224,13 +2262,13 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         per_cust.join(cust, per_cust.o_custkey == cust.c_custkey)
-        .orderBy(F.col("_rc").desc(), F.col("c_custkey"))
+        .orderBy(F.col("lost_revenue").desc(), F.col("c_custkey"))
         .limit(20)
         .select(
             "c_custkey",
             "c_name",
             "n_name",
-            (F.col("_rc") / 10000.0).alias("lost_revenue"),
+            "lost_revenue",
             "n_returned_lines",
             "c_acctbal",
         )
@@ -2239,16 +2277,15 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_top_revenue_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): the supplier(s) whose shipped
-    revenue over 1996Q1 equals the global maximum.  Revenue is integer
-    cent×percent units so the equality-with-max predicate is exact in
-    both engines (a double SUM could differ in the last ulp between
-    Spark and DuckDB — or between two Spark runs — and silently drop /
-    add a tied supplier).  Plan shape: one shuffle aggregate on
-    l_suppkey, a 1-row global max tree-reduced from the SAME aggregate
-    (Catalyst reuses the exchange), broadcast back as a single-row
-    join, then a broadcast supplier-name lookup; no window over an
-    unpartitioned frame (which would funnel every supplier through one
-    task at scale)."""
+    revenue over 1996Q1 equals the global maximum.  Revenue is ``money``,
+    so the equality-with-max predicate is exact in both engines (a
+    double SUM could differ in the last ulp between Spark and DuckDB —
+    or between two Spark runs — and silently drop or add a tied
+    supplier).  Plan shape: one shuffle aggregate on l_suppkey, a 1-row
+    global max tree-reduced from the SAME aggregate (Catalyst reuses the
+    exchange), broadcast back as a single-row join, then a broadcast
+    supplier-name lookup; no window over an unpartitioned frame (which
+    would funnel every supplier through one task at scale)."""
     li = _t(spark, sf, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1996-04-01")
@@ -2259,25 +2296,20 @@ def q_top_revenue_supplier(spark: SparkSession, sf: str) -> DataFrame:
         & F.col("l_suppkey").isNotNull()
     )
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (100 - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rc")
+        money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+            "total_revenue"
+        )
     )
     top = rev.join(
-        F.broadcast(rev.groupBy().agg(F.max("_rc").alias("_m"))),
-        F.col("_rc") == F.col("_m"),
+        F.broadcast(rev.groupBy().agg(F.max("total_revenue").alias("_m"))),
+        F.col("total_revenue") == F.col("_m"),
     )
     supp = F.broadcast(
         _t(spark, sf, "supplier").select("s_suppkey", "s_name")
     )
     return (
         top.join(supp, top.l_suppkey == supp.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            (F.col("_rc") / 10000.0).alias("total_revenue"),
-        )
+        .select("s_suppkey", "s_name", "total_revenue")
     )
 
 
@@ -2286,8 +2318,8 @@ def q_important_part_value(spark: SparkSession, sf: str) -> DataFrame:
     reduced schema has no partsupp, so a part's "stock value" is its
     shipped extendedprice from suppliers in nations 0-4): parts whose
     value exceeds 2x the per-part average.  The threshold is expressed
-    scale-free (value * n_parts > 2 * total) and in INTEGER cents, so
-    the keep/drop cut is exact in both engines at every SF — TPC-H's
+    scale-free (value * n_parts > 2 * total) over ``money`` values, so
+    both engines make the same IEEE comparison at every SF — TPC-H's
     own 0.0001/SF fraction bakes the scale factor into the query text,
     which a tri-scale oracle check can't do.  Plan shape: the supplier
     filter is a broadcast semi-join (never shuffles lineitem by
@@ -2303,23 +2335,14 @@ def q_important_part_value(spark: SparkSession, sf: str) -> DataFrame:
     pv = (
         li.join(supp, li.l_suppkey == supp.s_suppkey, "left_semi")
         .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("_cents")
-        )
+        .agg(money("l_extendedprice").alias("value"))
     )
     tot = F.broadcast(
-        pv.groupBy().agg(
-            F.sum("_cents").alias("_t"), F.count("*").alias("_n")
-        )
+        pv.groupBy().agg(money("value").alias("_t"), F.count("*").alias("_n"))
     )
     return (
-        pv.join(tot, F.col("_cents") * F.col("_n") > F.lit(2) * F.col("_t"))
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            (F.col("_cents") / 100.0).alias("value"),
-        )
+        pv.join(tot, F.col("value") * F.col("_n") > 2 * F.col("_t"))
+        .select(F.col("l_partkey").alias("p_partkey"), "value")
         .orderBy(F.col("value").desc(), "p_partkey")
     )
 
@@ -2499,9 +2522,9 @@ def q_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2
-            ).alias("revenue"),
+            money("l_extendedprice", rate=F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2558,10 +2581,9 @@ def q_brand_size_revenue(spark: SparkSession, sf: str) -> DataFrame:
     return (
         li.join(part, (li.l_partkey == part.p_partkey) & bands)
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("revenue"),
+            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_lines"),
         )
     )
@@ -3072,6 +3094,7 @@ def oracle_sql() -> dict[str, str]:
     )
     scrub_path, ent_path = materialize_scrub_oracle(oracle_sf)
     emb_path = materialize_embedding_oracle(oracle_sf)
+    disc_revenue = money_sql("l_extendedprice", rate="1 - l_discount")
     return {
         "embedding_kept_lsh_hist": f"""
             SELECT e.lsh_bucket, COUNT(*) AS n_vectors
@@ -3133,8 +3156,8 @@ def oracle_sql() -> dict[str, str]:
                 GROUP BY c_custkey
             ) GROUP BY n_orders
         """,
-        "small_qty_order_revenue": """
-            SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly,
+        "small_qty_order_revenue": f"""
+            SELECT {money_sql("l_extendedprice", per="7")} AS avg_yearly,
                    COUNT(*) AS n_items
             FROM lineitem l JOIN (
                 SELECT l_partkey AS pk, 0.5 * AVG(l_quantity) AS qty_thr
@@ -3153,25 +3176,17 @@ def oracle_sql() -> dict[str, str]:
               ON o_orderkey = big.l_orderkey
             JOIN customer ON o_custkey = c_custkey
         """,
-        "supplier_balance_share": """
-            SELECT s_nationkey, ROUND(SUM(s_acctbal), 2) AS nation_bal
+        "supplier_balance_share": f"""
+            SELECT s_nationkey, {money_sql("s_acctbal")} AS nation_bal
             FROM supplier
             GROUP BY s_nationkey
-            HAVING SUM(s_acctbal) >
-                   (SELECT SUM(s_acctbal) * 0.04 FROM supplier)
+            HAVING nation_bal >
+                   (SELECT {money_sql("s_acctbal")} * 0.04 FROM supplier)
         """,
-        "events_type_pivot": """
-            SELECT user_id,
-                   ROUND(SUM(CASE WHEN event_type = 'click'
-                             THEN value END), 2) AS click,
-                   ROUND(SUM(CASE WHEN event_type = 'error'
-                             THEN value END), 2) AS error,
-                   ROUND(SUM(CASE WHEN event_type = 'purchase'
-                             THEN value END), 2) AS purchase,
-                   ROUND(SUM(CASE WHEN event_type = 'signup'
-                             THEN value END), 2) AS signup,
-                   ROUND(SUM(CASE WHEN event_type = 'view'
-                             THEN value END), 2) AS "view"
+        "events_type_pivot": f"""
+            SELECT user_id, {", ".join(
+                money_sql(f"CASE WHEN event_type = '{t}' THEN value END")
+                + f' AS "{t}"' for t in EVENT_TYPES)}
             FROM events GROUP BY user_id
         """,
         "corpus_token_zipf": """
@@ -3326,20 +3341,19 @@ def oracle_sql() -> dict[str, str]:
             FROM normd
             WHERE SUBSTRING(MD5(norm), 1, 1) IN ('0', '1', '2', '3')
         """,
-        "pricing_summary": """
+        "pricing_summary": f"""
             SELECT l_returnflag, l_linestatus,
-                   ROUND(SUM(l_quantity), 2) AS sum_qty,
-                   ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   SUM(l_quantity) AS sum_qty,
+                   {money_sql("l_extendedprice")} AS sum_base_price,
+                   {disc_revenue} AS sum_disc_price,
                    ROUND(AVG(l_quantity), 4) AS avg_qty,
                    COUNT(*) AS count_order
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '1998-09-01'
             GROUP BY l_returnflag, l_linestatus
         """,
-        "shipping_priority": """
-            SELECT o_orderkey,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        "shipping_priority": f"""
+            SELECT o_orderkey, {disc_revenue} AS revenue
             FROM customer JOIN orders ON c_custkey = o_custkey
                           JOIN lineitem ON o_orderkey = l_orderkey
             WHERE c_mktsegment = 'BUILDING'
@@ -3347,9 +3361,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY revenue DESC, o_orderkey
             LIMIT 10
         """,
-        "local_supplier_volume": """
-            SELECT n_name,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        "local_supplier_volume": f"""
+            SELECT n_name, {disc_revenue} AS revenue,
                    COUNT(*) AS n_items
             FROM region JOIN nation ON r_regionkey = n_regionkey
                         JOIN customer ON n_nationkey = c_nationkey
@@ -3399,9 +3412,9 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 20
         """,
-        "revenue_rollup": """
+        "revenue_rollup": f"""
             SELECT YEAR(o_orderdate) AS order_year, o_orderpriority,
-                   ROUND(SUM(o_totalprice), 2) AS revenue,
+                   {money_sql("o_totalprice")} AS revenue,
                    COUNT(*) AS n_orders
             FROM orders
             GROUP BY ROLLUP(order_year, o_orderpriority)
@@ -3421,14 +3434,14 @@ def oracle_sql() -> dict[str, str]:
                                 AND o_totalprice > 150000)
             GROUP BY c_mktsegment
         """,
-        "orders_monthly_growth": """
+        "orders_monthly_growth": f"""
             SELECT STRFTIME(month, '%Y-%m') AS month, revenue,
                    ROUND((revenue - LAG(revenue) OVER (ORDER BY month))
                          / LAG(revenue) OVER (ORDER BY month) * 100, 4)
                        AS growth_pct
             FROM (
                 SELECT DATE_TRUNC('month', o_orderdate) AS month,
-                       ROUND(SUM(o_totalprice), 2) AS revenue
+                       {money_sql("o_totalprice")} AS revenue
                 FROM orders GROUP BY month
             )
         """,
@@ -3443,9 +3456,9 @@ def oracle_sql() -> dict[str, str]:
                    MAX(n_chars) AS max_chars
             FROM documents GROUP BY lang
         """,
-        "events_hourly": """
+        "events_hourly": f"""
             SELECT STRFTIME(ts, '%Y-%m-%d') AS day, CAST(HOUR(ts) AS INT) AS hour, event_type,
-                   COUNT(*) AS n_events, ROUND(SUM(value), 2) AS total_value
+                   COUNT(*) AS n_events, {money_sql("value")} AS total_value
             FROM events
             GROUP BY day, hour, event_type
         """,
@@ -3469,15 +3482,15 @@ def oracle_sql() -> dict[str, str]:
                          RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
                          AND CURRENT ROW)
         """,
-        "events_running_total": """
+        "events_running_total": f"""
             SELECT user_id, event_id,
-                   ROUND(SUM(value) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id
-                                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND CURRENT ROW), 2) AS running_value
+                   {money_sql("value", over=(
+                       "PARTITION BY user_id ORDER BY ts, event_id "
+                       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"))}
+                       AS running_value
             FROM events
         """,
-        "events_sessions": """
+        "events_sessions": f"""
             WITH gaps AS (
                 SELECT user_id, value,
                        CASE WHEN EPOCH(ts) - EPOCH(LAG(ts) OVER
@@ -3497,12 +3510,12 @@ def oracle_sql() -> dict[str, str]:
                 FROM gaps
             ), per_session AS (
                 SELECT user_id, session_no, COUNT(*) AS n_events,
-                       ROUND(SUM(value), 2) AS session_value
+                       {money_sql("value")} AS session_value
                 FROM sess GROUP BY user_id, session_no
             )
             SELECT user_id, COUNT(*) AS n_sessions,
                    ROUND(AVG(n_events), 4) AS avg_events_per_session,
-                   ROUND(SUM(session_value), 2) AS total_value
+                   {money_sql("session_value")} AS total_value
             FROM per_session GROUP BY user_id
         """,
         "events_asof_join": """
@@ -3522,7 +3535,7 @@ def oracle_sql() -> dict[str, str]:
             ) v ON true
             GROUP BY c.user_id
         """,
-        "events_session_windows": """
+        "events_session_windows": f"""
             WITH gaps AS (
                 SELECT user_id, ts, value,
                        CASE WHEN EPOCH(ts) - EPOCH(LAG(ts) OVER
@@ -3546,10 +3559,10 @@ def oracle_sql() -> dict[str, str]:
                    STRFTIME(MAX(ts) + INTERVAL 30 MINUTE,
                             '%Y-%m-%d %H:%M:%S') AS session_end,
                    COUNT(*) AS n_events,
-                   ROUND(SUM(value), 2) AS session_value
+                   {money_sql("value")} AS session_value
             FROM sess GROUP BY user_id, session_no
         """,
-        "events_value_band_join": """
+        "events_value_band_join": f"""
             WITH bands AS (
                 SELECT CAST(i AS INT) AS band_id,
                        i * 25.0 - 20.0 AS lo,
@@ -3559,7 +3572,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT band_id, lo, hi,
                    COUNT(*) AS n_events,
                    ROUND(AVG(value), 4) AS avg_value,
-                   ROUND(SUM(value), 2) AS sum_value
+                   {money_sql("value")} AS sum_value
             FROM events JOIN bands ON value >= lo AND value < hi
             GROUP BY 1, 2, 3
         """,
@@ -3607,9 +3620,8 @@ def oracle_sql() -> dict[str, str]:
             FROM events JOIN first_seen USING (user_id)
             GROUP BY 1, week_offset
         """,
-        "part_supplier_revenue": """
-            SELECT p_brand, n_name,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        "part_supplier_revenue": f"""
+            SELECT p_brand, n_name, {disc_revenue} AS revenue,
                    COUNT(*) AS n_items
             FROM lineitem JOIN part ON l_partkey = p_partkey
                           JOIN supplier ON l_suppkey = s_suppkey
@@ -3628,9 +3640,9 @@ def oracle_sql() -> dict[str, str]:
               ON a.blk = b.blk AND a.p_name < b.p_name
             WHERE LEVENSHTEIN(a.p_name, b.p_name) <= 3
         """,
-        "customer_spend_deciles": """
+        "customer_spend_deciles": f"""
             WITH spend AS (
-                SELECT o_custkey, ROUND(SUM(o_totalprice), 2) AS spend
+                SELECT o_custkey, {money_sql("o_totalprice")} AS spend
                 FROM orders GROUP BY o_custkey
             ), top AS (
                 SELECT o_custkey, spend FROM spend
@@ -3644,9 +3656,9 @@ def oracle_sql() -> dict[str, str]:
                        AS pct_rank
             FROM top
         """,
-        "revenue_cube": """
+        "revenue_cube": f"""
             SELECT l_returnflag, l_linestatus,
-                   ROUND(SUM(l_extendedprice), 2) AS revenue,
+                   {money_sql("l_extendedprice")} AS revenue,
                    COUNT(*) AS n_items,
                    CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid
             FROM lineitem
@@ -3694,12 +3706,11 @@ def oracle_sql() -> dict[str, str]:
             )
             GROUP BY event_type
         """,
-        "nation_market_share": """
+        "nation_market_share": f"""
             WITH rev AS (
                 SELECT CAST(YEAR(o_orderdate) AS INT) AS o_year,
                        n2.n_name AS supp_nation,
-                       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                           AS nation_volume
+                       {disc_revenue} AS nation_volume
                 FROM lineitem
                   JOIN part ON l_partkey = p_partkey
                            AND p_type = 'STANDARD'
@@ -3715,19 +3726,19 @@ def oracle_sql() -> dict[str, str]:
                 GROUP BY 1, 2
             )
             SELECT o_year, supp_nation, nation_volume,
-                   ROUND(nation_volume /
-                         SUM(nation_volume) OVER (PARTITION BY o_year), 4)
+                   ROUND(nation_volume / {money_sql(
+                       "nation_volume", over="PARTITION BY o_year")}, 4)
                        AS mkt_share
             FROM rev
         """,
-        "promo_revenue_share": """
+        "promo_revenue_share": f"""
             WITH agg AS (
                 SELECT STRFTIME(l_shipdate, '%Y-%m') AS ship_month,
-                       ROUND(SUM(CASE WHEN p_type = 'PROMO'
-                                 THEN l_extendedprice * (1 - l_discount)
-                                 ELSE 0.0 END), 2) AS promo_revenue,
-                       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                           AS total_revenue
+                       {money_sql(
+                           "CASE WHEN p_type = 'PROMO' THEN l_extendedprice"
+                           " ELSE 0.0 END", rate="1 - l_discount")}
+                           AS promo_revenue,
+                       {disc_revenue} AS total_revenue
                 FROM lineitem JOIN part ON l_partkey = p_partkey
                 WHERE l_shipdate BETWEEN DATE '1996-01-01'
                                      AND DATE '1996-12-31'
@@ -3738,31 +3749,25 @@ def oracle_sql() -> dict[str, str]:
                        AS promo_share_pct
             FROM agg
         """,
-        "valuable_idle_customers": """
+        "valuable_idle_customers": f"""
             SELECT c_mktsegment,
                    COUNT(*) AS n_customers,
-                   ROUND(SUM(c_acctbal), 2) AS total_balance
+                   {money_sql("c_acctbal")} AS total_balance
             FROM customer c
-            WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal), 2)
+            WHERE c_acctbal > (SELECT {money_sql(
+                                   "c_acctbal", per="COUNT(c_acctbal)")}
                                FROM customer WHERE c_acctbal > 0)
               AND NOT EXISTS (SELECT 1 FROM orders o
                               WHERE o.o_custkey = c.c_custkey
                                 AND o.o_orderdate >= DATE '1999-01-01')
             GROUP BY c_mktsegment
         """,
-        "cheapest_supplier_per_part": """
+        "cheapest_supplier_per_part": f"""
             WITH per_supp AS (
-                -- all-integer cent arithmetic: the only form that is
-                -- bit-equal across engines (AVG of doubles is
-                -- partial-merge-order dependent, and Spark/DuckDB round
-                -- a .xx5-shortest-repr double in OPPOSITE directions —
-                -- see the Spark-side docstring)
                 SELECT l_partkey, l_suppkey,
-                       ((2 * SUM(CAST(ROUND(l_extendedprice * 100)
-                                      AS BIGINT))
-                         + SUM(CAST(ROUND(l_quantity) AS BIGINT)))
-                        // (2 * SUM(CAST(ROUND(l_quantity) AS BIGINT))))
-                       / 100.0 AS avg_unit_price
+                       {money_sql("l_extendedprice",
+                                  per="SUM(CAST(l_quantity AS BIGINT))")}
+                           AS avg_unit_price
                 FROM lineitem
                 GROUP BY 1, 2
             )
@@ -4135,8 +4140,9 @@ def oracle_sql() -> dict[str, str]:
             JOIN m ON s.doc_id = m.image_id
             GROUP BY 1, 2
         """,
-        "forecast_revenue": """
-            SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
+        "forecast_revenue": f"""
+            SELECT {money_sql("l_extendedprice", rate="l_discount")}
+                       AS revenue,
                    COUNT(*) AS n_lines
             FROM lineitem
             WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
@@ -4155,9 +4161,8 @@ def oracle_sql() -> dict[str, str]:
               )
             GROUP BY o_orderpriority
         """,
-        "brand_size_revenue": """
-            SELECT ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue,
+        "brand_size_revenue": f"""
+            SELECT {disc_revenue} AS revenue,
                    COUNT(*) AS n_lines
             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
             WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 10
@@ -4315,12 +4320,11 @@ def oracle_sql() -> dict[str, str]:
             JOIN am ON s.doc_id = am.audio_id
             GROUP BY 1, 2, 3
         """,
-        "nation_pair_volume": """
+        "nation_pair_volume": f"""
             SELECT ns.n_name AS supp_nation,
                    nc.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS INT) AS l_year,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue,
+                   {disc_revenue} AS revenue,
                    COUNT(*) AS n_lines
             FROM lineitem l
             JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -4333,11 +4337,10 @@ def oracle_sql() -> dict[str, str]:
               AND ns.n_name != nc.n_name
             GROUP BY 1, 2, 3
         """,
-        "supplier_nation_profit": """
+        "supplier_nation_profit": f"""
             SELECT ns.n_name AS supp_nation,
                    CAST(year(o.o_orderdate) AS INT) AS o_year,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                       AS profit,
+                   {disc_revenue} AS profit,
                    COUNT(*) AS n_lines
             FROM lineitem l
             JOIN part p ON l.l_partkey = p.p_partkey
@@ -4347,15 +4350,9 @@ def oracle_sql() -> dict[str, str]:
             WHERE p.p_name LIKE '%bolt%'
             GROUP BY 1, 2
         """,
-        "returned_item_revenue": """
+        "returned_item_revenue": f"""
             WITH per_cust AS (
-                SELECT o_custkey,
-                       -- integer cent*percent units: bit-stable top-k
-                       -- cut line across engines (see
-                       -- cheapest_supplier_per_part)
-                       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                           * (100 - CAST(ROUND(l_discount * 100)
-                                         AS BIGINT))) AS _rc,
+                SELECT o_custkey, {disc_revenue} AS lost_revenue,
                        COUNT(*) AS n_returned_lines
                 FROM lineitem l
                 JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -4364,46 +4361,40 @@ def oracle_sql() -> dict[str, str]:
                   AND o.o_orderdate < '1996-07-01'
                 GROUP BY 1
             )
-            SELECT c_custkey, c_name, n_name,
-                   _rc / 10000.0 AS lost_revenue,
+            SELECT c_custkey, c_name, n_name, lost_revenue,
                    n_returned_lines, c_acctbal
             FROM per_cust
             JOIN customer ON o_custkey = c_custkey
             JOIN nation ON c_nationkey = n_nationkey
-            ORDER BY _rc DESC, c_custkey
+            ORDER BY lost_revenue DESC, c_custkey
             LIMIT 20
         """,
-        "top_revenue_supplier": """
+        "top_revenue_supplier": f"""
             WITH rev AS (
-                SELECT l_suppkey,
-                       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                           * (100 - CAST(ROUND(l_discount * 100)
-                                         AS BIGINT))) AS _rc
+                SELECT l_suppkey, {disc_revenue} AS total_revenue
                 FROM lineitem
                 WHERE l_shipdate >= '1996-01-01'
                   AND l_shipdate < '1996-04-01'
                 GROUP BY 1
             )
-            SELECT s_suppkey, s_name, _rc / 10000.0 AS total_revenue
+            SELECT s_suppkey, s_name, total_revenue
             FROM rev JOIN supplier ON l_suppkey = s_suppkey
-            WHERE _rc = (SELECT MAX(_rc) FROM rev)
+            WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
         """,
-        "important_part_value": """
+        "important_part_value": f"""
             WITH pv AS (
-                SELECT l_partkey,
-                       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-                           AS _cents
+                SELECT l_partkey, {money_sql("l_extendedprice")} AS value
                 FROM lineitem l
                 JOIN supplier s ON l.l_suppkey = s.s_suppkey
                 WHERE s.s_nationkey < 5
                 GROUP BY 1
             ),
             tot AS (
-                SELECT SUM(_cents) AS _t, COUNT(*) AS _n FROM pv
+                SELECT {money_sql("value")} AS _t, COUNT(*) AS _n FROM pv
             )
-            SELECT l_partkey AS p_partkey, _cents / 100.0 AS value
+            SELECT l_partkey AS p_partkey, value
             FROM pv, tot
-            WHERE _cents * _n > 2 * _t
+            WHERE value * _n > 2 * _t
             ORDER BY value DESC, p_partkey
         """,
         "supplier_count_by_part": """

@@ -1,7 +1,12 @@
 """Benchmark harness for the driver: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints two JSON lines.  The last is the headline, kept short (at most
+2,000 characters) so a reader that keeps only the tail of stdout still
+parses it:
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "cpus": N, "scrub_docs_per_sec": N, "prev_total_ratio": N}
+The line before it holds the legs (``scrub_by_length``, ``image_decode``,
+``dedup_scale``, ``ann_scale``, ``audio_scale``) and ``prev_delta``.
 
 Queries are forced with a noop write (full execution, no driver collect cost).
 The flagship ``doc_scrub`` runs the complete langid + quality + PII-scrub
@@ -89,21 +94,21 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "scrub_docs_per_sec": round(n_docs / timings["doc_scrub"], 1),
-        "scrub_by_length": by_length,
         "cpus": CPUS,
+        "scrub_docs_per_sec": round(n_docs / timings["doc_scrub"], 1),
     }
-    if image_decode is not None:
-        out["image_decode"] = image_decode
-    if dedup_scale is not None:
-        out["dedup_scale"] = dedup_scale
-    if ann_scale is not None:
-        out["ann_scale"] = ann_scale
-    if audio_scale is not None:
-        out["audio_scale"] = audio_scale
+    legs = {
+        name: leg for name, leg in (
+            ("scrub_by_length", by_length),
+            ("image_decode", image_decode),
+            ("dedup_scale", dedup_scale),
+            ("ann_scale", ann_scale),
+            ("audio_scale", audio_scale),
+        ) if leg is not None
+    }
     prev = _previous_round_timings()
     if prev:
-        out["prev_delta"] = {
+        legs["prev_delta"] = {
             name: round(timings[name] - prev[name], 3)
             for name in timings if name in prev
         }
@@ -114,6 +119,7 @@ def main() -> None:
                 3,
             )
     spark.stop()
+    print(json.dumps(legs))
     print(json.dumps(out))
 
 

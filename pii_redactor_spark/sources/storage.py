@@ -56,17 +56,12 @@ def read_table(
     return reader.parquet(path)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], overwrite_dynamic: bool = True
-) -> None:
-    writer = df.write.partitionBy(*partition_cols)
-    if overwrite_dynamic:
-        writer = writer.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    else:
-        writer = writer.mode("append")
-    writer.parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Write ``df`` partitioned by ``partition_cols``, replacing only the
+    partitions it holds (dynamic partition overwrite)."""
+    df.write.partitionBy(*partition_cols).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 def append_table(df: DataFrame, path: str) -> None:

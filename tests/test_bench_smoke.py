@@ -1,6 +1,6 @@
-"""Smoke test for the driver deliverables: bench.py emits one valid JSON
-line; check_contract passes on a sample.  Protects the per-round grading
-surface from import/regression breakage."""
+"""Smoke test for bench.py: it ends its stdout with a short headline JSON
+line, after a line that holds the legs, so a reader that keeps only the
+tail of the output still parses the headline."""
 
 from __future__ import annotations
 
@@ -10,6 +10,10 @@ import subprocess
 import sys
 
 REPO = "/root/repo"
+
+
+HEADLINE_KEYS = {"metric", "value", "unit", "queries", "sf", "cpus",
+                 "scrub_docs_per_sec", "prev_total_ratio"}
 
 
 def test_bench_emits_one_json_line():
@@ -27,18 +31,23 @@ def test_bench_emits_one_json_line():
         capture_output=True, text=True, timeout=420, env=env, cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-    assert len(lines) == 1, proc.stdout
-    out = json.loads(lines[0])
+    lines = proc.stdout.splitlines()
+    # the headline is the last line and fits the 2,000 characters a
+    # tail-keeping reader retains; the legs are on the line before it
+    assert len(lines[-1]) <= 2000, len(lines[-1])
+    out = json.loads(lines[-1])
+    assert set(out) <= HEADLINE_KEYS, set(out) - HEADLINE_KEYS
+    assert HEADLINE_KEYS - {"prev_total_ratio"} <= set(out), out
+    legs = json.loads(lines[-2])
     assert out["unit"] == "sec"
     assert out["value"] > 0
     assert set(out["queries"]) >= {"doc_scrub", "pricing_summary"}
     assert all(v >= 0 for v in out["queries"].values())
     # the image-axis leg must be present and sane (pixel decode path)
-    assert out["image_decode"]["n_images"] == 2000
-    assert out["image_decode"]["images_per_sec"] > 0
+    assert legs["image_decode"]["n_images"] == 2000
+    assert legs["image_decode"]["images_per_sec"] > 0
     # the dedup-at-scale leg must be present and sane (round-3 verdict #2)
-    ds = out["dedup_scale"]
+    ds = legs["dedup_scale"]
     assert ds["n_docs"] == 5000
     for op in ("sparse_jaccard_capped", "substring_dup_winnowed",
                "decontaminate", "dedupe_near"):
@@ -47,7 +56,7 @@ def test_bench_emits_one_json_line():
     # hot posting list an unsalted window would see
     assert 0 < ds["max_hot_chain_group_rows"] < ds["unsalted_would_be_rows"]
     # the ANN-at-scale leg must be present and sane (round-4 verdict #3)
-    ann = out["ann_scale"]
+    ann = legs["ann_scale"]
     assert ann["n_vectors"] == 4000
     assert ann["lsh_neardup"]["planted_pair_recall"] >= 0.5
     assert ann["semdedup"]["survivors"] > 0
@@ -56,7 +65,7 @@ def test_bench_emits_one_json_line():
     assert ann["ivf_store"]["nprobe_16"]["recall_at_10"] >= 0.8
     assert ann["ivf_store"]["max_cell_bytes"] > 0
     # the audio-at-scale leg must be present and sane (round 5)
-    au = out["audio_scale"]
+    au = legs["audio_scale"]
     assert au["n_clips"] == 2000
     assert au["decode_stats"]["clips_per_sec"] > 0
     assert au["decode_stats"]["audio_sec_per_sec"] > 0

@@ -57,9 +57,18 @@ def _norm(v):
     return v
 
 
-def _multiset(df):
+def _exact(v):
+    return None if v is None or v != v else float(v)
+
+
+def _multiset(df, exact=()):
+    """Columns named in ``exact`` stay exact Python floats (a DuckDB
+    Decimal converts to float first); the rest go through ``_norm``."""
     cols = sorted(df.columns)
-    rows = [tuple(_norm(v) for v in row) for row in df[cols].itertuples(index=False)]
+    rows = [
+        tuple(_exact(v) if c in exact else _norm(v) for c, v in zip(cols, row))
+        for row in df[cols].itertuples(index=False)
+    ]
     return cols, sorted(rows, key=repr)
 
 
@@ -79,6 +88,129 @@ def test_query_matches_oracle(spark, ddb, name):
         f"{name}: {len(mism)} mismatching rows; first: "
         f"{s_rows[mism[0]]} vs {o_rows[mism[0]]}"
     )
+
+
+# Every money column of the contract, per query: each is built by
+# __spark_entry__.money on the Spark side and money_sql in the oracle.
+MONEY_COLUMNS = {
+    "brand_size_revenue": ["revenue"],
+    "cheapest_supplier_per_part": ["best_price"],
+    "customer_spend_deciles": ["spend"],
+    "events_hourly": ["total_value"],
+    "events_running_total": ["running_value"],
+    "events_session_windows": ["session_value"],
+    "events_sessions": ["total_value"],
+    "events_type_pivot": entrymod.EVENT_TYPES,
+    "events_value_band_join": ["sum_value"],
+    "forecast_revenue": ["revenue"],
+    "important_part_value": ["value"],
+    "local_supplier_volume": ["revenue"],
+    "nation_market_share": ["nation_volume"],
+    "nation_pair_volume": ["revenue"],
+    "orders_monthly_growth": ["revenue"],
+    "part_supplier_revenue": ["revenue"],
+    "pricing_summary": ["sum_base_price", "sum_disc_price"],
+    "promo_revenue_share": ["promo_revenue", "total_revenue"],
+    "returned_item_revenue": ["lost_revenue"],
+    "revenue_cube": ["revenue"],
+    "revenue_rollup": ["revenue"],
+    "shipping_priority": ["revenue"],
+    "small_qty_order_revenue": ["avg_yearly"],
+    "supplier_balance_share": ["nation_bal"],
+    "supplier_nation_profit": ["profit"],
+    "top_revenue_supplier": ["total_revenue"],
+    "valuable_idle_customers": ["total_balance"],
+}
+MONEY_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
+@pytest.fixture(scope="module")
+def ddb_money():
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{MONEY_SF_DIR}/{t}.parquet')"
+        )
+    return con
+
+
+def test_money_columns_exact(spark, ddb_money):
+    """Every money column equals its DuckDB oracle as an exact float at
+    sf0.01 (the 6-digit ``_norm`` of test_query_matches_oracle cannot see
+    a one-cent difference on a six-figure sum), and the two queries that
+    group lineitem by nation do so at 7, 32 and 200 shuffle partitions:
+    a money answer must not depend on summation order."""
+    runs = [(name, None) for name in sorted(MONEY_COLUMNS)] + [
+        (name, n)
+        for name in ("nation_pair_volume", "supplier_nation_profit")
+        for n in (7, 32, 200)
+    ]
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    bad = []
+    try:
+        for name, n in runs:
+            spark.conf.set("spark.sql.shuffle.partitions", n or default)
+            money = set(MONEY_COLUMNS[name])
+            got = _multiset(qs[name](spark, MONEY_SF_DIR).toPandas(), money)
+            want = _multiset(ddb_money.sql(oracles[name]).df(), money)
+            assert got[0] == want[0], (name, got[0], want[0])
+            assert len(got[1]) == len(want[1]), (name, n)
+            diff = [(a, b) for a, b in zip(got[1], want[1]) if a != b]
+            if diff:
+                bad.append((name, n, len(diff), diff[0]))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert not bad, bad
+
+
+def test_money_helper_pair_agrees(spark):
+    """``money`` and ``money_sql`` on a crafted frame: a discounted sum
+    that lands exactly on a half cent, a negative average balance, and a
+    ``/ 7`` divisor.  Spark and DuckDB must give the same floats, and
+    those are the half-away-from-zero roundings of the exact values."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        # g, price, disc, bal
+        ("a", 2.05, 0.10, -0.02),
+        ("a", 1.00, 0.00, -0.01),
+        ("b", 0.15, 0.10, -1.51),
+        ("b", 10.00, 0.00, -0.01),
+        ("b", 0.01, 0.00, 0.00),
+    ]
+    sdf = spark.createDataFrame(
+        rows, "g string, price double, disc double, bal double"
+    )
+    got = sorted(
+        tuple(r)
+        for r in sdf.groupBy("g").agg(
+            entrymod.money("price", rate=1 - F.col("disc")).alias("rev"),
+            entrymod.money("bal", per=F.count("bal")).alias("avg_bal"),
+            entrymod.money("price", per=7).alias("per7"),
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.sql("CREATE TABLE t (g VARCHAR, price DOUBLE, disc DOUBLE, bal DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    want = sorted(
+        (g, float(a), float(b), float(c))
+        for g, a, b, c in con.sql(f"""
+            SELECT g,
+                   {entrymod.money_sql("price", rate="1 - disc")},
+                   {entrymod.money_sql("bal", per="COUNT(bal)")},
+                   {entrymod.money_sql("price", per="7")}
+            FROM t GROUP BY g
+        """).fetchall()
+    )
+    assert got == want
+    # a: 1.845 + 1.00 = 2.845 (as doubles 2.8449999999999998, which
+    #    ROUND(SUM(double), 2) takes to 2.84 in both engines) -> 2.85;
+    #    -0.03 / 2 = -0.015 -> -0.02; 3.05 / 7 = 0.4357... -> 0.44
+    # b: 0.135 + 10.00 + 0.01 = 10.145 -> 10.15; -1.52 / 3 = -0.5066...
+    #    -> -0.51; 10.16 / 7 = 1.4514... -> 1.45
+    assert got == [("a", 2.85, -0.02, 0.44), ("b", 10.15, -0.51, 1.45)]
 
 
 def test_every_query_runs(spark):
