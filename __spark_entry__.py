@@ -40,7 +40,8 @@ def money(
 ) -> Column:
     """The money aggregate every contract query uses: ``SUM(x)`` (times
     ``rate`` per row, divided by ``per``) as an exact 2-decimal double.
-    ``money_sql`` is the same rule as DuckDB SQL for the oracles.
+    ``money_sql`` is the same rule as DuckDB SQL for the oracles, and
+    ``money_units`` the exact integer sum P both round from.
 
     Why not ``round(sum(double), 2)``: (1) a double sum depends on the
     partial-aggregation merge order, which follows shuffle fetch order,
@@ -55,9 +56,13 @@ def money(
     The rule, identical in both engines:
 
     - each ``x`` (and ``rate``, a fraction in whole percents such as
-      ``1 - l_discount``) becomes whole units with ``ROUND(v * 100)`` cast
-      to BIGINT; every money column holds whole cents, so the product
-      never sits near .5 and this is exact;
+      ``1 - l_discount``) becomes whole units, ``v * 100`` rounded to
+      the nearest integer and cast to BIGINT; every money column holds
+      whole cents, so the product never sits near .5 and this is exact.
+      Both engines round it half to even, the IEEE ``rint`` (Spark
+      ``rint``, DuckDB ``ROUND_EVEN``): Spark's ``round`` would build a
+      BigDecimal per row (``pricing_summary`` took 1.5x as long at sf0.1
+      on 4 vCPUs);
     - the units sum as integers, in any order;
     - where the unit is finer than a cent (``rate``: cents × percent) or
       a divisor applies (``per``: a constant, ``COUNT(x)`` for an
@@ -69,15 +74,14 @@ def money(
       balance) rounding like a positive one;
     - one exact ``/ 100.0`` at the end.
 
-    Range: the cents × percent units of one group must stay below 2^63
-    (Spark's BIGINT sum errors past it under ANSI; DuckDB widens to
-    HUGEINT).  At about 5e8 units per lineitem that holds for a sum over
-    the whole lineitem table up to roughly sf1000."""
-    x = F.col(x) if isinstance(x, str) else x
-    units = F.round(x * 100).cast("long")
-    if rate is not None:
-        units = units * F.round(rate * 100).cast("long")
-    p = F.sum(units) if over is None else F.sum(units).over(over)
+    Range: 2P, twice a group's units, must stay below 2^63 (Spark's
+    BIGINT arithmetic errors past it under ANSI; DuckDB widens to
+    HUGEINT).  A lineitem averages 5.0e8 cents × percent units (at most
+    1.05e9; measured at sf0.1), 6e6 lineitems per SF, so a sum over the
+    whole lineitem table stays in range up to about sf1500 (sf700 if
+    every line were at the maximum)."""
+    p = money_units(x, rate=rate)
+    p = p if over is None else p.over(over)
     if per is None and rate is None:
         return p / 100.0
     q = per if isinstance(per, Column) else F.lit(per or 1)
@@ -87,16 +91,39 @@ def money(
     return F.call_function("div", half_up, 2 * q) / 100.0
 
 
+def disc_revenue() -> Column:
+    """TPC-H revenue, ``SUM(l_extendedprice * (1 - l_discount))``, as
+    ``money``; the oracles' ``disc_revenue`` is the same in SQL."""
+    return money("l_extendedprice", rate=1 - F.col("l_discount"))
+
+
+def money_units(x: Column | str, *, rate: Column | None = None) -> Column:
+    """The exact integer sum under ``money``: cents of ``x`` (times whole
+    percents of ``rate``).  Compare, sort and threshold on this, not on
+    the rounded value, where two groups may lie under a cent apart."""
+    x = F.col(x) if isinstance(x, str) else x
+    units = F.rint(x * 100).cast("long")
+    if rate is not None:
+        units = units * F.rint(rate * 100).cast("long")
+    return F.sum(units)
+
+
+def money_units_sql(x: str, *, rate: str | None = None) -> str:
+    """``money_units`` as a DuckDB SQL fragment."""
+    units = f"CAST(ROUND_EVEN(({x}) * 100, 0) AS BIGINT)"
+    if rate is not None:
+        units += f" * CAST(ROUND_EVEN(({rate}) * 100, 0) AS BIGINT)"
+    return f"SUM({units})"
+
+
 def money_sql(
     x: str, *, rate: str | None = None, per: str | None = None,
     over: str | None = None,
 ) -> str:
     """``money`` as a DuckDB SQL fragment; see ``money`` for the rule.
     ``over`` is the text of a window definition (``PARTITION BY …``)."""
-    units = f"CAST(ROUND(({x}) * 100) AS BIGINT)"
-    if rate is not None:
-        units += f" * CAST(ROUND(({rate}) * 100) AS BIGINT)"
-    p = f"SUM({units})" + ("" if over is None else f" OVER ({over})")
+    p = money_units_sql(x, rate=rate)
+    p += "" if over is None else f" OVER ({over})"
     if per is None and rate is None:
         return f"({p} / 100.0)"
     q = f"({per or 1})"
@@ -138,9 +165,7 @@ def q_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
             money("l_extendedprice").alias("sum_base_price"),
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "sum_disc_price"
-            ),
+            disc_revenue().alias("sum_disc_price"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.count("*").alias("count_order"),
         )
@@ -156,11 +181,7 @@ def q_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy("o_orderkey")
-        .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "revenue"
-            )
-        )
+        .agg(disc_revenue().alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
     )
@@ -180,9 +201,7 @@ def q_local_supplier_volume(spark: SparkSession, sf: str) -> DataFrame:
         .join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("n_name")
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "revenue"
-            ),
+            disc_revenue().alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -673,9 +692,7 @@ def q_part_supplier_revenue(spark: SparkSession, sf: str) -> DataFrame:
         .join(nation, supp.s_nationkey == nation.n_nationkey)
         .groupBy("p_brand", "n_name")
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "revenue"
-            ),
+            disc_revenue().alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -846,11 +863,7 @@ def q_nation_market_share(spark: SparkSession, sf: str) -> DataFrame:
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust_region, orders.o_custkey == F.col("c_custkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"), "supp_nation")
-        .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "nation_volume"
-            )
-        )
+        .agg(disc_revenue().alias("nation_volume"))
     )
     w = Window.partitionBy("o_year")
     return rev.select(
@@ -949,7 +962,8 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf: str) -> DataFrame:
     )
     per_supp = li.groupBy("l_partkey", "l_suppkey").agg(
         money(
-            "l_extendedprice", per=F.sum(F.col("l_quantity").cast("long"))
+            "l_extendedprice",
+            per=F.sum(F.round(F.col("l_quantity")).cast("long")),
         ).alias("avg_unit_price")
     )
     best = (
@@ -2178,9 +2192,7 @@ def q_nation_pair_volume(spark: SparkSession, sf: str) -> DataFrame:
             F.year("l_shipdate").alias("l_year"),
         )
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "revenue"
-            ),
+            disc_revenue().alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2217,9 +2229,7 @@ def q_supplier_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
             "supp_nation", F.year("o_orderdate").alias("o_year")
         )
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "profit"
-            ),
+            disc_revenue().alias("profit"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2228,13 +2238,14 @@ def q_supplier_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
 def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item reporting): the 20 customers who
     lost the most revenue to returned lineitems ('R' flag) on orders
-    placed in 1996H1.  Revenue is ``money``, so the top-k cut line is
-    bit-stable across engines and runs.  Plan shape for scale: both
-    filters push into their scans, lineitem⋈orders is the one big
-    shuffle, the per-customer aggregate REDUCES to ≤|customer| rows
-    BEFORE touching the customer table (never join-then-aggregate a wide
-    row), nation is broadcast, and the top-20 is a TakeOrdered
-    (per-partition heaps, no global sort).  Ties break on c_custkey."""
+    placed in 1996H1.  The top-k orders on the exact ``money_units``
+    sum, so its cut line is bit-stable across engines and runs.  Plan
+    shape for scale: both filters push into their scans, lineitem⋈orders
+    is the one big shuffle, the per-customer aggregate REDUCES to
+    ≤|customer| rows BEFORE touching the customer table (never
+    join-then-aggregate a wide row), nation is broadcast, and the top-20
+    is a TakeOrdered (per-partition heaps, no global sort).  Ties break
+    on c_custkey."""
     li = _t(spark, sf, "lineitem").where(F.col("l_returnflag") == "R")
     orders = (
         _t(spark, sf, "orders")
@@ -2248,9 +2259,10 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey")
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "lost_revenue"
-            ),
+            money_units(
+                "l_extendedprice", rate=1 - F.col("l_discount")
+            ).alias("_u"),
+            disc_revenue().alias("lost_revenue"),
             F.count("*").alias("n_returned_lines"),
         )
     )
@@ -2262,7 +2274,7 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         per_cust.join(cust, per_cust.o_custkey == cust.c_custkey)
-        .orderBy(F.col("lost_revenue").desc(), F.col("c_custkey"))
+        .orderBy(F.col("_u").desc(), F.col("c_custkey"))
         .limit(20)
         .select(
             "c_custkey",
@@ -2277,11 +2289,12 @@ def q_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_top_revenue_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): the supplier(s) whose shipped
-    revenue over 1996Q1 equals the global maximum.  Revenue is ``money``,
-    so the equality-with-max predicate is exact in both engines (a
-    double SUM could differ in the last ulp between Spark and DuckDB —
-    or between two Spark runs — and silently drop or add a tied
-    supplier).  Plan shape: one shuffle aggregate on l_suppkey, a 1-row
+    revenue over 1996Q1 equals the global maximum.  The equality-with-max
+    predicate compares the exact ``money_units`` sums, so it is exact in
+    both engines (a double SUM could differ in the last ulp between
+    Spark and DuckDB — or between two Spark runs — and silently drop or
+    add a tied supplier; a rounded one would tie suppliers under a cent
+    apart).  Plan shape: one shuffle aggregate on l_suppkey, a 1-row
     global max tree-reduced from the SAME aggregate (Catalyst reuses the
     exchange), broadcast back as a single-row join, then a broadcast
     supplier-name lookup; no window over an unpartitioned frame (which
@@ -2296,13 +2309,14 @@ def q_top_revenue_supplier(spark: SparkSession, sf: str) -> DataFrame:
         & F.col("l_suppkey").isNotNull()
     )
     rev = li.groupBy("l_suppkey").agg(
-        money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-            "total_revenue"
-        )
+        money_units("l_extendedprice", rate=1 - F.col("l_discount")).alias(
+            "_u"
+        ),
+        disc_revenue().alias("total_revenue"),
     )
     top = rev.join(
-        F.broadcast(rev.groupBy().agg(F.max("total_revenue").alias("_m"))),
-        F.col("total_revenue") == F.col("_m"),
+        F.broadcast(rev.groupBy().agg(F.max("_u").alias("_m"))),
+        F.col("_u") == F.col("_m"),
     )
     supp = F.broadcast(
         _t(spark, sf, "supplier").select("s_suppkey", "s_name")
@@ -2318,14 +2332,15 @@ def q_important_part_value(spark: SparkSession, sf: str) -> DataFrame:
     reduced schema has no partsupp, so a part's "stock value" is its
     shipped extendedprice from suppliers in nations 0-4): parts whose
     value exceeds 2x the per-part average.  The threshold is expressed
-    scale-free (value * n_parts > 2 * total) over ``money`` values, so
-    both engines make the same IEEE comparison at every SF — TPC-H's
-    own 0.0001/SF fraction bakes the scale factor into the query text,
-    which a tri-scale oracle check can't do.  Plan shape: the supplier
-    filter is a broadcast semi-join (never shuffles lineitem by
-    suppkey), one shuffle aggregate on l_partkey, and the single-row
-    (total, n_parts) side REUSES that aggregate's exchange (same
-    pattern as q_top_revenue_supplier) before broadcasting back."""
+    scale-free (value * n_parts > 2 * total) over the exact integer
+    ``money_units`` cents, so the cut is exact in both engines at every
+    SF — TPC-H's own 0.0001/SF fraction bakes the scale factor into the
+    query text, which a tri-scale oracle check can't do.  Plan shape:
+    the supplier filter is a broadcast semi-join (never shuffles
+    lineitem by suppkey), one shuffle aggregate on l_partkey, and the
+    single-row (total, n_parts) side REUSES that aggregate's exchange
+    (same pattern as q_top_revenue_supplier) before broadcasting
+    back."""
     supp = F.broadcast(
         _t(spark, sf, "supplier")
         .where(F.col("s_nationkey") < 5)
@@ -2335,13 +2350,16 @@ def q_important_part_value(spark: SparkSession, sf: str) -> DataFrame:
     pv = (
         li.join(supp, li.l_suppkey == supp.s_suppkey, "left_semi")
         .groupBy("l_partkey")
-        .agg(money("l_extendedprice").alias("value"))
+        .agg(
+            money_units("l_extendedprice").alias("_c"),
+            money("l_extendedprice").alias("value"),
+        )
     )
     tot = F.broadcast(
-        pv.groupBy().agg(money("value").alias("_t"), F.count("*").alias("_n"))
+        pv.groupBy().agg(F.sum("_c").alias("_t"), F.count("*").alias("_n"))
     )
     return (
-        pv.join(tot, F.col("value") * F.col("_n") > 2 * F.col("_t"))
+        pv.join(tot, F.col("_c") * F.col("_n") > 2 * F.col("_t"))
         .select(F.col("l_partkey").alias("p_partkey"), "value")
         .orderBy(F.col("value").desc(), "p_partkey")
     )
@@ -2581,9 +2599,7 @@ def q_brand_size_revenue(spark: SparkSession, sf: str) -> DataFrame:
     return (
         li.join(part, (li.l_partkey == part.p_partkey) & bands)
         .agg(
-            money("l_extendedprice", rate=1 - F.col("l_discount")).alias(
-                "revenue"
-            ),
+            disc_revenue().alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -3095,6 +3111,7 @@ def oracle_sql() -> dict[str, str]:
     scrub_path, ent_path = materialize_scrub_oracle(oracle_sf)
     emb_path = materialize_embedding_oracle(oracle_sf)
     disc_revenue = money_sql("l_extendedprice", rate="1 - l_discount")
+    disc_units = money_units_sql("l_extendedprice", rate="1 - l_discount")
     return {
         "embedding_kept_lsh_hist": f"""
             SELECT e.lsh_bucket, COUNT(*) AS n_vectors
@@ -3766,7 +3783,7 @@ def oracle_sql() -> dict[str, str]:
             WITH per_supp AS (
                 SELECT l_partkey, l_suppkey,
                        {money_sql("l_extendedprice",
-                                  per="SUM(CAST(l_quantity AS BIGINT))")}
+                                  per="SUM(CAST(ROUND(l_quantity) AS BIGINT))")}
                            AS avg_unit_price
                 FROM lineitem
                 GROUP BY 1, 2
@@ -4352,7 +4369,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "returned_item_revenue": f"""
             WITH per_cust AS (
-                SELECT o_custkey, {disc_revenue} AS lost_revenue,
+                SELECT o_custkey, {disc_units} AS _u,
+                       {disc_revenue} AS lost_revenue,
                        COUNT(*) AS n_returned_lines
                 FROM lineitem l
                 JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -4366,12 +4384,13 @@ def oracle_sql() -> dict[str, str]:
             FROM per_cust
             JOIN customer ON o_custkey = c_custkey
             JOIN nation ON c_nationkey = n_nationkey
-            ORDER BY lost_revenue DESC, c_custkey
+            ORDER BY _u DESC, c_custkey
             LIMIT 20
         """,
         "top_revenue_supplier": f"""
             WITH rev AS (
-                SELECT l_suppkey, {disc_revenue} AS total_revenue
+                SELECT l_suppkey, {disc_units} AS _u,
+                       {disc_revenue} AS total_revenue
                 FROM lineitem
                 WHERE l_shipdate >= '1996-01-01'
                   AND l_shipdate < '1996-04-01'
@@ -4379,22 +4398,23 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT s_suppkey, s_name, total_revenue
             FROM rev JOIN supplier ON l_suppkey = s_suppkey
-            WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
+            WHERE _u = (SELECT MAX(_u) FROM rev)
         """,
         "important_part_value": f"""
             WITH pv AS (
-                SELECT l_partkey, {money_sql("l_extendedprice")} AS value
+                SELECT l_partkey, {money_units_sql("l_extendedprice")} AS _c,
+                       {money_sql("l_extendedprice")} AS value
                 FROM lineitem l
                 JOIN supplier s ON l.l_suppkey = s.s_suppkey
                 WHERE s.s_nationkey < 5
                 GROUP BY 1
             ),
             tot AS (
-                SELECT {money_sql("value")} AS _t, COUNT(*) AS _n FROM pv
+                SELECT SUM(_c) AS _t, COUNT(*) AS _n FROM pv
             )
             SELECT l_partkey AS p_partkey, value
             FROM pv, tot
-            WHERE value * _n > 2 * _t
+            WHERE _c * _n > 2 * _t
             ORDER BY value DESC, p_partkey
         """,
         "supplier_count_by_part": """

@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime
 import math
 from decimal import Decimal
+from fractions import Fraction
 
 import duckdb
 import pytest
@@ -165,52 +166,120 @@ def test_money_columns_exact(spark, ddb_money):
     assert not bad, bad
 
 
+def _cents(x: Fraction) -> float:
+    """Exact rational ``x`` rounded half away from zero to whole cents."""
+    c = math.floor(abs(x) * 100 + Fraction(1, 2))
+    return (c if x >= 0 else -c) / 100
+
+
 def test_money_helper_pair_agrees(spark):
-    """``money`` and ``money_sql`` on a crafted frame: a discounted sum
-    that lands exactly on a half cent, a negative average balance, and a
-    ``/ 7`` divisor.  Spark and DuckDB must give the same floats, and
-    those are the half-away-from-zero roundings of the exact values."""
+    """``money``, ``money_units`` and their SQL twins on a crafted frame,
+    against exact rational arithmetic in Python: every mode (a ``rate``
+    of ``1 - disc`` and of ``disc``, a ``per`` of 7, of ``COUNT`` and of
+    an integer ``SUM``, a running window) over seeded random whole-cent
+    rows, plus groups that land on a half cent, a negative average
+    balance and a ``/ 7`` divisor.  Spark, DuckDB and the reference must
+    give the same floats."""
+    import random
+
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     rows = [
-        # g, price, disc, bal
-        ("a", 2.05, 0.10, -0.02),
-        ("a", 1.00, 0.00, -0.01),
-        ("b", 0.15, 0.10, -1.51),
-        ("b", 10.00, 0.00, -0.01),
-        ("b", 0.01, 0.00, 0.00),
+        # g, id, price, disc, bal, qty
+        ("a", 0, 2.05, 0.10, -0.02, 1.0),
+        ("a", 1, 1.00, 0.00, -0.01, 2.0),
+        ("b", 2, 0.15, 0.10, -1.51, 3.0),
+        ("b", 3, 10.00, 0.00, -0.01, 1.0),
+        ("b", 4, 0.01, 0.00, 0.00, 1.0),
     ]
+    rng = random.Random(7)
+    for i in range(5, 400):
+        rows.append((
+            f"r{rng.randrange(40)}", i, rng.randint(1, 10**7) / 100,
+            rng.randint(0, 10) / 100, rng.randint(-10**6, 10**6) / 100,
+            float(rng.randint(1, 50)),
+        ))
+    exact = {}  # g -> (id, price, disc, bal, qty) as Fractions
+    for g, i, *vals in rows:
+        exact.setdefault(g, []).append(
+            (i, *(Fraction(repr(v)) for v in vals))
+        )
+    want, want_run = [], []
+    for g, rs in sorted(exact.items()):
+        price = sum(r[1] for r in rs)
+        rev = sum(r[1] * (1 - r[2]) for r in rs)
+        bal = sum(r[3] for r in rs)
+        want.append((
+            g, _cents(rev), _cents(sum(r[1] * r[2] for r in rs)),
+            _cents(bal / len(rs)), _cents(price / 7),
+            _cents(price / sum(r[4] for r in rs)), float(bal),
+            int(rev * 10000),
+        ))
+        run = Fraction(0)
+        for r in sorted(rs):
+            run += r[1] * (1 - r[2])
+            want_run.append((g, int(r[0]), _cents(run)))
+
+    e = entrymod
     sdf = spark.createDataFrame(
-        rows, "g string, price double, disc double, bal double"
+        rows,
+        "g string, id long, price double, disc double, bal double, "
+        "qty double",
     )
-    got = sorted(
-        tuple(r)
-        for r in sdf.groupBy("g").agg(
-            entrymod.money("price", rate=1 - F.col("disc")).alias("rev"),
-            entrymod.money("bal", per=F.count("bal")).alias("avg_bal"),
-            entrymod.money("price", per=7).alias("per7"),
-        ).collect()
-    )
+    got = sorted(tuple(r) for r in sdf.groupBy("g").agg(
+        e.money("price", rate=1 - F.col("disc")),
+        e.money("price", rate=F.col("disc")),
+        e.money("bal", per=F.count("bal")),
+        e.money("price", per=7),
+        e.money("price", per=F.sum(F.round(F.col("qty")).cast("long"))),
+        e.money("bal"),
+        e.money_units("price", rate=1 - F.col("disc")),
+    ).collect())
+    w = Window.partitionBy("g").orderBy("id")
+    got_run = sorted(tuple(r) for r in sdf.select(
+        "g", "id", e.money("price", rate=1 - F.col("disc"), over=w)
+    ).collect())
+
     con = duckdb.connect()
-    con.sql("CREATE TABLE t (g VARCHAR, price DOUBLE, disc DOUBLE, bal DOUBLE)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
-    want = sorted(
-        (g, float(a), float(b), float(c))
-        for g, a, b, c in con.sql(f"""
+    con.sql("CREATE TABLE t (g VARCHAR, id BIGINT, price DOUBLE, "
+            "disc DOUBLE, bal DOUBLE, qty DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?)", rows)
+    duck = sorted(
+        (g, *(float(v) for v in vals), int(u))
+        for g, *vals, u in con.sql(f"""
             SELECT g,
-                   {entrymod.money_sql("price", rate="1 - disc")},
-                   {entrymod.money_sql("bal", per="COUNT(bal)")},
-                   {entrymod.money_sql("price", per="7")}
+                   {e.money_sql("price", rate="1 - disc")},
+                   {e.money_sql("price", rate="disc")},
+                   {e.money_sql("bal", per="COUNT(bal)")},
+                   {e.money_sql("price", per="7")},
+                   {e.money_sql(
+                       "price", per="SUM(CAST(ROUND(qty) AS BIGINT))")},
+                   {e.money_sql("bal")},
+                   {e.money_units_sql("price", rate="1 - disc")}
             FROM t GROUP BY g
         """).fetchall()
     )
+    duck_run = sorted(
+        (g, i, float(v)) for g, i, v in con.sql(f"""
+            SELECT g, id, {e.money_sql(
+                "price", rate="1 - disc",
+                over="PARTITION BY g ORDER BY id")}
+            FROM t
+        """).fetchall()
+    )
     assert got == want
+    assert duck == want
+    assert got_run == want_run
+    assert duck_run == want_run
     # a: 1.845 + 1.00 = 2.845 (as doubles 2.8449999999999998, which
     #    ROUND(SUM(double), 2) takes to 2.84 in both engines) -> 2.85;
     #    -0.03 / 2 = -0.015 -> -0.02; 3.05 / 7 = 0.4357... -> 0.44
     # b: 0.135 + 10.00 + 0.01 = 10.145 -> 10.15; -1.52 / 3 = -0.5066...
     #    -> -0.51; 10.16 / 7 = 1.4514... -> 1.45
-    assert got == [("a", 2.85, -0.02, 0.44), ("b", 10.15, -0.51, 1.45)]
+    assert [(g, rev, avg, p7) for g, rev, _, avg, p7, *_ in got[:2]] == [
+        ("a", 2.85, -0.02, 0.44), ("b", 10.15, -0.51, 1.45)
+    ]
 
 
 def test_every_query_runs(spark):
