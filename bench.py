@@ -180,31 +180,23 @@ def _scrub_by_length_bucket(spark) -> dict[str, dict]:
     return out
 
 
-def _exif_scrub_split(spark, imgs, mix, rows) -> dict:
+def _exif_scrub_split(spark, images_path, imgs, mix, rows) -> dict:
     """Build (cached) an Exif-tagged variant of the image corpus and time
     the metadata-PII scrub over it.  Tagging is deterministic from
-    image_id; the cache marker keys on exif.py source so a scrubber or
-    tag-layout change regenerates instead of timing stale bytes."""
+    image_id; the cache (``fixtures/cache.py``) is keyed on exif.py, this
+    function's source and the image fixture's files, so a scrubber,
+    tag-layout or fixture change regenerates instead of timing stale
+    bytes."""
     import hashlib
     import inspect
 
     from pii_redactor_spark.fixtures import exif as exif_mod
+    from pii_redactor_spark.fixtures.cache import cached
     from pii_redactor_spark.operators.vision import scrub_image_metadata
 
     exif_dir = f"/root/repo/.cache/bench_img_exif_{rows}"
-    data_path = os.path.join(exif_dir, "images")
-    marker = os.path.join(exif_dir, "_GEN_DONE")
-    want = (
-        hashlib.sha256(inspect.getsource(exif_mod).encode()).hexdigest()[:16]
-        + f":v2:{rows}"
-    )
-    fresh = False
-    try:
-        with open(marker) as f:
-            fresh = f.read().strip() == want
-    except OSError:
-        pass
-    if not fresh:
+
+    def build():
         def tag(batches):
             import struct as _struct
             import zlib as _zlib
@@ -287,12 +279,14 @@ def _exif_scrub_split(spark, imgs, mix, rows) -> dict:
 
         imgs.select("image_id", "bytes", "fmt").mapInPandas(
             tag, "image_id string, bytes binary, fmt string"
-        ).write.mode("overwrite").parquet(data_path)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(want)
-        os.replace(tmp, marker)
+        ).write.mode("overwrite").parquet(os.path.join(exif_dir, "images"))
 
+    data_path = cached(
+        exif_dir, "images", build,
+        sources=inspect.getsource(exif_mod)
+        + inspect.getsource(_exif_scrub_split),
+        params=(rows,), inputs=[images_path],
+    )
     tagged = spark.read.parquet(data_path)
     force(scrub_image_metadata(tagged.limit(512)).select("image_id"))
     t0 = time.perf_counter()
@@ -391,7 +385,9 @@ def _image_decode_bench(spark) -> dict | None:
         # scrub_image_metadata.  The claim under test: metadata scrub is
         # byte surgery, never a DCT, so its rate must sit far above
         # jpeg_only decode on the same rows.
-        out["exif_scrub"] = _exif_scrub_split(spark, imgs, mix, rows)
+        out["exif_scrub"] = _exif_scrub_split(
+            spark, images_path, imgs, mix, rows
+        )
         return out
     except Exception as exc:
         import traceback

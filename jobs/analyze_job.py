@@ -60,9 +60,11 @@ def main(argv: list[str] | None = None) -> None:
 
     from pyspark.sql import SparkSession
 
+    from pii_redactor_spark.session import ENGINE_CONF
+
     spark = (
         SparkSession.builder.appName("pii-analyze")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
     analyze_to(spark, args.decisions, args.output)

@@ -84,6 +84,7 @@ def main(argv: list[str] | None = None) -> None:
     from pii_redactor_spark.functions.toxicity import ToxicityConfig
     from pii_redactor_spark.operators.scrub import ScrubConfig
     from pii_redactor_spark.pipeline.run import run_pipeline
+    from pii_redactor_spark.session import ENGINE_CONF
 
     toxicity = None
     if args.toxicity_blocklist:
@@ -107,11 +108,7 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = (
         SparkSession.builder.appName("pii-scrub")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

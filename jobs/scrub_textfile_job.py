@@ -33,12 +33,12 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from pii_redactor_spark.operators.scrub import ScrubConfig
+    from pii_redactor_spark.session import ENGINE_CONF
     from pii_redactor_spark.sources.textfile import scrub_text_file
 
     spark = (
         SparkSession.builder.appName("pii-scrub-textfile")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
     cfg = ScrubConfig(

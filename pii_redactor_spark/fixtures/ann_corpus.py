@@ -6,7 +6,7 @@ round 4; the embedding operators (`neardup_pairs_lsh`, SemDeDup's
 within-cell join, `ivf_topk_partitioned`) were still timed only at sf0.1
 (500-5k vectors) where fixed overhead dominates.  This module generates
 a deterministic >= 1M-vector corpus with the planted structure those
-scale paths exist for, cached to parquet with the same marker discipline
+scale paths exist for, cached to parquet through ``fixtures/cache.py``
 as ``dedup_corpus`` / ``images``.
 
 Planted structure (mirrors what a web-scale embedding table looks like):
@@ -30,7 +30,6 @@ worker count.  Schema mirrors ``testdata/*/embeddings.parquet``:
 
 from __future__ import annotations
 
-import hashlib
 import os
 from typing import Iterator
 
@@ -93,29 +92,19 @@ def query_vector(cluster: int) -> list[float]:
     return [float(x) for x in v]
 
 
-def _corpus_fingerprint() -> str:
-    with open(os.path.abspath(__file__), "rb") as f:
-        return hashlib.sha256(f.read()).hexdigest()[:16]
-
-
 def ensure_cached_ann_corpus(
     spark: SparkSession, out_dir: str, n_rows: int, partitions: int = 64
 ) -> str:
-    """Generate-once parquet cache (marker written last, fingerprint +
-    params keyed, data-dir existence checked)."""
-    data = os.path.join(out_dir, "vecs")
-    marker = os.path.join(out_dir, "_GEN_DONE")
-    want = f"{_corpus_fingerprint()}:{n_rows}:{partitions}"
-    try:
-        with open(marker) as f:
-            if f.read().strip() == want and os.path.isdir(data):
-                return data
-    except OSError:
-        pass
-    ann_bench_corpus(spark, n_rows).repartition(partitions).write.mode(
-        "overwrite"
-    ).parquet(data)
-    os.makedirs(out_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        f.write(want)
-    return data
+    """Generate-once parquet cache (``fixtures/cache.py``), keyed on this
+    module, the row count and the partition count."""
+    from .cache import cached, source_digest
+
+    def build():
+        ann_bench_corpus(spark, n_rows).repartition(partitions).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "vecs"))
+
+    here, name = os.path.split(os.path.abspath(__file__))
+    return cached(out_dir, "vecs", build,
+                  sources=source_digest(here, (name,)),
+                  params=(n_rows, partitions))

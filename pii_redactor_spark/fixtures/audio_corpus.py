@@ -14,10 +14,9 @@ Design goals, same as those modules:
   sub-300 ms clips) plus ~1% corrupt rows (truncated / non-RIFF bytes)
   so the poison-row guard is part of the measured path, exactly like a
   real web scrape.
-* **Generate-once caching keyed on a source fingerprint** — a change to
-  this module or the WAV codec regenerates instead of silently timing
-  stale content; the ``_GEN_DONE`` marker is written LAST so torn
-  writes never validate.
+* **Generate-once caching keyed on a source digest** — a change to
+  this module or the WAV/FLAC codecs regenerates instead of silently
+  timing stale content (``fixtures/cache.py``).
 
 Row mix (per-row independent draws; fractions are expectations):
 containers 10% G.711 (mu/A-law), 5% IMA ADPCM, 10% FLAC, remainder PCM
@@ -30,7 +29,6 @@ mono so the too_long gate fires without bloating the fixture).
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Iterator
 
@@ -203,38 +201,17 @@ def write_audio_corpus(
     )
 
 
-def corpus_fingerprint() -> str:
-    """SHA-256 over this module + the WAV codec — a change to either
-    regenerates the cache (same contract as images.fixture_fingerprint)."""
-    h = hashlib.sha256()
-    here = os.path.dirname(os.path.abspath(__file__))
-    read_any = False
-    for fname in ("audio_corpus.py", "wav.py", "flac.py"):
-        try:
-            with open(os.path.join(here, fname), "rb") as f:
-                h.update(f.read())
-            read_any = True
-        except OSError:
-            continue
-    if not read_any:  # zip deployment: sources unreadable, pin by version
-        h.update(b"audio-corpus-v1")
-    return h.hexdigest()[:16]
-
-
 def ensure_cached_audio_corpus(
     spark, out_dir: str, n_rows: int, partitions: int | None = None
 ) -> str:
-    """Generate-once cached corpus; returns the audio table path."""
-    marker = os.path.join(out_dir, "_GEN_DONE")
-    want = f"{corpus_fingerprint()}:{n_rows}:{partitions}"
-    data = os.path.join(out_dir, "audio")
-    if os.path.exists(marker) and os.path.isdir(data):
-        with open(marker) as f:
-            if f.read().strip() == want:
-                return data
-    write_audio_corpus(spark, out_dir, n_rows, partitions)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(want)
-    os.replace(tmp, marker)
-    return data
+    """Generate-once cached corpus (``fixtures/cache.py``), keyed on this
+    module and the WAV/FLAC codecs; returns the audio table path."""
+    from .cache import cached, source_digest
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    return cached(
+        out_dir, "audio",
+        lambda: write_audio_corpus(spark, out_dir, n_rows, partitions),
+        sources=source_digest(here, ("audio_corpus.py", "wav.py", "flac.py")),
+        params=(n_rows, partitions),
+    )

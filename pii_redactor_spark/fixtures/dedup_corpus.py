@@ -30,7 +30,6 @@ cluster siblings sharing 5-grams) via the broadcast n-gram set.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,32 +113,19 @@ def bench_slice(spark: SparkSession, n_rows: int, every: int = 37,
     )
 
 
-def _corpus_fingerprint() -> str:
-    with open(os.path.abspath(__file__), "rb") as f:
-        return hashlib.sha256(f.read()).hexdigest()[:16]
-
-
 def ensure_cached_dedup_corpus(
     spark: SparkSession, out_dir: str, n_rows: int, partitions: int = 64
 ) -> str:
-    """Generate-once parquet cache (same marker discipline as
-    ``images.ensure_cached_fixture``: fingerprint + rows, marker written
-    last, data-dir existence checked)."""
-    data = os.path.join(out_dir, "docs")
-    marker = os.path.join(out_dir, "_GEN_DONE")
-    want = f"{_corpus_fingerprint()}:{n_rows}:{partitions}"
-    try:
-        with open(marker) as f:
-            if f.read().strip() == want and os.path.isdir(data):
-                return data
-    except OSError:
-        pass
-    dedup_bench_corpus(spark, n_rows).repartition(partitions).write.mode(
-        "overwrite"
-    ).parquet(data)
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(want)
-    os.replace(tmp, marker)
-    return data
+    """Generate-once parquet cache (``fixtures/cache.py``), keyed on this
+    module, the row count and the partition count."""
+    from .cache import cached, source_digest
+
+    def build():
+        dedup_bench_corpus(spark, n_rows).repartition(partitions).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "docs"))
+
+    here, name = os.path.split(os.path.abspath(__file__))
+    return cached(out_dir, "docs", build,
+                  sources=source_digest(here, (name,)),
+                  params=(n_rows, partitions))

@@ -237,52 +237,28 @@ _GENERATOR_SOURCES = (
 
 
 def fixture_fingerprint() -> str:
-    """sha256 over the fixture-generation sources — cache keys derived from
+    """Digest of the fixture-generation sources — cache keys derived from
     it invalidate when caption/image/codec generation changes, so
     cross-round benchmark fixtures never silently go stale."""
-    import hashlib
     import os
 
+    from .cache import source_digest
+
     here = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    found = 0
-    for name in _GENERATOR_SOURCES:
-        p = os.path.join(here, name)
-        try:
-            with open(p, "rb") as fh:
-                h.update(fh.read())
-            found += 1
-        except OSError:
-            continue
-    # zip-imported package (--py-files): sources unreadable as files — an
-    # empty hash would be a CONSTANT that never invalidates, the exact
-    # failure this function exists to prevent
-    if not found:
-        raise RuntimeError(
-            "fixture_fingerprint: no generator sources readable "
-            f"under {here} (zip import?) — cannot key fixture caches"
-        )
-    return h.hexdigest()[:16]
+    return source_digest(here, _GENERATOR_SOURCES)
 
 
-def _marker_value(
-    n_rows: int, cfg: CaptionConfig | None, partitions: int | None
-) -> str:
-    """The full cache key: generator-source fingerprint + row count + a
-    digest of the CaptionConfig and partition layout.  Round-3 advice: the
-    old marker recorded only fingerprint:n_rows, so two callers sharing an
-    out_dir with different cfg (e.g. a heavy_language skew variant)
-    silently got the first caller's fixture — the exact stale-cache
-    failure the fingerprint was added to prevent.  ``partitions`` is in
-    the key too: it changes the written file/partition layout, which scan
-    benchmarks measure."""
+def _cache_args(n_rows: int, cfg: CaptionConfig | None,
+                partitions: int | None) -> dict:
+    """The fixture's cache key: generator sources, row count, the
+    CaptionConfig (two callers sharing an out_dir with different configs
+    must not share a fixture) and the partition layout (it changes the
+    written files, which scan benchmarks measure)."""
     import dataclasses
-    import hashlib
 
     c = cfg or CaptionConfig()
-    cfg_key = repr((dataclasses.astuple(c), partitions))
-    digest = hashlib.sha256(cfg_key.encode()).hexdigest()[:12]
-    return f"{fixture_fingerprint()}:{n_rows}:{digest}"
+    return {"sources": fixture_fingerprint(),
+            "params": (n_rows, dataclasses.astuple(c), partitions)}
 
 
 def fixture_is_fresh(
@@ -291,19 +267,11 @@ def fixture_is_fresh(
     cfg: CaptionConfig | None = None,
     partitions: int | None = None,
 ) -> bool:
-    """True iff the cache marker validates AND the data directory exists.
-    The single freshness contract shared by every cache site — callers
-    must not re-implement the marker format, and must pass the same cfg
-    and partitions they would hand to ``ensure_cached_fixture``."""
-    import os
+    """True iff ``ensure_cached_fixture`` with the same arguments would
+    serve the cache without generating."""
+    from .cache import is_fresh
 
-    if not os.path.isdir(os.path.join(out_dir, "images")):
-        return False
-    try:
-        with open(os.path.join(out_dir, "_GEN_DONE")) as f:
-            return f.read().strip() == _marker_value(n_rows, cfg, partitions)
-    except OSError:
-        return False
+    return is_fresh(out_dir, "images", **_cache_args(n_rows, cfg, partitions))
 
 
 def ensure_cached_fixture(
@@ -313,22 +281,15 @@ def ensure_cached_fixture(
     cfg: CaptionConfig | None = None,
     partitions: int | None = None,
 ) -> str:
-    """Generate-once cached fixture table for benchmarks.  The marker file is
-    written LAST (torn writes never validate) and stores
-    fingerprint+rows+cfg/partitions digest; any generator-code, row-count,
-    or config change — or a deleted data directory under a surviving
-    marker — regenerates in place (the writers use overwrite mode).
-    Returns the images path."""
-    import os
+    """Generate-once cached fixture table for benchmarks (``fixtures/
+    cache.py``); the writers use overwrite mode, so a stale cache
+    regenerates in place.  Returns the images path."""
+    from .cache import cached
 
-    if fixture_is_fresh(out_dir, n_rows, cfg, partitions):
-        return os.path.join(out_dir, "images")
-    write_fixture_tables(
-        spark, out_dir, n_rows, cfg or CaptionConfig(), partitions=partitions
+    return cached(
+        out_dir, "images",
+        lambda: write_fixture_tables(spark, out_dir, n_rows,
+                                     cfg or CaptionConfig(),
+                                     partitions=partitions),
+        **_cache_args(n_rows, cfg, partitions),
     )
-    marker = os.path.join(out_dir, "_GEN_DONE")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_marker_value(n_rows, cfg, partitions))
-    os.replace(tmp, marker)
-    return os.path.join(out_dir, "images")

@@ -37,8 +37,9 @@ inline from the documented ``np.random.default_rng(seed)`` recipe — no
 import from ``operators.similarity``.
 
 Spark never touches these files; they are DuckDB-side ground truth only.
-Cache lives under the repo's gitignored ``.cache/`` and is rebuilt when
-missing, older than the source table, or generated by different code.
+Cache lives under the repo's gitignored ``.cache/`` (``_oracle_cache``)
+and is rebuilt when missing, when its input table changes, or when the
+code that generates it changes.
 """
 
 from __future__ import annotations
@@ -54,43 +55,35 @@ _REPO_ROOT = os.path.dirname(
 )
 
 
-def _code_version() -> str:
-    """Fingerprint of the sources whose semantics the oracle must track —
-    a cache generated by older semantics must regenerate, not silently
-    serve stale ground truth."""
+def _oracle_cache(sf_dir: str, cache_root: str | None, name: str, data: str,
+                  table: str, build) -> str:
+    """One oracle table set under ``fixtures/cache.py``'s rule: the cache
+    directory is named by the sf_dir's basename and a digest of its absolute
+    path (two scale directories never share one), and the key holds the
+    sources whose semantics the oracle tracks (``core/*.py`` and this
+    module) and the input table's path, size and mtime — a cache generated
+    by older semantics or from an older table rebuilds, never serving stale
+    ground truth.  ``build(src, out)`` writes ``out`` from ``src``."""
     import glob
     import hashlib
 
+    from .cache import cached, source_digest
+
+    sf = os.path.abspath(sf_dir)
+    tag = hashlib.sha256(sf.encode()).hexdigest()[:8]
+    cache_dir = os.path.join(
+        cache_root or os.path.join(_REPO_ROOT, ".cache"),
+        f"oracle_{os.path.basename(sf)}_{tag}", name,
+    )
     pkg = os.path.join(_REPO_ROOT, "pii_redactor_spark")
-    paths = sorted(glob.glob(os.path.join(pkg, "core", "*.py"))) + [
-        os.path.abspath(__file__),
-    ]
-    h = hashlib.sha256()
-    for f in paths:
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:16]
-
-
-def _fresh(paths: list[str], src: str, vfile: str) -> bool:
-    if not all(os.path.exists(p) for p in paths):
-        return False
-    if any(os.path.getmtime(p) < os.path.getmtime(src) for p in paths):
-        return False
-    try:
-        with open(vfile) as f:
-            return f.read().strip() == _code_version()
-    except OSError:
-        return False
-
-
-def _stamp(vfile: str) -> None:
-    # written LAST, after every table landed — a torn multi-file write
-    # therefore never validates
-    tmp = vfile + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_code_version())
-    os.replace(tmp, vfile)
+    sources = sorted(
+        os.path.relpath(f, pkg)
+        for f in glob.glob(os.path.join(pkg, "core", "*.py"))
+    ) + [os.path.relpath(os.path.abspath(__file__), pkg)]
+    src = os.path.join(sf, table)
+    out = os.path.join(cache_dir, data)
+    return cached(cache_dir, data, lambda: build(src, out),
+                  sources=source_digest(pkg, sources), inputs=[src])
 
 
 # ---------------------------------------------------------------------------
@@ -373,16 +366,13 @@ def materialize_scrub_oracle(
     from .table_pins import assert_shared_tables_pinned
 
     assert_shared_tables_pinned()
-    cache_root = cache_root or os.path.join(_REPO_ROOT, ".cache")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(cache_root, f"oracle_{tag}")
-    scrub_path = os.path.join(out_dir, "scrub_expected.parquet")
-    ent_path = os.path.join(out_dir, "entity_expected.parquet")
-    src = os.path.join(sf_dir, "documents.parquet")
-    vfile = os.path.join(out_dir, "scrub.version")
-    if _fresh([scrub_path, ent_path], src, vfile):
-        return scrub_path, ent_path
+    out_dir = _oracle_cache(sf_dir, cache_root, "scrub", "expected",
+                            "documents.parquet", _write_scrub_oracle)
+    return (os.path.join(out_dir, "scrub_expected.parquet"),
+            os.path.join(out_dir, "entity_expected.parquet"))
 
+
+def _write_scrub_oracle(src: str, out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     banks = _detection_banks()
     stop_re, marker_re = _langid_scorers()
@@ -419,14 +409,10 @@ def materialize_scrub_oracle(
     # land in parquet as a null/int type and break COALESCE(..., 'NONE').
     ent_df["entity_type"] = ent_df["entity_type"].astype("string")
     ent_df["entity_len"] = ent_df["entity_len"].astype("Int64")
-    # atomic-ish: write tmp then replace, so a concurrent reader never sees
-    # a half-written file
-    for df, path in ((scrub_df, scrub_path), (ent_df, ent_path)):
-        tmp = path + ".tmp"
-        df.to_parquet(tmp, index=False)
-        os.replace(tmp, path)
-    _stamp(vfile)
-    return scrub_path, ent_path
+    scrub_df.to_parquet(os.path.join(out_dir, "scrub_expected.parquet"),
+                        index=False)
+    ent_df.to_parquet(os.path.join(out_dir, "entity_expected.parquet"),
+                      index=False)
 
 
 def materialize_embedding_oracle(
@@ -439,18 +425,14 @@ def materialize_embedding_oracle(
     plain NumPy — zero imports from the engine's similarity module, so a
     bug in its plane/centroid construction fails the hash check instead of
     propagating to both sides."""
+    return _oracle_cache(sf_dir, cache_root, "embedding",
+                         "embedding_index_expected.parquet",
+                         "embeddings.parquet", _write_embedding_oracle)
+
+
+def _write_embedding_oracle(src: str, path: str) -> None:
     import numpy as np
 
-    cache_root = cache_root or os.path.join(_REPO_ROOT, ".cache")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(cache_root, f"oracle_{tag}")
-    path = os.path.join(out_dir, "embedding_index_expected.parquet")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    vfile = os.path.join(out_dir, "emb.version")
-    if _fresh([path], src, vfile):
-        return path
-
-    os.makedirs(out_dir, exist_ok=True)
     emb = pd.read_parquet(src, columns=["vec_id", "embedding"])
     m = np.stack(emb["embedding"].to_numpy()).astype(np.float64)
     dim = m.shape[1]
@@ -472,8 +454,5 @@ def materialize_embedding_oracle(
             "ivf_cell": ivf_cell.astype(np.int32),
         }
     )
-    tmp = path + ".tmp"
-    out.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    _stamp(vfile)
-    return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    out.to_parquet(path, index=False)

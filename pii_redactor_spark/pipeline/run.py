@@ -182,10 +182,7 @@ def run_pipeline(
     out_dir: str,
     prefixes_per_commit: int = 64,
     salt_partitions: int | None = None,
-    fail_after_groups: int | None = None,
-    run_id: str | None = None,
     materialize_bytes: bool = True,
-    fail_before_snapshot: int | None = None,
     scrub_cfg: ScrubConfig = DEFAULT_SCRUB,
     toxicity: ToxicityConfig | None = None,
     image_quality: "ImageQualityConfig | None" = None,
@@ -196,8 +193,8 @@ def run_pipeline(
     ``materialize_bytes=False`` is the at-scale form: the same partition-
     committed lineage loop, but each group runs the column-pruned
     decisions-only transform (bytes never read, never written) — resumable
-    AND pixel-free, per the north rule.  ``fail_after_groups`` injects a
-    crash after N committed groups (for the resume test, FIXTURES.md §4).
+    AND pixel-free, per the north rule.  Each run gets a fresh ``run_id``
+    in its lineage and snapshot rows.
 
     ``scrub_metadata=True`` (materialize mode only — raises otherwise)
     rewrites image bytes through the metadata-PII scrub in the same
@@ -208,7 +205,7 @@ def run_pipeline(
             "scrub_metadata requires materialize_bytes=True: decisions "
             "mode never reads or writes image bytes by contract"
         )
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     data_path = f"{out_dir}/data"
     metrics_path = f"{out_dir}/metrics"
 
@@ -221,10 +218,7 @@ def run_pipeline(
     ]
     total = {"n_in": 0, "n_kept": 0, "n_dropped": 0, "n_entities": 0}
 
-    for gi, group in enumerate(groups):
-        if fail_after_groups is not None and gi >= fail_after_groups:
-            raise RuntimeError(f"injected failure before group {gi}")
-
+    for group in groups:
         part = src.where(F.col("phash_prefix").isin(group))
         if materialize_bytes:
             result = scrub_images(part, salt_partitions=salt_partitions,
@@ -273,13 +267,6 @@ def run_pipeline(
             F.current_timestamp().alias("committed_at"),
         ).observe(observed, *(F.sum(k).alias(k) for k in total))
         storage.append_table(lineage, metrics_path)
-
-        if fail_before_snapshot is not None and gi >= fail_before_snapshot:
-            # crash window between lineage append and snapshot commit: the
-            # group is NOT committed, so resume redoes it (idempotent data
-            # overwrite) and appends lineage AGAIN — which is why lineage
-            # consumers must read through read_lineage (latest per part).
-            raise RuntimeError(f"injected failure before snapshot {gi}")
 
         sums = observed.get
         group_counters = {k: int(sums[k] or 0) for k in total}

@@ -2,21 +2,20 @@
 
 Mimics the grading driver: run each Spark query and its DuckDB oracle on the
 same parquet tables, compare row count, column names, and an order-insensitive
-value multiset (floats normalized).  Runs at sf0.001 in CI; the driver reruns
-at sf0.01.
+value multiset (``tools/check_contract.py::norm_cell``: exact on every
+float).  Runs at sf0.001 in CI; the driver reruns at sf0.01.
 """
 
 from __future__ import annotations
 
-import datetime
 import math
-from decimal import Decimal
 from fractions import Fraction
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.check_contract import frame_rows as _multiset
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,37 +41,6 @@ def ddb():
     return con
 
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v:.6g}"
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    return v
-
-
-def _exact(v):
-    return None if v is None or v != v else float(v)
-
-
-def _multiset(df, exact=()):
-    """Columns named in ``exact`` stay exact Python floats (a DuckDB
-    Decimal converts to float first); the rest go through ``_norm``."""
-    cols = sorted(df.columns)
-    rows = [
-        tuple(_exact(v) if c in exact else _norm(v) for c, v in zip(cols, row))
-        for row in df[cols].itertuples(index=False)
-    ]
-    return cols, sorted(rows, key=repr)
-
-
 @pytest.mark.parametrize("name", sorted(entrymod.oracle_sql().keys()))
 def test_query_matches_oracle(spark, ddb, name):
     q = entrymod.queries()[name]
@@ -91,37 +59,20 @@ def test_query_matches_oracle(spark, ddb, name):
     )
 
 
-# Every money column of the contract, per query: each is built by
+# Every query with a money column: each such column is built by
 # __spark_entry__.money on the Spark side and money_sql in the oracle.
-MONEY_COLUMNS = {
-    "brand_size_revenue": ["revenue"],
-    "cheapest_supplier_per_part": ["best_price"],
-    "customer_spend_deciles": ["spend"],
-    "events_hourly": ["total_value"],
-    "events_running_total": ["running_value"],
-    "events_session_windows": ["session_value"],
-    "events_sessions": ["total_value"],
-    "events_type_pivot": entrymod.EVENT_TYPES,
-    "events_value_band_join": ["sum_value"],
-    "forecast_revenue": ["revenue"],
-    "important_part_value": ["value"],
-    "local_supplier_volume": ["revenue"],
-    "nation_market_share": ["nation_volume"],
-    "nation_pair_volume": ["revenue"],
-    "orders_monthly_growth": ["revenue"],
-    "part_supplier_revenue": ["revenue"],
-    "pricing_summary": ["sum_base_price", "sum_disc_price"],
-    "promo_revenue_share": ["promo_revenue", "total_revenue"],
-    "returned_item_revenue": ["lost_revenue"],
-    "revenue_cube": ["revenue"],
-    "revenue_rollup": ["revenue"],
-    "shipping_priority": ["revenue"],
-    "small_qty_order_revenue": ["avg_yearly"],
-    "supplier_balance_share": ["nation_bal"],
-    "supplier_nation_profit": ["profit"],
-    "top_revenue_supplier": ["total_revenue"],
-    "valuable_idle_customers": ["total_balance"],
-}
+MONEY_QUERIES = (
+    "brand_size_revenue", "cheapest_supplier_per_part",
+    "customer_spend_deciles", "events_hourly", "events_running_total",
+    "events_session_windows", "events_sessions", "events_type_pivot",
+    "events_value_band_join", "forecast_revenue", "important_part_value",
+    "local_supplier_volume", "nation_market_share", "nation_pair_volume",
+    "orders_monthly_growth", "part_supplier_revenue", "pricing_summary",
+    "promo_revenue_share", "returned_item_revenue", "revenue_cube",
+    "revenue_rollup", "shipping_priority", "small_qty_order_revenue",
+    "supplier_balance_share", "supplier_nation_profit", "top_revenue_supplier",
+    "valuable_idle_customers",
+)
 MONEY_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
@@ -137,12 +88,11 @@ def ddb_money():
 
 
 def test_money_columns_exact(spark, ddb_money):
-    """Every money column equals its DuckDB oracle as an exact float at
-    sf0.01 (the 6-digit ``_norm`` of test_query_matches_oracle cannot see
-    a one-cent difference on a six-figure sum), and the two queries that
-    group lineitem by nation do so at 7, 32 and 200 shuffle partitions:
-    a money answer must not depend on summation order."""
-    runs = [(name, None) for name in sorted(MONEY_COLUMNS)] + [
+    """Every money query equals its DuckDB oracle exactly at sf0.01 (the
+    contract suite runs at sf0.001, where sums are smaller), and the two
+    queries that group lineitem by nation do so at 7, 32 and 200 shuffle
+    partitions: a money answer must not depend on summation order."""
+    runs = [(name, None) for name in MONEY_QUERIES] + [
         (name, n)
         for name in ("nation_pair_volume", "supplier_nation_profit")
         for n in (7, 32, 200)
@@ -153,9 +103,8 @@ def test_money_columns_exact(spark, ddb_money):
     try:
         for name, n in runs:
             spark.conf.set("spark.sql.shuffle.partitions", n or default)
-            money = set(MONEY_COLUMNS[name])
-            got = _multiset(qs[name](spark, MONEY_SF_DIR).toPandas(), money)
-            want = _multiset(ddb_money.sql(oracles[name]).df(), money)
+            got = _multiset(qs[name](spark, MONEY_SF_DIR).toPandas())
+            want = _multiset(ddb_money.sql(oracles[name]).df())
             assert got[0] == want[0], (name, got[0], want[0])
             assert len(got[1]) == len(want[1]), (name, n)
             diff = [(a, b) for a, b in zip(got[1], want[1]) if a != b]
@@ -366,8 +315,8 @@ def test_toxicity_oracle_null_caption_parity(spark, tmp_root):
         assert s_cols == o_cols, name
         assert s_rows == o_rows, (name, s_rows, o_rows)
         # and the NULL row really scored as empty text, not NULL
-        null_row = [r for r in s_rows if r[s_cols.index("doc_id")] == 2][0]
-        assert null_row[s_cols.index("n_toxic")] == 0, null_row
+        null_row = [r for r in s_rows if r[s_cols.index("doc_id")] == "2"][0]
+        assert null_row[s_cols.index("n_toxic")] == "0", null_row
 
 
 def test_image_oracle_null_metadata_parity(spark, tmp_root):
@@ -402,9 +351,9 @@ def test_image_oracle_null_metadata_parity(spark, tmp_root):
     assert s_cols == o_cols, (name, s_cols, o_cols)
     assert s_rows == o_rows, (name, s_rows, o_rows)
     # and the NULL row really flagged null_metadata with keep=false
-    null_row = [r for r in s_rows if r[s_cols.index("image_id")] == 2][0]
+    null_row = [r for r in s_rows if r[s_cols.index("image_id")] == "2"][0]
     assert null_row[s_cols.index("flags_csv")] == "null_metadata", null_row
-    assert null_row[s_cols.index("keep")] is False, null_row
+    assert null_row[s_cols.index("keep")] == "false", null_row
 
 
 def test_audio_oracle_null_metadata_parity(spark, tmp_root):
@@ -440,6 +389,6 @@ def test_audio_oracle_null_metadata_parity(spark, tmp_root):
     s_cols, s_rows = _multiset(
         entrymod.queries()["audio_quality_flags"](spark, sf_dir).toPandas()
     )
-    null_row = [r for r in s_rows if r[s_cols.index("audio_id")] == 2][0]
+    null_row = [r for r in s_rows if r[s_cols.index("audio_id")] == "2"][0]
     assert null_row[s_cols.index("flags_csv")] == "null_metadata", null_row
-    assert null_row[s_cols.index("keep")] is False, null_row
+    assert null_row[s_cols.index("keep")] == "false", null_row

@@ -262,3 +262,84 @@ def test_ann_bench_corpus_structure(spark):
     q = np.array(query_vector(0))
     assert cos(q, vecs[2]) > 0.85
     assert all(not np.allclose(q, v) for v in vecs.values())
+
+
+def test_cache_rebuilds_on_every_trigger(tmp_path):
+    """``fixtures/cache.py``: the same key serves the cache; a changed
+    parameter, source or input file, a deleted data directory, and a build
+    that raised before its marker each rebuild; an unreadable source
+    raises instead of keying the cache on a constant."""
+    import os
+    import shutil
+
+    from pii_redactor_spark.fixtures.cache import cached, source_digest
+
+    (tmp_path / "gen.py").write_text("v1")
+    inp = tmp_path / "input.txt"
+    inp.write_text("a")
+    cache_dir = str(tmp_path / "cache")
+    builds = []
+
+    def build():
+        builds.append(1)
+        os.makedirs(os.path.join(cache_dir, "data"), exist_ok=True)
+
+    def boom():
+        raise RuntimeError("build died")
+
+    def get(params=(1,), builder=build):
+        return cached(cache_dir, "data", builder,
+                      sources=source_digest(str(tmp_path), ["gen.py"]),
+                      params=params, inputs=[str(inp)])
+
+    assert get() == os.path.join(cache_dir, "data") and len(builds) == 1
+    get()
+    assert len(builds) == 1  # same key: served
+    get(params=(2,))
+    assert len(builds) == 2  # changed parameter
+    (tmp_path / "gen.py").write_text("v2")
+    get(params=(2,))
+    assert len(builds) == 3  # changed source
+    inp.write_text("ab")
+    get(params=(2,))
+    assert len(builds) == 4  # rewritten input
+    shutil.rmtree(os.path.join(cache_dir, "data"))
+    get(params=(2,))
+    assert len(builds) == 5  # deleted data directory
+    with pytest.raises(RuntimeError, match="build died"):
+        get(params=(3,), builder=boom)
+    get(params=(2,))
+    assert len(builds) == 6  # the failed build dropped the old marker
+    get(params=(2,))
+    assert len(builds) == 6
+    with pytest.raises(RuntimeError, match="cannot key a cache"):
+        source_digest(str(tmp_path), ["gen.py", "missing.py"])
+
+
+def test_image_metadata_rebuilds_on_derivation_change(spark, tmp_path,
+                                                      monkeypatch):
+    """The contract's image-metadata table is keyed on its derivation's
+    code: an edited ``_derive_image_metadata`` rebuilds the table instead
+    of serving the one the old code wrote."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf"
+    spark.createDataFrame(
+        [(1, "a caption about a lake", "en", "s", 22),
+         (2, "another caption, short", "en", "s", 22)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(sf / "documents.parquet"))
+    first = entry._image_metadata(spark, str(sf))
+    n = first.count()
+    assert n > 0 and first.where(F.col("w") == 7).count() == 0
+    derive = entry._derive_image_metadata
+
+    def edited(spark, sf):
+        return derive(spark, sf).withColumn("w", F.lit(7))
+
+    monkeypatch.setattr(entry, "_derive_image_metadata", edited)
+    again = entry._image_metadata(spark, str(sf))
+    assert again.count() == n
+    assert again.where(F.col("w") != 7).count() == 0

@@ -28,6 +28,32 @@ def fixture_tables(spark, tmp_root):
     return images_path, labels_path
 
 
+@pytest.fixture
+def crash_on_call(monkeypatch):
+    """``crash_on_call(name, n)``: a context in which ``storage.<name>``
+    raises on its n-th call — the crash points of the resume tests."""
+    import contextlib
+
+    from pii_redactor_spark.sources import storage
+
+    @contextlib.contextmanager
+    def crash(name, n):
+        real, calls = getattr(storage, name), []
+
+        def wrapped(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == n:
+                raise RuntimeError(f"injected failure in {name}")
+            return real(*args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(storage, name, wrapped)
+            with pytest.raises(RuntimeError, match="injected failure"):
+                yield
+
+    return crash
+
+
 @pytest.fixture(scope="session")
 def pipeline_out(spark, tmp_root, fixture_tables):
     images_path, labels_path = fixture_tables
@@ -132,7 +158,8 @@ def test_lineage_counters_match(spark, pipeline_out):
     assert 0.05 < summary["n_dropped"] / N_ROWS < 0.25
 
 
-def test_crash_between_lineage_and_snapshot(spark, tmp_root, fixture_tables):
+def test_crash_between_lineage_and_snapshot(spark, tmp_root, fixture_tables,
+                                            crash_on_call):
     """The lineage-append/snapshot-commit crash window: raw metrics gain a
     duplicate row for the uncommitted group; read_lineage dedupes to the
     latest writer and its counters stay exact."""
@@ -140,10 +167,10 @@ def test_crash_between_lineage_and_snapshot(spark, tmp_root, fixture_tables):
 
     images_path, _ = fixture_tables
     out = f"{tmp_root}/out_window"
-    with pytest.raises(RuntimeError, match="before snapshot"):
+    with crash_on_call("commit_snapshot", 1):
         run_pipeline(
             spark, images_path, out, prefixes_per_commit=20,
-            fail_before_snapshot=0, materialize_bytes=False,
+            materialize_bytes=False,
         )
     # lineage row exists for a group that was never snapshot-committed
     raw_before = spark.read.parquet(f"{out}/metrics").count()
@@ -246,14 +273,15 @@ def test_group_totals_match_lineage_and_data(spark, tmp_root,
         assert snap["counters"] == from_lineage == from_data, snap
 
 
-def test_decisions_mode_resumable_and_byte_free(spark, tmp_root, fixture_tables):
+def test_decisions_mode_resumable_and_byte_free(spark, tmp_root, fixture_tables,
+                                                crash_on_call):
     """The at-scale mode: same lineage loop, no bytes read or written."""
     images_path, labels_path = fixture_tables
     out = f"{tmp_root}/out_decisions"
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash_on_call("write_partitioned", 2):
         run_pipeline(
             spark, images_path, out, prefixes_per_commit=20,
-            fail_after_groups=1, materialize_bytes=False,
+            materialize_bytes=False,
         )
     summary = run_pipeline(
         spark, images_path, out, prefixes_per_commit=20,
@@ -273,14 +301,11 @@ def test_decisions_mode_resumable_and_byte_free(spark, tmp_root, fixture_tables)
     assert bad == 0
 
 
-def test_resume_after_crash(spark, tmp_root, fixture_tables):
+def test_resume_after_crash(spark, tmp_root, fixture_tables, crash_on_call):
     images_path, _ = fixture_tables
     out = f"{tmp_root}/out_resume"
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(
-            spark, images_path, out, prefixes_per_commit=20,
-            fail_after_groups=1,
-        )
+    with crash_on_call("write_partitioned", 2):
+        run_pipeline(spark, images_path, out, prefixes_per_commit=20)
     partial = spark.read.parquet(f"{out}/data").count()
     assert 0 < partial < N_ROWS
     summary = run_pipeline(spark, images_path, out, prefixes_per_commit=20)
@@ -291,7 +316,8 @@ def test_resume_after_crash(spark, tmp_root, fixture_tables):
     assert dupes == 0
 
 
-def test_resume_decisions_many_small_groups(spark, tmp_root, fixture_tables):
+def test_resume_decisions_many_small_groups(spark, tmp_root, fixture_tables,
+                                            crash_on_call):
     """Decisions-mode crash -> resume with prefixes >> prefixes_per_commit:
     the resumed run skips exactly the committed parts and covers the rest
     with no duplicates."""
@@ -299,10 +325,10 @@ def test_resume_decisions_many_small_groups(spark, tmp_root, fixture_tables):
 
     images_path, _ = fixture_tables
     out = f"{tmp_root}/out_resume_small_groups"
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash_on_call("write_partitioned", 4):
         run_pipeline(
             spark, images_path, out, prefixes_per_commit=5,
-            fail_after_groups=3, materialize_bytes=False,
+            materialize_bytes=False,
         )
     src = spark.read.parquet(images_path)
     todo, done = todo_prefixes(src, f"{out}/data")

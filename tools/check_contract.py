@@ -13,14 +13,18 @@ per-query result map (the committed tri-scale artifact
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import math
+import os
 import sys
+from decimal import Decimal
 
 import duckdb
+import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -28,26 +32,43 @@ TABLES = [
 ]
 
 
-def norm_cell(v):
-    if v is None or (isinstance(v, float) and math.isnan(v)):
+def norm_cell(v) -> str:
+    """One cell of the contract comparison, as a string.  Exact and typed:
+    a float is its ``repr`` (a DuckDB Decimal converts to float first), so
+    a one-cent difference on any sum shows, and the int 5 (``"5"``) differs
+    from the float 5.0 (``"5.0"``); NULL and NaN differ; timestamps drop
+    their zone."""
+    if v is None:
         return "NULL"
-    if isinstance(v, bool):
+    if isinstance(v, Decimal):
+        v = float(v)
+    if isinstance(v, (bool, np.bool_)):
         return "true" if v else "false"
     if isinstance(v, float):
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return f"{v:.6g}"
+        return "NaN" if math.isnan(v) else repr(v)
+    if isinstance(v, datetime.datetime):
+        return "NULL" if v != v else v.replace(tzinfo=None).isoformat()
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(norm_cell(x) for x in v) + "]"
     return str(v)
 
 
-def frame_fingerprint(df: pd.DataFrame):
+def frame_rows(df: pd.DataFrame) -> tuple[list[str], list[tuple[str, ...]]]:
+    """Columns sorted by name, and the rows of normalized cells, sorted."""
     cols = sorted(df.columns)
-    df = df[cols]
     rows = sorted(
-        tuple(norm_cell(v) for v in row) for row in df.itertuples(index=False)
+        tuple(norm_cell(v) for v in row)
+        for row in df[cols].itertuples(index=False)
     )
+    return cols, rows
+
+
+def frame_fingerprint(df: pd.DataFrame):
+    cols, rows = frame_rows(df)
     h = hashlib.sha256()
     for r in rows:
         h.update("\x1f".join(r).encode())
@@ -58,8 +79,6 @@ def frame_fingerprint(df: pd.DataFrame):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-
-    import os
 
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
 
