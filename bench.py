@@ -788,12 +788,12 @@ def _audio_scale_bench(spark) -> dict | None:
         from pii_redactor_spark.operators.audio import (
             audio_fingerprints,
             audio_neardup_pairs,
+            solid_fingerprint,
         )
 
         t0 = time.perf_counter()
         fps = audio_fingerprints(clips).where(F.col("ok"))
-        pc = F.bit_count("fingerprint")
-        solid = fps.where((pc >= 8) & (pc <= 56)).localCheckpoint()
+        solid = fps.where(solid_fingerprint()).localCheckpoint()
         n_solid = solid.count()
         fp_dt = time.perf_counter() - t0
         t0 = time.perf_counter()

@@ -276,6 +276,16 @@ def audio_fingerprints(df: DataFrame) -> DataFrame:
     return map_rows(df.select("audio_id", "bytes"), FP_SCHEMA, row, failed)
 
 
+def solid_fingerprint() -> Column:
+    """True where ``fingerprint`` is not degenerate: 8 to 56 of its 64
+    bits set.  All-floor content (digital silence) gives near-constant
+    bits, and such clips would pair quadratically in a near-dup join, so
+    near-dup consumers drop them first (``audio_neardup_pairs`` itself
+    does not filter)."""
+    pc = F.bit_count("fingerprint")
+    return (pc >= 8) & (pc <= 56)
+
+
 def audio_neardup_pairs(
     fp_df: DataFrame, max_hamming: int = 6
 ) -> DataFrame:

@@ -109,6 +109,35 @@ def minhash_signature(shingles: Column, n_hashes: int) -> Column:
     )
 
 
+def _explode_keys(
+    df: DataFrame, alias: str, keys: list[Column], keep: tuple
+) -> DataFrame:
+    """``keep`` columns plus one row per struct in ``keys``, its fields as
+    columns."""
+    keyed = df.select(*keep, F.explode(F.array(*keys)).alias(alias))
+    return keyed.select(*keyed.columns[:-1], f"{alias}.*")
+
+
+def with_band_keys(
+    df: DataFrame, sig_col: str, n_hashes: int, bands: int,
+    *keep: str | Column,
+) -> DataFrame:
+    """The one LSH band-key rule: ``keep`` columns plus one row per band,
+    ``(band, bhash)`` with ``bhash`` the xxhash64 of the band's
+    ``n_hashes // bands`` signature rows.  Two signatures share a bucket
+    iff they agree on every row of that band."""
+    r = n_hashes // bands
+    return _explode_keys(df, "bb", [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                *[F.element_at(sig_col, b * r + i) for i in range(1, r + 1)]
+            ).alias("bhash"),
+        )
+        for b in range(bands)
+    ], keep)
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -123,30 +152,11 @@ def minhash_lsh_candidates(
     with n_hashes=64, bands=16 (r=4) the collision curve crosses ~50% around
     Jaccard 0.5.  Output: (id_a, id_b) distinct, id_a < id_b.
     """
-    rows_per_band = n_hashes // bands
     sig = with_shingles(df, text_col, k).select(
         F.col(id_col).alias("_id"),
         minhash_signature(F.col("shingles"), n_hashes).alias("sig"),
     )
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bhash")
+    banded = with_band_keys(sig, "sig", n_hashes, bands, "_id")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -487,6 +497,25 @@ def simhash64(
     return votes.select(F.col("_id").alias(id_col), bits.alias("simhash"))
 
 
+def with_chunk_keys(
+    df: DataFrame, fp_col: str, max_hamming: int, *keep: str | Column
+) -> DataFrame:
+    """The one pigeonhole chunk-key rule: ``keep`` columns plus one row per
+    chunk, ``(chunk, cval)``, splitting the 64-bit ``fp_col`` into
+    ``max_hamming + 1`` disjoint chunks.  Two fingerprints within
+    ``max_hamming`` bits agree exactly on at least one chunk."""
+    width = 64 // (max_hamming + 1)
+    return _explode_keys(df, "cc", [
+        F.struct(
+            F.lit(c).alias("chunk"),
+            F.shiftrightunsigned(fp_col, c * width)
+            .bitwiseAND(F.lit((1 << width) - 1))
+            .alias("cval"),
+        )
+        for c in range(max_hamming + 1)
+    ], keep)
+
+
 def simhash_candidates(
     sim: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
@@ -496,25 +525,9 @@ def simhash_candidates(
     pair within distance max_hamming agrees exactly on >= 1 chunk, so
     candidates come from chunk-equality joins, then the exact popcount
     filter runs only on collisions."""
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    chunks = sim.select(
-        F.col(id_col).alias("_id"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("simhash", c * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("cval"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("_id", "simhash", "cc.chunk", "cc.cval")
+    chunks = with_chunk_keys(
+        sim, "simhash", max_hamming, F.col(id_col).alias("_id"), "simhash"
+    )
     a = chunks.alias("a")
     b = chunks.alias("b")
     pairs = (

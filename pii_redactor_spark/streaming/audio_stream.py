@@ -1,83 +1,40 @@
 """Stateful streaming audio NEAR-dup detection — the audio modality's
-analog of ``neardup_stream`` (MinHash-LSH over captions): detect, as
+analog of ``neardup_stream`` (MinHash-LSH over captions), run by the same
+stateful bucket matcher, ``neardup_stream.match_buckets``: detect, as
 clips arrive, that a new clip is a likely near-duplicate of one already
 seen — across micro-batches and restarts.
 
 Shape: each arriving clip's 64-bit spectral fingerprint
 (``operators.audio.audio_fingerprints`` — mapInPandas, stateless,
-streaming-safe) is exploded into the same ``(chunk, chunk_value)``
-pigeonhole keys the batch join uses (``dedup.simhash_candidates``):
-within hamming <= max_hamming, >= 1 of the (max_hamming + 1) disjoint
-chunks collides, so groups are chunk buckets and the GroupState per
-bucket holds the last ``max_per_bucket`` (id, fingerprint) pairs; the
-exact popcount filter runs only on collisions.
+streaming-safe) is exploded into the same ``(chunk, cval)`` pigeonhole
+keys the batch join uses (``dedup.with_chunk_keys``): within hamming <=
+max_hamming, >= 1 of the (max_hamming + 1) disjoint chunks collides, so
+groups are chunk buckets, each holding the last ``max_per_bucket``
+fingerprints; the exact popcount score runs only on collisions.
 
 Semantics (same documented contract as the caption stream): match
 events are AT-LEAST-ONCE per pair — a pair within distance h collides
 in at least one but possibly several chunks; consumers dedup on
 (id, matched_id) downstream.  Recall within max_hamming is exact by
-pigeonhole, subject only to the ``max_per_bucket`` state bound (hot
-buckets degrade to most-recent-K, never to unbounded state).
-Degenerate fingerprints (popcount outside [8, 56] — true all-floor
-content) are dropped before keying.  Independent silence recordings do
-NOT cluster (bandwidth-normalized bands give them near-random bits —
-measured in the batch leg), while a gain-scaled copy of the SAME
-recording matches exactly, by design: the fingerprint is gain-invariant.
-
-At 10^12 rows: RocksDB state store, ProcessingTimeTimeout TTL for the
-re-crawl horizon, 64-bit state rows (vs the caption stream's 32-hash
-signatures) keep the store small.
+pigeonhole, subject only to the ``max_per_bucket`` state bound.
+Degenerate fingerprints (``operators.audio.solid_fingerprint``) are
+dropped before keying.  Independent silence recordings do NOT cluster
+(bandwidth-normalized bands give them near-random bits — measured in the
+batch leg), while a gain-scaled copy of the SAME recording matches
+exactly, by design: the fingerprint is gain-invariant.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.audio import audio_fingerprints
+from ..operators.audio import audio_fingerprints, solid_fingerprint
+from ..operators.dedup import with_chunk_keys
+from .neardup_stream import match_buckets
 
 MATCH_SCHEMA = "id string, matched_id string, chunk int, hamming int"
-STATE_SCHEMA = "ids array<string>, fps array<long>"
-
-
-def _match_fn_factory(max_hamming: int, max_per_bucket: int):
-    def match_bucket(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        chunk = int(key[0])
-        if state.exists:
-            stored_ids, stored_fps = state.get
-            ids = list(stored_ids)
-            fps = [int(x) for x in stored_fps]
-        else:
-            ids, fps = [], []
-        out: list[tuple] = []
-        mask = (1 << 64) - 1
-        for pdf in pdfs:
-            for _id, fp in zip(pdf["_id"], pdf["fingerprint"]):
-                fp = int(fp)
-                for prev_id, prev_fp in zip(ids, fps):
-                    h = bin((fp ^ prev_fp) & mask).count("1")
-                    if h <= max_hamming:
-                        out.append((str(_id), prev_id, chunk, h))
-                ids.append(str(_id))
-                fps.append(fp)
-                if len(ids) > max_per_bucket:
-                    ids = ids[-max_per_bucket:]
-                    fps = fps[-max_per_bucket:]
-        state.update((ids, fps))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["id", "matched_id", "chunk", "hamming"]
-            )
-
-    return match_bucket
+_MASK = (1 << 64) - 1
 
 
 def audio_match_stream(
@@ -89,36 +46,16 @@ def audio_match_stream(
     """Match-event stream: (id, matched_id, chunk, hamming) whenever an
     arriving clip's fingerprint lands within ``max_hamming`` bits of a
     previously seen one.  Input stream: (audio_id, bytes)."""
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
+    def hamming(fp: list[int], prev: list[int]) -> int | None:
+        h = ((fp[0] ^ prev[0]) & _MASK).bit_count()
+        return h if h <= max_hamming else None
+
     fps = audio_fingerprints(
         stream.select(F.col(id_col).alias("audio_id"), "bytes")
-    ).where(F.col("ok"))
-    pc = F.bit_count("fingerprint")
-    solid = fps.where((pc >= 8) & (pc <= 56)).select(
-        F.col("audio_id").alias("_id"), "fingerprint"
-    )
-    keyed = solid.select(
-        "_id",
-        "fingerprint",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("fingerprint", c * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("cval"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("_id", "fingerprint", "cc.chunk", "cc.cval")
-    return keyed.groupBy("chunk", "cval").applyInPandasWithState(
-        _match_fn_factory(max_hamming, max_per_bucket),
-        outputStructType=MATCH_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ).where(F.col("ok") & solid_fingerprint())
+    return match_buckets(
+        with_chunk_keys(fps, "fingerprint", max_hamming,
+                        F.col("audio_id").alias("_id"),
+                        F.array("fingerprint").alias("vals")),
+        hamming, MATCH_SCHEMA, max_per_bucket,
     )

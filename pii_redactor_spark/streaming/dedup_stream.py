@@ -1,56 +1,29 @@
-"""Stateful streaming dedup — applyInPandasWithState.
+"""Stateful streaming dedup — Spark's native streaming ``dropDuplicates``.
 
 A continuously-ingested corpus re-sees the same content (re-crawls, mirror
 feeds).  This operator emits only the FIRST occurrence of each content
-fingerprint across all micro-batches: rows are grouped by fingerprint and a
-per-group GroupState flag marks "already emitted".  The state store lives in
-the checkpoint, so dedup survives restarts — the streaming form of
-``operators.dedup.dedupe_exact``.
+fingerprint across all micro-batches.  ``dropDuplicates`` on a stream
+plans a JVM ``StreamingDeduplicate`` over a hash exchange on ``fp``: the
+state store holds the seen fingerprints and lives in the checkpoint, so
+dedup survives restarts — the streaming form of
+``operators.dedup.dedupe_exact``, with no Python worker.
 
-Scale shape: state is one boolean per distinct fingerprint, partitioned by
-the shuffle on ``fp`` — at 10^12 rows pair with RocksDB state store and a
-state TTL (re-crawl horizon) via ``GroupStateTimeout.ProcessingTimeTimeout``;
-the no-timeout default here keeps the test deterministic.
+Scale shape: state is one key per distinct fingerprint, partitioned by
+the shuffle on ``fp`` — at 10^12 rows pair with the RocksDB state store
+and a watermark (``dropDuplicatesWithinWatermark``) for the re-crawl
+horizon; without one, state grows with the distinct content.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "image_id string, caption string, fp string"
-STATE_SCHEMA = "seen boolean"
-
-
-def _first_only(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        return  # fingerprint already emitted in an earlier batch
-    first = None
-    for pdf in pdfs:
-        if len(pdf) and first is None:
-            first = pdf.iloc[[0]][["image_id", "caption", "fp"]]
-    if first is not None:
-        state.update((True,))
-        yield first
 
 
 def dedup_stream(stream: DataFrame, text_col: str = "caption") -> DataFrame:
-    """First-occurrence-only stream keyed by content hash (md5)."""
-    keyed = stream.withColumn("fp", F.md5(text_col)).select(
-        "image_id", F.col(text_col).alias("caption"), "fp"
-    )
-    return keyed.groupBy("fp").applyInPandasWithState(
-        _first_only,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """First-occurrence-only stream keyed by content hash (md5):
+    ``(image_id, caption, fp)``."""
+    return stream.select(
+        "image_id", F.col(text_col).alias("caption"),
+        F.md5(text_col).alias("fp"),
+    ).dropDuplicates(["fp"])

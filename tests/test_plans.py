@@ -315,3 +315,19 @@ def test_materialize_with_metadata_scrub_two_udf_nodes(spark):
     plan = _plan(scrub_images(df, scrub_metadata=True))
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2, plan
     assert "Exchange" not in plan, plan
+
+
+def test_dedup_stream_plans_native_dedup(spark):
+    """Streaming first-occurrence dedup is Spark's own JVM operator (a
+    checkpointed ``StreamingDeduplicate`` after a hash exchange on the
+    fingerprint), not a Python GroupState function."""
+    from pii_redactor_spark.streaming.dedup_stream import dedup_stream
+
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").cast("string").alias("image_id"),
+        (F.col("value") % 7).cast("string").alias("caption"),
+    )
+    plan = _plan(dedup_stream(stream))
+    assert "StreamingDeduplicate" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+    assert "hashpartitioning(fp#" in plan, plan

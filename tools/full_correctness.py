@@ -25,6 +25,9 @@ def main() -> None:
     all_ok = True
     for sf in SCALES:
         tmp = os.path.join(REPO, ".cache", f"contract_{sf}.json")
+        # a file left by an earlier run must never pass for this one
+        if os.path.exists(tmp):
+            os.remove(tmp)
         env = dict(
             os.environ,
             CHECK_CONTRACT_JSON=tmp,
@@ -41,11 +44,20 @@ def main() -> None:
         if proc.returncode != 0:
             all_ok = False
             print(proc.stdout[-4000:], file=sys.stderr)
+        if not os.path.exists(tmp):
+            # check_contract.py died before writing (e.g. OOM-killed)
+            merged["scales"][sf] = {
+                "sec": dt, "returncode": proc.returncode,
+                "status": "failed", "n_queries": 0,
+            }
+            all_ok = False
+            continue
         with open(tmp) as f:
             doc = json.load(f)
         res = doc["results"]
         merged["scales"][sf] = {
             "sec": dt,
+            "returncode": proc.returncode,
             "n_queries": len(res),
             "n_match": sum(1 for r in res.values()
                            if r["status"] == "match"),
