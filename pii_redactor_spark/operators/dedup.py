@@ -97,15 +97,16 @@ def with_shingles(df: DataFrame, text_col: str = "text",
 def minhash_signature(shingles: Column, n_hashes: int) -> Column:
     """n_hashes-permutation MinHash signature as an array<bigint>.
 
-    Permutation i = xxhash64 with seed i (stable across runs/executors);
-    min over the shingle set per permutation."""
+    Permutation i = xxhash64 of (shingle, i) (stable across
+    runs/executors); min over the shingle set per permutation.  The lambda
+    takes one parameter: ``F.transform`` reads a two-parameter one as
+    ``(element, index)``."""
+
+    def perm(i: int):
+        return lambda s: F.xxhash64(s, F.lit(i))
+
     return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(n_hashes)
-        ]
+        *[F.array_min(F.transform(shingles, perm(i))) for i in range(n_hashes)]
     )
 
 

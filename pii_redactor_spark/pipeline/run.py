@@ -26,9 +26,11 @@ Physical plan (SURVEY.md §4): one narrow stage —
 
   Lineage and totals both come from the written data, never from a second
   run of the scrub UDF.  On restart, committed prefixes are skipped
-  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` collects the
-  input's distinct prefixes and drops the manifest's committed set, which
-  ``storage.committed_parts`` already holds on the driver.
+  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` takes the
+  input's prefixes from its ``phash_prefix=`` partition directories, listed
+  on the driver, and drops the manifest's committed set, which
+  ``storage.committed_parts`` already holds there.  The input must be laid
+  out ``partitionBy("phash_prefix")``.
 """
 
 from __future__ import annotations
@@ -56,17 +58,20 @@ DECISION_COLS = [
 def todo_prefixes(src: DataFrame, data_path: str) -> tuple[list[int], int]:
     """Uncommitted partition ids in deterministic order, plus done count.
 
-    The resume contract (SURVEY.md §2.10): todo = distinct input partitions
-    minus committed ones, filtered on the driver against the manifest's
-    committed set.
+    The resume contract (SURVEY.md §2.10): todo = the input's partitions
+    minus committed ones.  Both sets come from the driver: the input's
+    ``phash_prefix=`` directories from its file listing
+    (``storage.partition_values``, which raises on a source not laid out
+    by ``phash_prefix``) and the manifest's committed set; no Spark job.
 
     Returns ``(todo, n_skipped)`` where ``n_skipped`` counts only committed
     parts that are prefixes of THIS input (a manifest may carry parts from a
     broader earlier run; those are not part of this job's totals).
     """
     done = storage.committed_parts(data_path)
-    distinct = src.select("phash_prefix").distinct()
-    all_p = sorted(r[0] for r in distinct.collect())
+    all_p = sorted(
+        int(v) for v in storage.partition_values(src, "phash_prefix")
+    )
     todo = [p for p in all_p if p not in done]
     return todo, len(all_p) - len(todo)
 

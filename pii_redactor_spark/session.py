@@ -31,6 +31,28 @@ Tables with more directories than the cutoff (the IVF store's ``ivf_cell``
 fan-out) still get the listing job.  On a cluster over object storage the
 parallel listing is the right choice, so the session builders in
 ``jobs/*.py`` do not set it.
+
+``get_spark`` also starts the Python workers through
+``spark.python.daemon.module = pii_redactor_spark.worker_daemon``.  Spark
+puts ``pyspark.zip``, the py4j zip and the spark-core jar ahead of
+site-packages on the worker's path, and every task runs
+``importlib.invalidate_caches()`` (pyspark 4.1.2
+``worker_util.py:144``, in ``setup_spark_files``, called at
+``worker.py:3355``).  CPython 3.11's ``zipimporter.invalidate_caches``
+re-reads its whole archive directory, and a worker holds 16 zipimporters
+over those archives: about 28k entries.  Timed inside 20 tasks at local[4]
+on a 4-vCPU VM, the call took 115–212 ms (median 130 ms) a task, and
+0.1 ms once the daemon drops the archives from the path, which it does
+when an installed pyspark and py4j resolve without them.  It is a local-only
+setting: the ``jobs/*.py`` cluster sessions ship this package as
+``--py-files``, which are not on the daemon's path when it starts, so it
+is not in ``ENGINE_CONF``.  For the same reason ``get_spark`` puts the
+package's own directory on the workers' ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``; a caller that overrides it must keep
+the package importable), so a session started from any working directory
+can start its daemon.  (``pythonInitTime`` does not show this cost:
+a reused worker takes its ``boot_time`` at ``worker.py:3300`` and then
+blocks for its next task, so that metric counts idle time.)
 """
 
 from __future__ import annotations
@@ -41,6 +63,10 @@ from pyspark.sql import SparkSession
 
 # Partition directories per table level listed on the driver, not by a job.
 DRIVER_LISTING_MAX_DIRS = 256
+
+# The directory holding this package: on the workers' path, so the daemon
+# module resolves whatever the driver's working directory.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # The engine settings every session runs with: tests and benchmarks through
 # ``get_spark``, and the ``jobs/*.py`` spark-submit entry points as they are.
@@ -68,8 +94,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """The local session: ``ENGINE_CONF`` plus the local-only settings
-    (master, shuffle partitions, driver memory, UI off, driver listing),
-    then ``extra_conf``."""
+    (master, shuffle partitions, driver memory, UI off, driver listing,
+    worker daemon and its path), then ``extra_conf``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return SparkSession.builder.appName(app_name).config(map={
         **ENGINE_CONF,
@@ -79,5 +105,7 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.sql.sources.parallelPartitionDiscovery.threshold":
             str(DRIVER_LISTING_MAX_DIRS),
+        "spark.python.daemon.module": "pii_redactor_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
         **(extra_conf or {}),
     }).getOrCreate()

@@ -24,6 +24,7 @@ import json
 import os
 import tempfile
 import time
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -54,6 +55,28 @@ def read_table(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
+
+
+def partition_values(df: DataFrame, col: str) -> set[str]:
+    """The ``col`` values of a table partitioned by ``col``, parsed from the
+    ``col=<value>`` directory of each of ``df.inputFiles()``: the listing
+    the read already made on the driver, so no Spark job (Iceberg answers
+    the same question from its manifest summaries).
+
+    Raises ``ValueError`` on a file outside such a directory and on a NULL
+    (``__HIVE_DEFAULT_PARTITION__``) value: a partial answer would drop
+    partitions silently."""
+    values = set()
+    for uri in df.inputFiles():
+        dirs = [d for d in uri.split("/")[:-1] if d.startswith(f"{col}=")]
+        if not dirs:
+            raise ValueError(f"{uri} is not under a {col}= directory")
+        # The URI's percent-encoding, then Spark's escaping of the value.
+        value = unquote(unquote(dirs[-1][len(col) + 1:]))
+        if value == "__HIVE_DEFAULT_PARTITION__":
+            raise ValueError(f"{uri} is in the NULL {col} partition")
+        values.add(value)
+    return values
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:

@@ -610,7 +610,7 @@ def test_pipeline_materialize_scrubs_metadata(spark, tmp_root):
         rows,
         "image_id string, bytes binary, w int, h int, fmt string, "
         "caption string, phash long, phash_prefix int",
-    ).write.mode("overwrite").parquet(src)
+    ).write.mode("overwrite").partitionBy("phash_prefix").parquet(src)
     out = f"{tmp_root}/exif_pipe_out"
     summary = run_pipeline(
         spark, src, out, materialize_bytes=True, scrub_metadata=True

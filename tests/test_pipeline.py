@@ -213,10 +213,10 @@ def _job_descriptions(spark, action) -> list[str]:
 
 
 def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
-    """A one-group decisions run costs six Spark jobs: input schema, the
-    todo distinct (map + result), the data write, and the lineage append
-    (map + write) with the group totals observed on it.  Partition
-    directories are listed on the driver, the written data is read back
+    """A one-group decisions run costs four Spark jobs: input schema, the
+    data write, and the lineage append (map + write) with the group totals
+    observed on it.  Partition directories are listed on the driver, the
+    todo prefixes come from that listing, the written data is read back
     with its known schema, and the totals take no job of their own."""
     import pyspark
 
@@ -235,9 +235,37 @@ def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
     listing = [d for d in jobs
                if d.startswith("Listing leaf files and directories")]
     assert not listing, listing
-    assert len(jobs) <= 6, jobs
+    assert len(jobs) <= 4, jobs
     if pyspark.__version__ == "4.1.2":
-        assert len(jobs) == 6, jobs
+        assert len(jobs) == 4, jobs
+
+
+def test_partition_values_from_listing(spark, tmp_root, fixture_tables):
+    """The prefixes parsed from the input's file listing are its distinct
+    ``phash_prefix`` values; a table not laid out by ``phash_prefix``, or
+    one holding a NULL-prefix directory, raises instead of giving a short
+    list."""
+    from pii_redactor_spark.sources.storage import partition_values
+
+    images_path, _ = fixture_tables
+    src = spark.read.parquet(images_path)
+    want = {r[0] for r in src.select("phash_prefix").distinct().collect()}
+    assert {int(v) for v in partition_values(src, "phash_prefix")} == want
+
+    rows = src.select("image_id", "phash_prefix").limit(20)
+    flat = f"{tmp_root}/pv_flat"
+    rows.write.mode("overwrite").parquet(flat)
+    with pytest.raises(ValueError, match="phash_prefix="):
+        partition_values(spark.read.parquet(flat), "phash_prefix")
+
+    nulls = f"{tmp_root}/pv_null"
+    rows.withColumn(
+        "phash_prefix",
+        F.when(F.col("image_id") != F.lit(rows.first()["image_id"]),
+               F.col("phash_prefix")),
+    ).write.mode("overwrite").partitionBy("phash_prefix").parquet(nulls)
+    with pytest.raises(ValueError, match="NULL"):
+        partition_values(spark.read.parquet(nulls), "phash_prefix")
 
 
 def test_group_totals_match_lineage_and_data(spark, tmp_root,

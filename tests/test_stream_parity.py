@@ -67,19 +67,16 @@ def test_audio_stream_pairs_equal_batch_pairs(spark, tmp_root):
     assert stream_pairs == batch_pairs
 
 
-def test_neardup_stream_pairs_equal_batch_lsh_pairs(spark, tmp_root):
-    from pii_redactor_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        minhash_signature,
-        with_shingles,
-    )
-    from pii_redactor_spark.streaming.neardup_stream import (
-        neardup_match_stream,
-    )
+BASE_CAPTION = ("the quick brown fox jumps over the lazy dog while the cat "
+                "watches from a warm windowsill in the afternoon sun near "
+                "the garden")
 
-    base = ("the quick brown fox jumps over the lazy dog while the cat "
-            "watches from a warm windowsill in the afternoon sun near the "
-            "garden")
+
+def _planted_captions() -> list[tuple[str, str]]:
+    """``(doc_id, text)``: ``p0``-``p4`` around one caption, 300 random
+    ones, and for every tenth a one-word edit (``e``) and a one-word
+    prefix (``p``) copy."""
+    base = BASE_CAPTION
     rows = [("p0", base), ("p1", base), ("p2", base.replace("lazy", "sleepy")),
             ("p3", base + " today"),
             ("p4", "spark partitions shuffle data across executors")]
@@ -91,7 +88,20 @@ def test_neardup_stream_pairs_equal_batch_lsh_pairs(spark, tmp_root):
             edit = words[:-1] + ["edited"]
             rows += [(f"r{i:03d}e", " ".join(edit)),
                      (f"r{i:03d}p", " ".join(["new"] + words))]
-    schema = "doc_id string, text string"
+    return rows
+
+
+def test_neardup_stream_pairs_equal_batch_lsh_pairs(spark, tmp_root):
+    from pii_redactor_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        minhash_signature,
+        with_shingles,
+    )
+    from pii_redactor_spark.streaming.neardup_stream import (
+        neardup_match_stream,
+    )
+
+    rows, schema = _planted_captions(), "doc_id string, text string"
 
     got = _one_batch(
         spark, tmp_root, "parity_neardup", rows, schema,
@@ -117,3 +127,35 @@ def test_neardup_stream_pairs_equal_batch_lsh_pairs(spark, tmp_root):
     assert {frozenset(("p0", "p1")), frozenset(("p0", "p2"))} <= {
         p for p, _ in batch_pairs}
     assert stream_pairs == batch_pairs
+
+
+def test_minhash_estimate_tracks_exact_jaccard(spark):
+    """Each signature entry is its own permutation, so the entries of one
+    signature differ and the agreement rate of two signatures estimates the
+    exact Jaccard of their shingle sets: within 0.15 at 64 hashes for every
+    planted pair (p0 against p1-p3, each random caption against its edit
+    and its prefix copy)."""
+    from pii_redactor_spark.operators.dedup import (
+        exact_jaccard,
+        minhash_signature,
+        with_shingles,
+    )
+
+    n = 64
+    rows = _planted_captions()
+    ids = {doc_id for doc_id, _ in rows}
+    pairs = [("p0", p) for p in ("p1", "p2", "p3")] + [
+        (d, d + v) for d in sorted(ids) if d + "e" in ids for v in "ep"]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    sigs = {r["doc_id"]: r["sig"] for r in with_shingles(docs).select(
+        "doc_id", minhash_signature(F.col("shingles"), n).alias("sig")
+    ).collect()}
+    assert len(set(sigs["p0"])) == n
+    exact = exact_jaccard(
+        spark.createDataFrame(pairs, "id_a string, id_b string"), docs
+    ).collect()
+    assert len(exact) == len(pairs) == 63
+    for r in exact:
+        a, b = sigs[r["id_a"]], sigs[r["id_b"]]
+        est = sum(x == y for x, y in zip(a, b)) / n
+        assert abs(est - r["jaccard"]) <= 0.15, (r, est)
