@@ -2708,18 +2708,34 @@ def _metadata_table(spark: SparkSession, sf: str, name: str,
     so the contract queries read a cached parquet and only the first call
     pays the md5 derivation.  The cache (``fixtures/cache.py``) is keyed on
     ``derive``'s source text and on the documents table's path, size and
-    mtime, so an edited derivation or a rewritten table rebuilds it."""
+    mtime, so an edited derivation or a rewritten table rebuilds it.
+
+    Each cache directory records its sf path in ``sf_path``; a call removes
+    the sibling directories whose sf path no longer exists (or that hold no
+    record), so temporary sf dirs do not leave one directory each behind."""
     import hashlib
     import inspect
     import os
+    import shutil
 
     from pii_redactor_spark.fixtures.cache import cached
 
     sf = os.path.abspath(sf)
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".cache", name,
-        hashlib.sha256(sf.encode()).hexdigest()[:16],
-    )
+    root = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache",
+                        name)
+    cache_dir = os.path.join(root, hashlib.sha256(sf.encode()).hexdigest()[:16])
+    for entry in os.listdir(root) if os.path.isdir(root) else []:
+        other = os.path.join(root, entry)
+        try:
+            with open(os.path.join(other, "sf_path")) as f:
+                gone = not os.path.exists(f.read())
+        except OSError:
+            gone = True
+        if gone and other != cache_dir:
+            shutil.rmtree(other, ignore_errors=True)
+    os.makedirs(cache_dir, exist_ok=True)
+    with open(os.path.join(cache_dir, "sf_path"), "w") as f:
+        f.write(sf)
     path = cached(
         cache_dir, "meta",
         lambda: derive(spark, sf).write.mode("overwrite").parquet(

@@ -19,7 +19,7 @@ from .classify import classify_entity
 from .detect import DEFAULT_CONFIDENCE_THRESHOLD, detect_spans
 from .langid import classify_batch
 from .patterns import DEFAULT_MASK
-from .quality import DEFAULT_QUALITY, QualityConfig, quality_flags_batch
+from .quality import DEFAULT_QUALITY, quality_flags_batch
 from .redact import redact_simple, redact_typed
 
 
@@ -40,14 +40,13 @@ class ScrubResult:
 
 def scrub_text(
     text: str,
-    cfg: QualityConfig = DEFAULT_QUALITY,
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     replacement: str = DEFAULT_MASK,
     preserve_format: bool = True,
 ) -> ScrubResult:
     """Full per-row pipeline: langid -> quality -> detect -> classify -> splice."""
     langs, confs = classify_batch([text])
-    flags, bpc, metrics = quality_flags_batch([text], cfg)
+    flags, bpc, metrics = quality_flags_batch([text], DEFAULT_QUALITY)
 
     spans = detect_spans(text or "", confidence_threshold)
     entities = [

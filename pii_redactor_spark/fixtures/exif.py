@@ -431,15 +431,14 @@ def scrub_exif(
     *,
     strip_device: bool = False,
     strip_timestamps: bool = False,
-    drop_xmp: bool = True,
 ) -> tuple[bytes, dict]:
     """Strip PII metadata from a JPEG byte stream.
 
     Removed unconditionally: the whole GPS IFD, Artist/Copyright,
     MakerNote, UserComment, ImageUniqueID, CameraOwnerName, body and
     lens serial numbers, the IFD1 thumbnail (pre-crop privacy leak),
-    and — under ``drop_xmp`` — whole XMP APP1 segments (XMP can carry
-    GPS and creator identity in XML, which this module does not parse).
+    and whole XMP APP1 segments (XMP can carry GPS and creator identity in
+    XML, which this module does not parse).
     Orientation, Make/Model (unless ``strip_device``), and timestamps
     (unless ``strip_timestamps``) survive.  Only the first Exif APP1 is
     scrubbed and rebuilt; a later one, and one whose rebuild would not
@@ -470,9 +469,7 @@ def scrub_exif(
                 out += payload
             elif "Exif" not in report["removed"]:
                 report["removed"].append("Exif")
-        elif marker == 0xE1 and drop_xmp and jpeg[s + 4 : e].startswith(
-            _XMP_PREFIX
-        ):
+        elif marker == 0xE1 and jpeg[s + 4 : e].startswith(_XMP_PREFIX):
             report["removed"].append("XMP")
             out += jpeg[consumed:s]
             consumed = e

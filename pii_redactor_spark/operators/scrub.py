@@ -26,10 +26,10 @@ pandas UDF.  Consequences at scale:
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -37,12 +37,7 @@ from ..core.classify import classify_entity
 from ..core.detect import DEFAULT_CONFIDENCE_THRESHOLD, detect_batch
 from ..core.langid import classify_batch
 from ..core.patterns import DEFAULT_MASK
-from ..core.quality import (
-    DEFAULT_QUALITY,
-    QualityConfig,
-    flat_codes,
-    quality_flags_batch,
-)
+from ..core.quality import DEFAULT_QUALITY, flat_codes, quality_flags_batch
 from ..core.redact import redact_simple, redact_typed
 
 # Built as objects (not a DDL string) so the module imports without an
@@ -75,9 +70,10 @@ class ScrubConfig:
     """Dials the reference exposes on PIIRedactor / redact():
     ``confidence_threshold`` (inference.py:68), ``replacement`` and
     ``preserve_format`` (inference.py:356-360).  Defaults reproduce the
-    reference defaults (and round-1 behavior) exactly."""
+    reference defaults (and round-1 behavior) exactly.  The quality
+    thresholds are not a dial: every scrub scores against
+    ``core.quality.DEFAULT_QUALITY``."""
 
-    quality: QualityConfig = field(default_factory=QualityConfig)
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD
     replacement: str = DEFAULT_MASK
     preserve_format: bool = True
@@ -107,7 +103,7 @@ def scrub_batch(
     """Vectorized scrub of one Arrow batch of captions."""
     flat = flat_codes(texts)
     langs, confs = classify_batch(texts, flat)
-    flags, bpc, metrics = quality_flags_batch(texts, cfg.quality, flat)
+    flags, bpc, metrics = quality_flags_batch(texts, DEFAULT_QUALITY, flat)
     spans_col = detect_batch(texts, cfg.confidence_threshold, flat)
 
     entities_col: list[list[tuple]] = []
@@ -173,32 +169,23 @@ def make_scrub_udf(cfg: ScrubConfig = DEFAULT_SCRUB):
 scrub_udf = make_scrub_udf()
 
 
-def scrub_expr(
-    caption_col: str = "caption", cfg: ScrubConfig = DEFAULT_SCRUB
-) -> Column:
+def with_scrub(df: DataFrame, cfg: ScrubConfig = DEFAULT_SCRUB) -> DataFrame:
+    """Attach scrub results of ``caption`` as flat columns; bytes never
+    leave the JVM."""
     udf = scrub_udf if cfg == DEFAULT_SCRUB else make_scrub_udf(cfg)
-    return udf(F.col(caption_col))
-
-
-def with_scrub(
-    df: DataFrame,
-    caption_col: str = "caption",
-    cfg: ScrubConfig = DEFAULT_SCRUB,
-) -> DataFrame:
-    """Attach scrub results as flat columns; bytes never leave the JVM."""
-    return df.withColumn("_scrub", scrub_expr(caption_col, cfg)).select(
+    return df.withColumn("_scrub", udf(F.col("caption"))).select(
         "*", "_scrub.*"
     ).drop("_scrub")
 
 
-def parallelize_for_udf(df: DataFrame, min_factor: int = 2) -> DataFrame:
-    """Ensure the CPU-bound UDF stage has >= cores*min_factor partitions.
+def parallelize_for_udf(df: DataFrame) -> DataFrame:
+    """Ensure the CPU-bound UDF stage has >= 2 partitions per core.
 
     At 100 TB the scan yields thousands of splits and this is a no-op; on a
     small input (bench/test scale) the scan gives one partition and would
     serialize the whole UDF stage — one round-robin repartition (cheap: the
     table is small precisely when this fires) restores parallelism."""
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism * 2
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

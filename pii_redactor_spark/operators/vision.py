@@ -250,13 +250,11 @@ META_SCRUB_STRUCT = (
 def with_metadata_scrub(
     df: DataFrame,
     *,
-    bytes_col: str = "bytes",
-    fmt_col: str = "fmt",
     strip_device: bool = False,
     strip_timestamps: bool = False,
 ) -> DataFrame:
-    """Attach the metadata-PII scrub IN PLACE: replaces ``bytes_col``
-    with the scrubbed stream and adds ``meta_had_gps`` /
+    """Attach the metadata-PII scrub IN PLACE: replaces ``bytes`` (read
+    with ``fmt``) with the scrubbed stream and adds ``meta_had_gps`` /
     ``meta_removed`` / ``meta_flag``, passing every other column
     through untouched.
 
@@ -289,11 +287,10 @@ def with_metadata_scrub(
             )
 
     scrubbed = df.withColumn(
-        "_meta", _scrub.asNondeterministic()(F.col(bytes_col),
-                                             F.col(fmt_col))
+        "_meta", _scrub.asNondeterministic()(F.col("bytes"), F.col("fmt"))
     )
     return (
-        scrubbed.withColumn(bytes_col, F.col("_meta.bytes"))
+        scrubbed.withColumn("bytes", F.col("_meta.bytes"))
         .withColumn("meta_had_gps", F.col("_meta.meta_had_gps"))
         .withColumn("meta_removed", F.col("_meta.meta_removed"))
         .withColumn("meta_flag", F.col("_meta.meta_flag"))
@@ -301,12 +298,11 @@ def with_metadata_scrub(
     )
 
 
-def verify_integrity(df_after: DataFrame, df_before: DataFrame,
-                     min_psnr_db: float = 40.0) -> DataFrame:
+def verify_integrity(df_after: DataFrame, df_before: DataFrame) -> DataFrame:
     """The north-star image gate as a distributed operator: join the pipeline
     output back to the source on image_id (broadcast-or-shuffle equi join —
     AQE picks) and decode both sides; ``ok`` iff pixels are allclose for
-    lossless fmt / PSNR >= ``min_psnr_db`` for lossy fmt.  A pair where
+    lossless fmt / PSNR >= 40 dB for lossy fmt.  A pair where
     either side fails to decode (corrupt, foreign format, NULL bytes) is
     ``ok = false`` with NULL ``psnr``.
     """
@@ -327,7 +323,7 @@ def verify_integrity(df_after: DataFrame, df_before: DataFrame,
         val = psnr(pa, pb)
         lossless = fa == "png" and fb == "png"
         ok = bool(np.array_equal(pa, pb)) if lossless else bool(
-            val >= min_psnr_db
+            val >= 40.0
         )
         return [(iid, fa, ok, float(min(val, 1e9)))]
 

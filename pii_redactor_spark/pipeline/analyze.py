@@ -60,8 +60,7 @@ def mean_confidence(decisions: DataFrame) -> DataFrame:
     )
 
 
-def with_analysis(decisions: DataFrame,
-                  caption_col: str = "caption") -> DataFrame:
+def with_analysis(decisions: DataFrame) -> DataFrame:
     """Per-row ``analyze_text`` struct (reference inference.py:425-466):
     ``{total_entities, entity_counts, pii_character_ratio,
     average_confidence}`` — computed from the already-materialized
@@ -81,7 +80,7 @@ def with_analysis(decisions: DataFrame,
     pii_chars = F.aggregate(
         ents, F.lit(0), lambda acc, e: acc + F.length(e["text"])
     )
-    total_chars = F.length(F.col(caption_col))
+    total_chars = F.length(F.col("caption"))
     avg_conf = F.when(
         F.size(ents) > 0,
         F.aggregate(ents, F.lit(0.0), lambda a, e: a + e["confidence"])
@@ -109,11 +108,7 @@ def entity_count_histogram(decisions: DataFrame) -> DataFrame:
     )
 
 
-def error_sample(
-    decisions: DataFrame,
-    labels: DataFrame,
-    n: int = 100,
-) -> DataFrame:
+def error_sample(decisions: DataFrame, labels: DataFrame) -> DataFrame:
     """A7: the reference's error-analysis dump (model_training.py:366-428 —
     first 100 mismatches with context) as a join + filter + limit: rows where
     the engine's scrub disagrees with the oracle labels, with both versions
@@ -128,5 +123,5 @@ def error_sample(
             "image_id", "keep", "keep_expected",
             "scrubbed", "scrubbed_expected", "quality_flags",
         )
-        .limit(n)
+        .limit(100)
     )

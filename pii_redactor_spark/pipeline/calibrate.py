@@ -63,14 +63,13 @@ def calibrate_thresholds(decisions: DataFrame) -> DataFrame:
 
 
 _BPC_MAX = 20.0
+_BINS = 2048
 
 
-def calibrate_thresholds_sketched(
-    decisions: DataFrame, bins: int = 2048
-) -> DataFrame:
+def calibrate_thresholds_sketched(decisions: DataFrame) -> DataFrame:
     """Skew-immune calibration: two-phase histogram sketch.
 
-    Phase 1 buckets bits_per_char into ``bins`` fixed-width bins and counts
+    Phase 1 buckets bits_per_char into 2048 fixed-width bins and counts
     per (lang, bin) — a plain hash aggregate with map-side partial combine,
     so the heavy-hitter language spreads across every input task instead of
     collapsing onto one (the applyInPandas failure mode).  Phase 2 turns the
@@ -81,13 +80,13 @@ def calibrate_thresholds_sketched(
     """
     from pyspark.sql import Window
 
-    width = _BPC_MAX / bins
+    width = _BPC_MAX / _BINS
     hist = (
         decisions.select("lang", "bits_per_char")
         .withColumn(
             "bin",
             F.least(
-                F.floor(F.col("bits_per_char") / width), F.lit(bins - 1)
+                F.floor(F.col("bits_per_char") / width), F.lit(_BINS - 1)
             ).cast("int"),
         )
         .groupBy("lang", "bin")

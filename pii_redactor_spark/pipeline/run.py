@@ -79,7 +79,6 @@ def todo_prefixes(src: DataFrame, data_path: str) -> tuple[list[int], int]:
 def scrub_images(
     df: DataFrame,
     salt_partitions: int | None = None,
-    seed: int = 42,
     cfg: ScrubConfig = DEFAULT_SCRUB,
     toxicity: ToxicityConfig | None = None,
     image_quality: "ImageQualityConfig | None" = None,
@@ -104,7 +103,7 @@ def scrub_images(
         df = df.repartition(
             salt_partitions,
             F.col("phash_prefix"),
-            (F.rand(seed) * 16).cast("int"),
+            (F.rand(42) * 16).cast("int"),
         )
     if scrub_metadata:
         from ..operators.vision import with_metadata_scrub
@@ -141,7 +140,6 @@ def scrub_images(
 def scrub_decisions(
     df: DataFrame,
     salt_partitions: int | None = None,
-    seed: int = 42,
     cfg: ScrubConfig = DEFAULT_SCRUB,
     toxicity: ToxicityConfig | None = None,
     image_quality: "ImageQualityConfig | None" = None,
@@ -149,30 +147,21 @@ def scrub_decisions(
     """The at-scale form of the scrub job: decisions only, bytes untouched.
 
     Rewriting 100 TB of image bytes that pass through unchanged is the one
-    thing a 10^12-row pipeline must never do.  This variant projects the
-    caption-side columns, then runs ``scrub_images`` over them, so
-    parquet/Iceberg column pruning never reads ``bytes`` from storage
-    (verify: ReadSchema in ``.explain`` has no bytes field), and the output
-    is the small decisions table keyed by ``image_id`` — keep/drop +
-    scrubbed caption + quality metrics.  Consumers apply it with a
-    partition-pruned equi join against the source table (or an Iceberg
-    metadata-only row-delete); the pixels stay where they are.
+    thing a 10^12-row pipeline must never do.  This variant is
+    ``scrub_images`` followed by a projection onto the decisions columns:
+    Catalyst prunes every column no gate reads out of the scan, so
+    parquet/Iceberg never read ``bytes`` from storage (verify: ReadSchema
+    in ``.explain`` has no bytes field; pinned in tests/test_plans.py), and
+    the output is the small decisions table keyed by ``image_id`` —
+    keep/drop + scrubbed caption + quality metrics.  The one gate that
+    reads ``bytes`` is the opt-in bytes-plausibility check of
+    ``image_quality``: the scan then reads the binary column, its
+    documented cost, but the output still drops it.  Consumers apply the
+    table with a partition-pruned equi join against the source table (or
+    an Iceberg metadata-only row-delete); the pixels stay where they are.
     """
-    # Image-quality gating widens the projection by three narrow int/str
-    # metadata columns — still no bytes, still fully column-pruned.  The
-    # one exception is the opt-in bytes-plausibility check, which needs
-    # octet_length(bytes): the scan then reads the binary column (its
-    # documented cost), but DECISION_COLS still drops it from the output.
-    if image_quality is None:
-        meta = []
-    elif image_quality.bytes_per_pixel_bounds is not None:
-        meta = ["w", "h", "fmt", "bytes"]
-    else:
-        meta = ["w", "h", "fmt"]
-    pruned = df.select("image_id", "phash_prefix", "caption", *meta)
-    scrubbed = scrub_images(pruned, salt_partitions=salt_partitions,
-                            seed=seed, cfg=cfg, toxicity=toxicity,
-                            image_quality=image_quality)
+    scrubbed = scrub_images(df, salt_partitions=salt_partitions, cfg=cfg,
+                            toxicity=toxicity, image_quality=image_quality)
     extra = [] if toxicity is None else list(TOXICITY_COLS)
     if image_quality is not None:
         extra = [*extra, "image_flags"]

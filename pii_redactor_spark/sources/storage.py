@@ -254,12 +254,11 @@ def read_table_as_of(
     spark: SparkSession,
     table_path: str,
     snapshot_id: int,
-    partition_col: str = "phash_prefix",
 ) -> DataFrame:
-    """Read the table as of ``snapshot_id``: only partitions committed by
-    then are scanned — the membership filter lands in the scan's
-    PartitionFilters, so later partitions are never read from storage
-    (pinned by tests/test_bucketing.py).
+    """Read the table as of ``snapshot_id``: only ``phash_prefix``
+    partitions committed by then are scanned — the membership filter lands
+    in the scan's PartitionFilters, so later partitions are never read
+    from storage (pinned by tests/test_bucketing.py).
 
     Honest boundary vs real Iceberg: this layout commits *partitions* and
     rewrites them in place (dynamic partition overwrite), so a partition
@@ -275,7 +274,7 @@ def read_table_as_of(
 
     parts = parts_as_of(table_path, snapshot_id)
     return read_table(spark, table_path).where(
-        F.col(partition_col).isin([int(p) for p in parts])
+        F.col("phash_prefix").isin([int(p) for p in parts])
         if parts
         else F.lit(False)
     )

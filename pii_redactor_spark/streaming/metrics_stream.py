@@ -2,11 +2,12 @@
 
 Continuous ingest wants continuous counters: keep/drop rates per language per
 time window, tolerating events that arrive late (a straggler executor, a
-backfilled partition).  Standard Structured Streaming shape:
+backfilled partition).  Standard Structured Streaming shape, with one fixed
+window and delay:
 
-    event-time column -> withWatermark(delay) -> groupBy(window, keys).agg
+    ingest_ts -> withWatermark(2 minutes) -> groupBy(1-minute window, lang).agg
 
-The watermark bounds state: windows older than (max event time - delay) are
+The watermark bounds state: windows older than (max event time - 2 min) are
 finalized and their state dropped — without it, a 10^12-row stream's window
 state grows forever.  Rows later than the watermark are dropped from the
 aggregation (counted by Spark's numDroppedRows metric).
@@ -18,17 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_decision_metrics(
-    decisions: DataFrame,
-    ts_col: str = "ingest_ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Per-window, per-language keep/drop counters over a streaming (or
-    batch — same plan) decisions DataFrame carrying an event-time column."""
+def windowed_decision_metrics(decisions: DataFrame) -> DataFrame:
+    """Per-minute, per-language keep/drop counters over a streaming (or
+    batch — same plan) decisions DataFrame carrying an ``ingest_ts``
+    event-time column; a row more than 2 minutes older than the latest
+    event time of the earlier micro-batches is dropped."""
     return (
-        decisions.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), "lang")
+        decisions.withWatermark("ingest_ts", "2 minutes")
+        .groupBy(F.window("ingest_ts", "1 minute").alias("w"), "lang")
         .agg(
             F.count("*").alias("n_rows"),
             F.sum(F.col("keep").cast("long")).alias("n_kept"),

@@ -6,12 +6,14 @@ The reference is strictly batch (SURVEY.md §2.10) and the north rule's
 natural production shape at 10^12 rows, so the engine also exposes the scrub
 stage as a streaming transform:
 
-    readStream(parquet dir, Iceberg-style layout)
+    readStream(parquet dir, its current schema)
       -> scrub_decisions (the batch decisions transform itself — stateless,
-         so the batch/stream plans are identical above the source)
+         so the batch/stream plans are identical above the source, and the
+         scan reads caption-side columns only, never ``bytes``)
       -> writeStream parquet sink, exactly-once via checkpoint + file-sink log
 
-``Trigger.AvailableNow`` drains everything present then stops — the
+``start_scrub_stream`` always runs under ``Trigger.AvailableNow``, which
+drains everything present then stops — the
 batch-resume semantics expressed through Spark's own checkpoint machinery:
 kill it mid-run, restart with the same checkpoint dir, and the file-source
 offset log + sink commit log guarantee no duplicates and full coverage.
@@ -25,34 +27,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.toxicity import ToxicityConfig
-from ..operators.scrub import DEFAULT_SCRUB, ScrubConfig
 from ..pipeline.run import scrub_decisions
 
 
 def scrub_file_stream(
     spark: SparkSession,
     input_dir: str,
-    schema: str | None = None,
-    max_files_per_trigger: int | None = None,
-    cfg: ScrubConfig = DEFAULT_SCRUB,
     toxicity: ToxicityConfig | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of scrub decisions over a growing parquet dir.
 
-    The stream is ``scrub_decisions`` over a file-source stream, so the two
-    share one schema and one column-pruned scan: only caption-side columns
-    are read; image bytes never enter the stream.
+    The stream is ``scrub_decisions`` over a file-source stream whose
+    schema is the directory's current parquet schema, so the two share one
+    schema and one column-pruned scan: only caption-side columns are read;
+    image bytes never enter the stream (pinned in tests/test_streaming.py).
     """
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        static = spark.read.parquet(input_dir)
-        reader = reader.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    schema = spark.read.parquet(input_dir).schema
     return scrub_decisions(
-        reader.parquet(input_dir), cfg=cfg, toxicity=toxicity
+        spark.readStream.schema(schema).parquet(input_dir), toxicity=toxicity
     )
 
 
@@ -61,17 +53,16 @@ def start_scrub_stream(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    toxicity: ToxicityConfig | None = None,
 ) -> StreamingQuery:
-    """Start the scrub stream with exactly-once parquet sink semantics."""
-    decisions = scrub_file_stream(spark, input_dir, toxicity=toxicity)
-    writer = (
-        decisions.writeStream.format("parquet")
+    """Start the scrub stream under ``Trigger.AvailableNow`` with
+    exactly-once parquet sink semantics: it drains what is present, then
+    stops; a restart on the same checkpoint picks up only new files."""
+    return (
+        scrub_file_stream(spark, input_dir)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

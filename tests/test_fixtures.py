@@ -343,3 +343,38 @@ def test_image_metadata_rebuilds_on_derivation_change(spark, tmp_path,
     again = entry._image_metadata(spark, str(sf))
     assert again.count() == n
     assert again.where(F.col("w") != 7).count() == 0
+
+
+def test_image_metadata_cache_drops_gone_sf_dirs(spark, tmp_path):
+    """A derived metadata table's cache directory goes once its sf dir is
+    gone: deriving the table for another sf removes it, and serves that
+    sf's own table."""
+    import hashlib
+    import os
+    import shutil
+
+    import __spark_entry__ as entry
+
+    def sf_dir(name, n):
+        sf = tmp_path / name
+        spark.createDataFrame(
+            [(i, f"caption {name} {i}", "en", "s", 12) for i in range(n)],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        ).write.parquet(str(sf / "documents.parquet"))
+        return str(sf)
+
+    def cache_dir(sf):
+        return os.path.join(
+            os.path.dirname(os.path.abspath(entry.__file__)), ".cache",
+            "image_meta", hashlib.sha256(sf.encode()).hexdigest()[:16],
+        )
+
+    a = sf_dir("a", 2)
+    assert entry._image_metadata(spark, a).count() == 2
+    assert os.path.isdir(cache_dir(a))
+    shutil.rmtree(a)
+    b = sf_dir("b", 3)
+    ids = {r["image_id"] for r in entry._image_metadata(spark, b).collect()}
+    assert not os.path.exists(cache_dir(a))
+    assert ids == {0, 1, 2}

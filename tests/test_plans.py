@@ -34,11 +34,24 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_decisions_plan_never_reads_bytes(images_df):
-    """scrub_decisions must column-prune `bytes` out of the parquet scan."""
+def _decision_configs():
+    from pii_redactor_spark.functions.toxicity import ToxicityConfig
+    from pii_redactor_spark.operators.vision import ImageQualityConfig
+
+    salt = {"salt_partitions": 16}
+    tox = {"toxicity": ToxicityConfig()}
+    imgq = {"image_quality": ImageQualityConfig(min_side=32)}
+    return {"default": {}, "salt": salt, "toxicity": tox, "image_quality": imgq,
+            "all": {**salt, **tox, **imgq}}
+
+
+@pytest.mark.parametrize("config", list(_decision_configs()))
+def test_decisions_plan_never_reads_bytes(images_df, config):
+    """scrub_decisions must column-prune `bytes` out of the parquet scan
+    under every gate that does not read it: Catalyst alone keeps it out."""
     from pii_redactor_spark.pipeline.run import scrub_decisions
 
-    plan = _plan(scrub_decisions(images_df))
+    plan = _plan(scrub_decisions(images_df, **_decision_configs()[config]))
     scan = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scan, plan
     assert all("bytes" not in l for l in scan), scan

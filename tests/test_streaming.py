@@ -83,3 +83,22 @@ def test_stream_matches_batch_semantics(spark, stream_dirs):
     assert batch.count() == streamed.count()
     assert batch.exceptAll(streamed).count() == 0
     assert streamed.exceptAll(batch).count() == 0
+
+
+def test_stream_scan_never_reads_bytes(spark, stream_dirs):
+    """The scrub stream's file scan reads caption-side columns only: the
+    last micro-batch's FileScan ReadSchema has no ``bytes``."""
+    import contextlib
+    import io
+
+    base, input_dir = stream_dirs
+    q = start_scrub_stream(
+        spark, input_dir, f"{base}/plan_out", f"{base}/plan_ckpt"
+    )
+    assert q.awaitTermination(300)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain()
+    scan = [l for l in buf.getvalue().splitlines() if "ReadSchema" in l]
+    assert scan, buf.getvalue()
+    assert all("bytes" not in l for l in scan), scan
