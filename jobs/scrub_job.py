@@ -113,7 +113,7 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     t0 = time.perf_counter()
-    # Both modes run the resumable partition-committed lineage loop
+    # Both modes run the resumable partition-committed loop
     # (pipeline/run.py); `decisions` additionally never reads or writes the
     # image bytes (column-pruned — the at-scale default).
     summary = run_pipeline(

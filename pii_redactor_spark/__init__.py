@@ -8,8 +8,8 @@ Spark DataFrame pipeline over an Iceberg-style table of image+caption pairs:
   pandas UDF stage (``operators.scrub``)
 * language ID + quality heuristics + n-gram perplexity -> same UDF stage
 * partitioning by phash prefix, salted repartition for skew, AQE
-* per-partition lineage + counters to a metrics table; batch resume by
-  anti-joining committed lineage (``pipeline``)
+* manifest-committed partition groups, per-partition lineage read from the
+  committed data, batch resume by anti-joining the committed set (``pipeline``)
 
 Everything here derives from public knowledge only: the PySpark API and the
 reference repo's observable behavior (cited by file:line in docstrings).

@@ -50,21 +50,26 @@ import re
 
 import pandas as pd
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+_PACKAGE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_REPO_ROOT = os.path.dirname(_PACKAGE)
+# Each oracle's key: this module and the package modules its builder imports,
+# transitively (pinned by tests/test_fixtures.py), so an edit to engine logic
+# the oracle never imports rebuilds nothing.
+_SCRUB_SOURCES = ("fixtures/oracle_cache.py", "core/gazetteers.py",
+                  "core/generators.py", "core/langid.py", "core/patterns.py",
+                  "core/quality.py", "core/templates.py")
+_EMBEDDING_SOURCES = ("fixtures/oracle_cache.py",)
 
 
 def _oracle_cache(sf_dir: str, cache_root: str | None, name: str, data: str,
-                  table: str, build) -> str:
+                  table: str, build, sources) -> str:
     """One oracle table set under ``fixtures/cache.py``'s rule: the cache
     directory is named by the sf_dir's basename and a digest of its absolute
     path (two scale directories never share one), and the key holds the
-    sources whose semantics the oracle tracks (``core/*.py`` and this
-    module) and the input table's path, size and mtime — a cache generated
-    by older semantics or from an older table rebuilds, never serving stale
-    ground truth.  ``build(src, out)`` writes ``out`` from ``src``."""
-    import glob
+    package ``sources`` whose semantics the oracle tracks and the input
+    table's path, size and mtime — a cache generated by older semantics or
+    from an older table rebuilds, never serving stale ground truth.
+    ``build(src, out)`` writes ``out`` from ``src``."""
     import hashlib
 
     from .cache import cached, source_digest
@@ -75,15 +80,10 @@ def _oracle_cache(sf_dir: str, cache_root: str | None, name: str, data: str,
         cache_root or os.path.join(_REPO_ROOT, ".cache"),
         f"oracle_{os.path.basename(sf)}_{tag}", name,
     )
-    pkg = os.path.join(_REPO_ROOT, "pii_redactor_spark")
-    sources = sorted(
-        os.path.relpath(f, pkg)
-        for f in glob.glob(os.path.join(pkg, "core", "*.py"))
-    ) + [os.path.relpath(os.path.abspath(__file__), pkg)]
     src = os.path.join(sf, table)
     out = os.path.join(cache_dir, data)
     return cached(cache_dir, data, lambda: build(src, out),
-                  sources=source_digest(pkg, sources), inputs=[src])
+                  sources=source_digest(_PACKAGE, sources), inputs=[src])
 
 
 # ---------------------------------------------------------------------------
@@ -367,7 +367,8 @@ def materialize_scrub_oracle(
 
     assert_shared_tables_pinned()
     out_dir = _oracle_cache(sf_dir, cache_root, "scrub", "expected",
-                            "documents.parquet", _write_scrub_oracle)
+                            "documents.parquet", _write_scrub_oracle,
+                            _SCRUB_SOURCES)
     return (os.path.join(out_dir, "scrub_expected.parquet"),
             os.path.join(out_dir, "entity_expected.parquet"))
 
@@ -427,7 +428,8 @@ def materialize_embedding_oracle(
     propagating to both sides."""
     return _oracle_cache(sf_dir, cache_root, "embedding",
                          "embedding_index_expected.parquet",
-                         "embeddings.parquet", _write_embedding_oracle)
+                         "embeddings.parquet", _write_embedding_oracle,
+                         _EMBEDDING_SOURCES)
 
 
 def _write_embedding_oracle(src: str, path: str) -> None:

@@ -13,19 +13,17 @@ Physical plan (SURVEY.md §4): one narrow stage —
   read kept rows with pure partition pruning and the dropped fraction costs
   one directory, not a scan.
 * Resume: work proceeds in groups of ``phash_prefix`` partitions.  Each group
-  runs four steps:
+  runs two steps:
 
   1. write: dynamic partition overwrite of the group's partitions
-     (idempotent);
-  2. read back: the group's partitions, with the schema just written, so no
-     file footer is read to infer it;
-  3. lineage append: per-partition counters from the read-back, appended
-     with the group's totals observed on the same write (an
-     ``Observation``, not a second aggregation);
-  4. snapshot: the manifest commit of the group's parts and totals.
+     (idempotent), with the group's totals observed on the rows it writes
+     (an ``Observation``, not a read-back or a second aggregation);
+  2. snapshot: the manifest commit of the group's parts and totals, the
+     op's only commit point.
 
-  Lineage and totals both come from the written data, never from a second
-  run of the scrub UDF.  On restart, committed prefixes are skipped
+  Per-partition lineage is read from the committed data on demand
+  (``read_lineage``), never written as a second table; neither it nor the
+  totals re-runs the scrub UDF.  On restart, committed prefixes are skipped
   (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` takes the
   input's prefixes from its ``phash_prefix=`` partition directories, listed
   on the driver, and drops the manifest's committed set, which
@@ -37,7 +35,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from typing import TYPE_CHECKING
@@ -53,6 +51,17 @@ DECISION_COLS = [
     "image_id", "phash_prefix", "lang", "lang_conf", "bits_per_char",
     "n_chars", "n_tokens", "quality_flags", "keep", "has_pii", "n_entities",
 ]
+
+
+def _counters() -> list[Column]:
+    """A part's counters as aggregates over its scrubbed rows: observed on
+    the write, and recomputed from the written data by ``read_lineage``."""
+    return [
+        F.count("*").alias("n_in"),
+        F.sum(F.col("keep").cast("long")).alias("n_kept"),
+        F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+        F.sum("n_entities").alias("n_entities"),
+    ]
 
 
 def todo_prefixes(src: DataFrame, data_path: str) -> tuple[list[int], int]:
@@ -185,10 +194,10 @@ def run_pipeline(
     """Resumable batch run.  Returns summary counters.
 
     ``materialize_bytes=False`` is the at-scale form: the same partition-
-    committed lineage loop, but each group runs the column-pruned
-    decisions-only transform (bytes never read, never written) — resumable
-    AND pixel-free, per the north rule.  Each run gets a fresh ``run_id``
-    in its lineage and snapshot rows.
+    committed loop, but each group runs the column-pruned decisions-only
+    transform (bytes never read, never written) — resumable AND pixel-free,
+    per the north rule.  Each run gets a fresh ``run_id`` in its snapshots,
+    and so in ``read_lineage``.
 
     ``scrub_metadata=True`` (materialize mode only — raises otherwise)
     rewrites image bytes through the metadata-PII scrub in the same
@@ -201,7 +210,6 @@ def run_pipeline(
         )
     run_id = uuid.uuid4().hex[:12]
     data_path = f"{out_dir}/data"
-    metrics_path = f"{out_dir}/metrics"
 
     src = storage.read_table(spark, images_path)
     todo, n_done = todo_prefixes(src, data_path)
@@ -213,7 +221,7 @@ def run_pipeline(
     total = {"n_in": 0, "n_kept": 0, "n_dropped": 0, "n_entities": 0}
 
     for group in groups:
-        part = src.where(F.col("phash_prefix").isin(group))
+        part = src.where(storage.partition_filter("phash_prefix", group))
         if materialize_bytes:
             result = scrub_images(part, salt_partitions=salt_partitions,
                                   cfg=scrub_cfg, toxicity=toxicity,
@@ -233,40 +241,17 @@ def run_pipeline(
                                   cfg=scrub_cfg, toxicity=toxicity,
                                   image_quality=image_quality)
             part_cols = ["phash_prefix"]
-        storage.write_partitioned(out, data_path, part_cols)
-
-        # Counters from the *written* data (column-pruned read; never re-runs
-        # the UDF and never touches bytes), read back with the schema just
-        # written so no footer is read to infer it.
-        written = storage.read_table(
-            spark, data_path, schema=out.schema
-        ).where(F.col("phash_prefix").isin(group))
-        counters = (
-            written.groupBy("phash_prefix")
-            .agg(
-                F.count("*").alias("n_in"),
-                F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-                F.sum("n_entities").alias("n_entities"),
-            )
-        )
-        # The group's totals are observed on the lineage rows as the append
-        # writes them: no second pass over the counters.
+        # The group's totals are observed on the rows as the write writes
+        # them: no read-back, no second pass, never a second UDF run.
         observed = Observation()
-        lineage = counters.select(
-            F.lit(run_id).alias("run_id"),
-            F.lit("scrub").alias("stage"),
-            F.col("phash_prefix").alias("part_id"),
-            "n_in", "n_kept", "n_dropped", "n_entities",
-            F.current_timestamp().alias("committed_at"),
-        ).observe(observed, *(F.sum(k).alias(k) for k in total))
-        storage.append_table(lineage, metrics_path)
-
+        storage.write_partitioned(
+            out.observe(observed, *_counters()), data_path, part_cols
+        )
         sums = observed.get
         group_counters = {k: int(sums[k] or 0) for k in total}
         for k in total:
             total[k] += group_counters[k]
-        # Commit point: manifest snapshot AFTER data + lineage both landed.
+        # Commit point: the manifest snapshot, after the data landed.
         storage.commit_snapshot(data_path, group, group_counters, run_id)
 
     return {
@@ -277,24 +262,34 @@ def run_pipeline(
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Authoritative per-partition lineage: latest row per (stage, part_id).
+    """Per-partition lineage, one row per committed part: the analog of
+    Iceberg's ``partitions`` metadata table, built on read.
 
-    The commit protocol is data -> lineage append -> snapshot; a crash inside
-    that window leaves an orphan lineage row whose group was never committed,
-    and the resumed run appends a fresh one.  Raw `{out}/metrics` is
-    append-only history; THIS view (last writer per partition wins) is what
-    counters and audits must read.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("stage", "part_id").orderBy(
-        F.col("committed_at").desc()
+    The counters are a column-pruned ``groupBy(phash_prefix)`` over
+    ``{out}/data``, partition-filtered to the manifest's committed set: a
+    part written but never committed (a crash before its snapshot) or
+    rolled back has no row and is never scanned.  ``run_id`` and
+    ``committed_at`` come from the snapshot that last committed the part,
+    latest by ``snapshot_id``."""
+    data_path = f"{out_dir}/data"
+    snaps = sorted(storage.read_manifest(data_path)["snapshots"],
+                   key=lambda s: s["snapshot_id"])
+    last = {p: s for s in snaps for p in s["parts"]}
+    provenance = spark.createDataFrame(
+        [(p, s["run_id"], s["committed_at"]) for p, s in last.items()],
+        "part_id int, run_id string, committed_at string",
     )
-    return (
-        storage.read_table(spark, f"{out_dir}/metrics")
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    counters = (
+        storage.read_table(spark, data_path)
+        .where(storage.partition_filter("phash_prefix", last))
+        .groupBy(F.col("phash_prefix").alias("part_id"))
+        .agg(*_counters())
+    )
+    return counters.join(provenance, "part_id").select(
+        "run_id", F.lit("scrub").alias("stage"), "part_id",
+        "n_in", "n_kept", "n_dropped", "n_entities",
+        F.to_timestamp("committed_at", "yyyy-MM-dd'T'HH:mm:ssX")
+        .alias("committed_at"),
     )
 
 

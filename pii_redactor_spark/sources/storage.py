@@ -26,15 +26,12 @@ import tempfile
 import time
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def read_table(
-    spark: SparkSession,
-    path: str,
-    merge_schema: bool = False,
-    schema: StructType | None = None,
+    spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:
     """Read a table; ``merge_schema=True`` enables Iceberg-style schema
     evolution on the parquet stand-in: files written before a column was
@@ -43,15 +40,8 @@ def read_table(
     reads every footer at planning time — at 10^6 files that is a real
     planning cost, so callers opt in per read (Iceberg proper keeps the
     schema in table metadata and avoids the scan; the manifest module
-    plays that role here for snapshots, not schemas).
-
-    ``schema``, when the caller knows it (it just wrote the table), is used
-    as is, partition columns included: no footer is read to infer it, which
-    saves the inference job, as Iceberg takes the schema from table
-    metadata.  Columns the files lack read as NULL."""
+    plays that role here for snapshots, not schemas)."""
     reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
@@ -77,6 +67,14 @@ def partition_values(df: DataFrame, col: str) -> set[str]:
             raise ValueError(f"{uri} is in the NULL {col} partition")
         values.add(value)
     return values
+
+
+def partition_filter(col: str, values) -> Column:
+    """``col IN (values)`` over integer partition ids as one parsed SQL
+    predicate: one JVM call where ``Column.isin`` makes a py4j literal per
+    value, for the same plan (an ``INSET`` partition filter)."""
+    ids = ", ".join(str(int(v)) for v in values)
+    return F.expr(f"`{col}` IN ({ids})" if ids else "false")
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -270,13 +268,8 @@ def read_table_as_of(
     append-style decisions run, where each partition commits once — the
     two semantics coincide.
     """
-    from pyspark.sql import functions as F
-
-    parts = parts_as_of(table_path, snapshot_id)
     return read_table(spark, table_path).where(
-        F.col("phash_prefix").isin([int(p) for p in parts])
-        if parts
-        else F.lit(False)
+        partition_filter("phash_prefix", parts_as_of(table_path, snapshot_id))
     )
 
 

@@ -38,9 +38,14 @@ def drain_available_now(stream_df, out_dir, ckpt, timeout_s=300):
             q.stop()
 
 
+# The checkout these tests run from: its .cache/ holds their scratch tables.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 @pytest.fixture(scope="session")
 def tmp_root():
-    os.makedirs("/root/repo/.cache", exist_ok=True)
-    d = tempfile.mkdtemp(prefix="pii_spark_test_", dir="/root/repo/.cache")
+    cache = os.path.join(REPO, ".cache")
+    os.makedirs(cache, exist_ok=True)
+    d = tempfile.mkdtemp(prefix="pii_spark_test_", dir=cache)
     yield d
     shutil.rmtree(d, ignore_errors=True)

@@ -9,7 +9,7 @@ import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 HEADLINE_KEYS = {"metric", "value", "unit", "queries", "sf", "cpus",

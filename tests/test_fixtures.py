@@ -378,3 +378,79 @@ def test_image_metadata_cache_drops_gone_sf_dirs(spark, tmp_path):
     ids = {r["image_id"] for r in entry._image_metadata(spark, b).collect()}
     assert not os.path.exists(cache_dir(a))
     assert ids == {0, 1, 2}
+
+
+
+def _package_imports(pkg, modules) -> set[str]:
+    """The package files reached from ``modules`` (dotted, package-relative)
+    through relative imports anywhere in their code, transitively; package
+    ``__init__`` files are not followed."""
+    import ast
+    import os
+
+    seen, todo = set(), list(modules)
+    while todo:
+        mod = todo.pop()
+        rel = mod.replace(".", "/") + ".py"
+        if rel in seen or not os.path.isfile(os.path.join(pkg, rel)):
+            continue
+        seen.add(rel)
+        base = mod.split(".")[:-1]
+        with open(os.path.join(pkg, rel)) as f:
+            for node in ast.walk(ast.parse(f.read())):
+                if isinstance(node, ast.ImportFrom) and node.level:
+                    stem = base[:len(base) + 1 - node.level]
+                    stem += node.module.split(".") if node.module else []
+                    todo += [".".join(stem + [a.name]) for a in node.names]
+                    todo.append(".".join(stem))
+    return seen
+
+
+def test_oracle_keys_follow_only_imported_modules(tmp_path, monkeypatch):
+    """Each oracle is keyed on the package files its builder imports,
+    transitively: the scrub oracle's ``core`` imports and what they import,
+    the embedding oracle's none.  An edit to a ``core`` module the scrub
+    oracle does not import keeps its cache; one it reaches rebuilds it."""
+    import os
+    import re
+    import shutil
+
+    from pii_redactor_spark.fixtures import oracle_cache as oc
+
+    src = open(oc.__file__).read()
+    named = re.findall(r"from \.\.core\.(\w+) import", src)
+    named += re.findall(r"from \.\.core import (\w+)", src)
+    roots = {f"core.{m}" for m in named}
+    want = {"fixtures/oracle_cache.py", *_package_imports(oc._PACKAGE, roots)}
+    assert set(oc._SCRUB_SOURCES) == want
+    assert oc._EMBEDDING_SOURCES == ("fixtures/oracle_cache.py",)
+
+    pkg = tmp_path / "pkg"
+    shutil.copytree(oc._PACKAGE, pkg,
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    monkeypatch.setattr(oc, "_PACKAGE", str(pkg))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"input")
+    builds = []
+
+    def build(src, out):
+        builds.append(out)
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        with open(out, "w") as f:
+            f.write("built")
+
+    def call():
+        oc._oracle_cache(str(sf), str(tmp_path / "cache"), "scrub", "t",
+                         "documents.parquet", build, oc._SCRUB_SOURCES)
+
+    call()
+    for name in ("reference_impl.py", "detect.py"):
+        with open(pkg / "core" / name, "a") as f:
+            f.write("\n# an edit\n")
+    call()
+    assert len(builds) == 1
+    with open(pkg / "core" / "quality.py", "a") as f:  # via core.langid
+        f.write("\n# an edit\n")
+    call()
+    assert len(builds) == 2

@@ -145,9 +145,10 @@ def test_image_bytes_untouched_and_psnr(spark, pipeline_out, fixture_tables):
 
 
 def test_lineage_counters_match(spark, pipeline_out):
+    from pii_redactor_spark.pipeline.run import read_lineage
+
     out, _, summary = pipeline_out
-    metrics = spark.read.parquet(f"{out}/metrics")
-    agg = metrics.agg(
+    agg = read_lineage(spark, out).agg(
         F.sum("n_in"), F.sum("n_kept"), F.sum("n_dropped")
     ).collect()[0]
     assert int(agg[0]) == summary["n_in"] == N_ROWS
@@ -158,35 +159,57 @@ def test_lineage_counters_match(spark, pipeline_out):
     assert 0.05 < summary["n_dropped"] / N_ROWS < 0.25
 
 
-def test_crash_between_lineage_and_snapshot(spark, tmp_root, fixture_tables,
-                                            crash_on_call):
-    """The lineage-append/snapshot-commit crash window: raw metrics gain a
-    duplicate row for the uncommitted group; read_lineage dedupes to the
-    latest writer and its counters stay exact."""
+def _data_counters(spark, out) -> dict:
+    """Per-part counters of ``{out}/data`` by a direct ``groupBy``."""
+    return {
+        r["phash_prefix"]: (r["n_in"], r["n_kept"], r["n_dropped"],
+                            r["n_entities"])
+        for r in spark.read.parquet(f"{out}/data").groupBy("phash_prefix")
+        .agg(
+            F.count("*").alias("n_in"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+            F.sum("n_entities").alias("n_entities"),
+        ).collect()
+    }
+
+
+def _lineage_counters(spark, out) -> dict:
     from pii_redactor_spark.pipeline.run import read_lineage
+
+    return {
+        r["part_id"]: (r["n_in"], r["n_kept"], r["n_dropped"],
+                       r["n_entities"])
+        for r in read_lineage(spark, out).collect()
+    }
+
+
+def test_crash_before_snapshot_commit(spark, tmp_root, fixture_tables,
+                                      crash_on_call):
+    """A crash after a group's data landed but before its snapshot: the
+    group's parts are uncommitted, so read_lineage has no row for them,
+    and the resumed run rewrites them and counts each row once."""
+    from pii_redactor_spark.sources.storage import committed_parts
 
     images_path, _ = fixture_tables
     out = f"{tmp_root}/out_window"
-    with crash_on_call("commit_snapshot", 1):
+    with crash_on_call("commit_snapshot", 2):
         run_pipeline(
             spark, images_path, out, prefixes_per_commit=20,
             materialize_bytes=False,
         )
-    # lineage row exists for a group that was never snapshot-committed
-    raw_before = spark.read.parquet(f"{out}/metrics").count()
-    assert raw_before > 0
+    committed = committed_parts(f"{out}/data")
+    written = set(_data_counters(spark, out))
+    assert len(committed) == 20 and written > committed
+    assert set(_lineage_counters(spark, out)) == committed
     summary = run_pipeline(
         spark, images_path, out, prefixes_per_commit=20,
         materialize_bytes=False,
     )
-    assert summary["n_in"] == N_ROWS  # redone group counted exactly once
-    raw = spark.read.parquet(f"{out}/metrics")
-    lin = read_lineage(spark, out)
-    # raw history has duplicates for the redone partitions; the view doesn't
-    assert raw.count() > lin.count()
-    assert lin.groupBy("part_id").count().where(F.col("count") > 1).count() == 0
-    agg = lin.agg(F.sum("n_in")).collect()[0][0]
-    assert int(agg) == N_ROWS
+    assert summary["resumed_skipped"] == 20
+    lineage = _lineage_counters(spark, out)
+    assert lineage == _data_counters(spark, out)
+    assert sum(v[0] for v in lineage.values()) == N_ROWS
 
 
 def _job_descriptions(spark, action) -> list[str]:
@@ -213,11 +236,11 @@ def _job_descriptions(spark, action) -> list[str]:
 
 
 def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
-    """A one-group decisions run costs four Spark jobs: input schema, the
-    data write, and the lineage append (map + write) with the group totals
-    observed on it.  Partition directories are listed on the driver, the
-    todo prefixes come from that listing, the written data is read back
-    with its known schema, and the totals take no job of their own."""
+    """A one-group decisions run costs two Spark jobs: input schema and the
+    data write, with the group totals observed on the write.  Partition
+    directories are listed on the driver, the todo prefixes come from that
+    listing, nothing is read back from the written data, and the manifest
+    commit takes no job."""
     import pyspark
 
     images_path, _ = fixture_tables
@@ -235,9 +258,26 @@ def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
     listing = [d for d in jobs
                if d.startswith("Listing leaf files and directories")]
     assert not listing, listing
-    assert len(jobs) <= 4, jobs
+    assert len(jobs) <= 2, jobs
     if pyspark.__version__ == "4.1.2":
-        assert len(jobs) == 4, jobs
+        assert len(jobs) == 2, jobs
+
+
+def test_one_group_op_writes_only_data(spark, tmp_root, fixture_tables):
+    """A decisions op writes one table, ``{out}/data``: its parquet files,
+    the commit markers and the manifest; no lineage table, no checksum
+    files."""
+    import os
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_only_data"
+    run_pipeline(spark, images_path, out, prefixes_per_commit=256,
+                 materialize_bytes=False)
+    assert os.listdir(out) == ["data"]
+    names = {f for _, _, files in os.walk(f"{out}/data") for f in files}
+    assert "_manifest.json" in names
+    other = {f for f in names if not f.endswith(".parquet")}
+    assert other <= {"_manifest.json", "_SUCCESS"}, other
 
 
 def test_partition_values_from_listing(spark, tmp_root, fixture_tables):
@@ -478,6 +518,27 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_root, fixture_tables):
     assert new_ids[0] == 1
     assert all(i > n_snaps for i in new_ids[1:]), new_ids
     assert len(new_ids) == len(set(new_ids))
+
+
+def test_rollback_drops_parts_from_lineage(spark, tmp_root, fixture_tables):
+    """read_lineage follows the manifest: after a rollback the rolled-back
+    parts have no row, though their data is still on disk, and every row
+    left equals a direct count of its part's data."""
+    from pii_redactor_spark.sources.storage import (
+        parts_as_of,
+        rollback_to_snapshot,
+    )
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_rollback_lineage"
+    run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                 materialize_bytes=False)
+    data = _data_counters(spark, out)
+    assert _lineage_counters(spark, out) == data
+    rollback_to_snapshot(f"{out}/data", 1)
+    kept = set(parts_as_of(f"{out}/data", 1))
+    assert len(kept) == 20 and set(data) > kept
+    assert _lineage_counters(spark, out) == {p: data[p] for p in kept}
 
 
 def test_rollback_pre_upgrade_manifest_never_reuses_ids(tmp_root):

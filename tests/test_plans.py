@@ -344,3 +344,27 @@ def test_dedup_stream_plans_native_dedup(spark):
     assert "StreamingDeduplicate" in plan, plan
     assert "FlatMapGroupsInPandasWithState" not in plan, plan
     assert "hashpartitioning(fp#" in plan, plan
+
+
+def test_partition_filter_plans_as_isin(images_df):
+    """``storage.partition_filter`` (one parsed ``IN`` predicate) gives the
+    plan ``Column.isin`` gives: equal optimized and physical plans once
+    expression ids are normalized, with an ``INSET`` in the scan's
+    PartitionFilters.  No values filter everything out."""
+    import re
+
+    from pii_redactor_spark.sources.storage import partition_filter
+
+    group = list(range(0, 256, 5))  # 52 ids, above the INSET threshold
+
+    def plans(df):
+        qe = df._jdf.queryExecution()
+        return [re.sub(r"#\d+L?", "#N", p.toString())
+                for p in (qe.optimizedPlan(), qe.executedPlan())]
+
+    want = images_df.where(F.col("phash_prefix").isin(group))
+    got = images_df.where(partition_filter("phash_prefix", group))
+    assert plans(got) == plans(want)
+    seg = _plan(got).split("PartitionFilters:", 1)[1].split("\n", 1)[0]
+    assert "phash_prefix" in seg and "INSET" in seg, seg
+    assert images_df.where(partition_filter("phash_prefix", [])).count() == 0

@@ -1,6 +1,7 @@
-"""The ``get_spark`` worker daemon: Python workers import pyspark and py4j
-from their installed directories, not from Spark's archives, so a task's
-``importlib.invalidate_caches()`` re-reads no archive directory."""
+"""The local-only ``get_spark`` settings.  Its worker daemon: Python workers
+import pyspark and py4j from their installed directories, not from Spark's
+archives, so a task's ``importlib.invalidate_caches()`` re-reads no archive
+directory.  Its raw local filesystem: no checksum file per written file."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import os
 import subprocess
 import sys
 import zipfile
+
+from pyspark.sql import functions as F
 
 from pii_redactor_spark.session import PACKAGE_ROOT
 from pii_redactor_spark.worker_daemon import dir_entries
@@ -78,3 +81,15 @@ def test_dir_entries_drops_archives_only_when_installed(tmp_path):
         _package(half, "py4j" if only == "pyspark" else "pyspark")
         path = [both, jar, str(half)]
         assert dir_entries(path) == path
+
+
+def test_local_write_leaves_no_checksum_files(spark, tmp_path):
+    """``get_spark`` writes local files through the raw local filesystem:
+    a partitioned write leaves its part files and ``_SUCCESS`` marker and
+    no ``.crc`` checksum file beside any of them."""
+    out = tmp_path / "t"
+    spark.range(40).withColumn("p", F.col("id") % 3).repartition(2) \
+        .write.partitionBy("p").parquet(str(out))
+    names = [f for _, _, files in os.walk(out) for f in files]
+    assert "_SUCCESS" in names and any(n.endswith(".parquet") for n in names)
+    assert not [n for n in names if n.endswith(".crc")], names

@@ -136,9 +136,11 @@ def test_joined_path_plan_shape(spark, df):
 
 
 def test_parse_blocklist(tmp_root):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
     from scrub_job import parse_blocklist
 
     assert parse_blocklist("a, b ,a,c") == ("a", "b", "c")
