@@ -8,8 +8,9 @@ Spark DataFrame pipeline over an Iceberg-style table of image+caption pairs:
   pandas UDF stage (``operators.scrub``)
 * language ID + quality heuristics + n-gram perplexity -> same UDF stage
 * partitioning by phash prefix, salted repartition for skew, AQE
-* manifest-committed partition groups, per-partition lineage read from the
-  committed data, batch resume by anti-joining the committed set (``pipeline``)
+* manifest-committed partition groups, one directory of files per snapshot,
+  per-partition lineage read from the committed data, batch resume by
+  anti-joining the committed set (``pipeline``)
 
 Everything here derives from public knowledge only: the PySpark API and the
 reference repo's observable behavior (cited by file:line in docstrings).

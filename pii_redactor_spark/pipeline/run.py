@@ -4,27 +4,33 @@ Physical plan (SURVEY.md §4): one narrow stage —
 
     FileScan(parquet, pruned) -> [optional salted repartition]
       -> ArrowEvalPython(scrub_udf over caption only)
-      -> Project -> write partitionBy(phash_prefix, keep)
+      -> Project -> write {out}/data/snapshot_id=<id>/ [partitionBy(keep_part)]
 
 * Zero shuffles in the default path; the optional salt repartition is the one
   deliberate shuffle, for caption-length / language heavy-hitter skew
   (north-star: "salted repartitioning and AQE").
-* Output is partitioned by ``(phash_prefix, keep)`` so downstream consumers
+* Each commit group writes one fresh directory, ``{out}/data/snapshot_id=<id>/``
+  (``<id>`` is the id its manifest commit then assigns); ``phash_prefix`` is a
+  data column.  Decisions mode writes one part file per scan task there.
+  Materialize mode partitions only by ``keep_part``, so downstream consumers
   read kept rows with pure partition pruning and the dropped fraction costs
   one directory, not a scan.
-* Resume: work proceeds in groups of ``phash_prefix`` partitions.  Each group
-  runs two steps:
+* Resume: work proceeds in groups of ``phash_prefix`` partitions.  A run
+  first removes every snapshot directory the manifest does not list (a
+  crash before its commit, an interrupted rollback).  Each group then runs
+  two steps:
 
-  1. write: dynamic partition overwrite of the group's partitions
-     (idempotent), with the group's totals observed on the rows it writes
-     (an ``Observation``, not a read-back or a second aggregation);
+  1. write: the group's rows into a new snapshot directory, with the
+     group's totals observed on the rows it writes (an ``Observation``, not
+     a read-back or a second aggregation);
   2. snapshot: the manifest commit of the group's parts and totals, the
      op's only commit point.
 
-  Per-partition lineage is read from the committed data on demand
-  (``read_lineage``), never written as a second table; neither it nor the
-  totals re-runs the scrub UDF.  On restart, committed prefixes are skipped
-  (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` takes the
+  Readers go through the manifest, partition-filtered on ``snapshot_id`` to
+  the live snapshots.  Per-partition lineage is read from the committed data
+  on demand (``read_lineage``), never written as a second table; neither it
+  nor the totals re-runs the scrub UDF.  On restart, committed prefixes are
+  skipped (anti-join semantics, SURVEY.md §2.10): ``todo_prefixes`` takes the
   input's prefixes from its ``phash_prefix=`` partition directories, listed
   on the driver, and drops the manifest's committed set, which
   ``storage.committed_parts`` already holds there.  The input must be laid
@@ -193,11 +199,17 @@ def run_pipeline(
 ) -> dict:
     """Resumable batch run.  Returns summary counters.
 
+    Each commit group is one snapshot: its rows go into the new directory
+    ``{out}/data/snapshot_id=<id>/``, then the manifest commits it.  Before
+    the first write, snapshot directories the manifest does not list are
+    removed (``storage.remove_orphan_snapshots``), so every group writes a
+    directory that does not exist yet and nothing is overwritten.
+
     ``materialize_bytes=False`` is the at-scale form: the same partition-
     committed loop, but each group runs the column-pruned decisions-only
-    transform (bytes never read, never written) — resumable AND pixel-free,
-    per the north rule.  Each run gets a fresh ``run_id`` in its snapshots,
-    and so in ``read_lineage``.
+    transform (bytes never read, never written) and writes one part file
+    per scan task — resumable AND pixel-free, per the north rule.  Each run
+    gets a fresh ``run_id`` in its snapshots, and so in ``read_lineage``.
 
     ``scrub_metadata=True`` (materialize mode only — raises otherwise)
     rewrites image bytes through the metadata-PII scrub in the same
@@ -210,6 +222,7 @@ def run_pipeline(
         )
     run_id = uuid.uuid4().hex[:12]
     data_path = f"{out_dir}/data"
+    storage.remove_orphan_snapshots(data_path)
 
     src = storage.read_table(spark, images_path)
     todo, n_done = todo_prefixes(src, data_path)
@@ -235,17 +248,19 @@ def run_pipeline(
                 # `keep` stays a typed data column.
                 .withColumn("keep_part", F.col("keep").cast("int"))
             )
-            part_cols = ["phash_prefix", "keep_part"]
+            part_cols = ["keep_part"]
         else:
             out = scrub_decisions(part, salt_partitions=salt_partitions,
                                   cfg=scrub_cfg, toxicity=toxicity,
                                   image_quality=image_quality)
-            part_cols = ["phash_prefix"]
+            part_cols = []
         # The group's totals are observed on the rows as the write writes
         # them: no read-back, no second pass, never a second UDF run.
         observed = Observation()
+        snapshot_id = storage.next_snapshot_id(storage.read_manifest(data_path))
         storage.write_partitioned(
-            out.observe(observed, *_counters()), data_path, part_cols
+            out.observe(observed, *_counters()),
+            storage.snapshot_dir(data_path, snapshot_id), part_cols,
         )
         sums = observed.get
         group_counters = {k: int(sums[k] or 0) for k in total}
@@ -266,11 +281,11 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     Iceberg's ``partitions`` metadata table, built on read.
 
     The counters are a column-pruned ``groupBy(phash_prefix)`` over
-    ``{out}/data``, partition-filtered to the manifest's committed set: a
-    part written but never committed (a crash before its snapshot) or
-    rolled back has no row and is never scanned.  ``run_id`` and
-    ``committed_at`` come from the snapshot that last committed the part,
-    latest by ``snapshot_id``."""
+    ``{out}/data``, partition-filtered on ``snapshot_id`` to the manifest's
+    live snapshots: a part written but never committed (a crash before its
+    snapshot) or rolled back has no row and is never scanned.  ``run_id``
+    and ``committed_at`` come from the snapshot that last committed the
+    part, latest by ``snapshot_id``."""
     data_path = f"{out_dir}/data"
     snaps = sorted(storage.read_manifest(data_path)["snapshots"],
                    key=lambda s: s["snapshot_id"])
@@ -280,8 +295,7 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
         "part_id int, run_id string, committed_at string",
     )
     counters = (
-        storage.read_table(spark, data_path)
-        .where(storage.partition_filter("phash_prefix", last))
+        storage.read_committed(spark, data_path)
         .groupBy(F.col("phash_prefix").alias("part_id"))
         .agg(*_counters())
     )
@@ -298,10 +312,11 @@ def apply_decisions(src: DataFrame, decisions: DataFrame) -> DataFrame:
     kept rows and swap in the scrubbed caption — the join the decisions
     architecture promises instead of rewriting 100 TB of pixels.
 
-    Both sides carry ``phash_prefix``, so the join key includes it: with the
-    source partitioned (and/or both sides bucketed — `storage.write_bucketed`)
-    the join co-locates by the same key and prunes partitions; AQE picks
-    broadcast when the kept set is small.
+    Both sides carry ``phash_prefix`` (a partition column of the source, a
+    data column of ``run_pipeline``'s decisions), so the join key includes
+    it: with both sides bucketed (`storage.write_bucketed`) the join
+    co-locates by the same key; AQE picks broadcast when the kept set is
+    small.
     """
     kept = decisions.where(F.col("keep")).select(
         "image_id", "phash_prefix", "scrubbed"
@@ -315,11 +330,15 @@ def apply_decisions(src: DataFrame, decisions: DataFrame) -> DataFrame:
 
 
 def read_kept(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Partition-pruned read of kept rows (keep_part is a partition dir)."""
-    return storage.read_table(spark, f"{out_dir}/data").where(
+    """Kept rows of a materialize run, by partition pruning alone: the live
+    snapshot directories, and within each its ``keep_part=1`` directory."""
+    return storage.read_committed(spark, f"{out_dir}/data").where(
         F.col("keep_part") == 1
     )
 
 
 def read_decisions(spark: SparkSession, out_dir: str) -> DataFrame:
-    return storage.read_table(spark, f"{out_dir}/data").select(*DECISION_COLS)
+    """The decisions columns of every committed row."""
+    return storage.read_committed(spark, f"{out_dir}/data").select(
+        *DECISION_COLS
+    )

@@ -59,8 +59,12 @@ blocks for its next task, so that metric counts idle time.)
 which adds a ``.crc`` file beside each file it writes.  Without the native
 libhadoop, Hadoop 3.4.2 forks a ``chmod`` for every file and directory it
 creates (``RawLocalFileSystem.setPermission``): a one-group decisions op
-over 48 partitions forked 156 through the wrapper and 107 without it.
-Local-only too: a cluster writes to object storage or HDFS.
+over 48 partitions forked 156 through the wrapper and 107 without it while
+it wrote one ``phash_prefix=`` directory per partition.  Writing one
+snapshot directory, one part file per task, the same op at local[4] forks
+15: one per part file and per task-attempt directory (4 each), the
+``_SUCCESS`` marker, and six for the output, snapshot and ``_temporary``
+directories.  Local-only too: a cluster writes to object storage or HDFS.
 """
 
 from __future__ import annotations

@@ -4,24 +4,30 @@ The north-star targets Iceberg tables.  No Iceberg runtime jar is guaranteed
 in this sandbox (no network), so this module provides the identical semantics
 on a Parquet layout (SURVEY.md §1.3):
 
-* partitioned writes (``partitionBy``) with *dynamic* partition overwrite —
-  re-processing a partition replaces exactly that partition (idempotent
-  resume), like an Iceberg ``overwritePartitions``;
-* a JSON manifest standing in for Iceberg snapshot metadata: committed
-  partition ids + counters, written atomically (tmp + rename) *after* the data
-  write succeeds — the commit point;
+* one directory per snapshot, ``<table>/snapshot_id=<id>/``: a commit adds
+  its snapshot's files and no live snapshot's files are ever rewritten,
+  Iceberg's file-level model (an ``append``).  The id is the one
+  ``commit_snapshot`` then assigns (``next_snapshot_id``);
+* a JSON manifest standing in for Iceberg snapshot metadata: each
+  snapshot's partition ids + counters, written atomically (tmp + rename)
+  *after* the data write succeeds — the commit point.  Readers go through
+  it: a scan is partition-filtered on ``snapshot_id`` to the live
+  snapshots, and a ``snapshot_id=`` directory the manifest does not list
+  (a crash before its commit, a rollback) is never read and is removed
+  (``remove_orphan_snapshots``, ``rollback_to_snapshot``);
 * one read/write API so swapping in ``spark.read.format("iceberg")`` /
   ``df.writeTo(tbl)`` is a one-module change.
 
-The function-by-function shim↔Iceberg mapping — and the two places the
-semantics honestly differ (partition-level vs file-level time travel,
-single-writer commits) — is documented in ``docs/ICEBERG_MAPPING.md``.
+The function-by-function shim↔Iceberg mapping — and the place the
+semantics honestly differ (single-writer commits) — is documented in
+``docs/ICEBERG_MAPPING.md``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
 from urllib.parse import unquote
@@ -78,11 +84,13 @@ def partition_filter(col: str, values) -> Column:
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Write ``df`` partitioned by ``partition_cols``, replacing only the
-    partitions it holds (dynamic partition overwrite)."""
-    df.write.partitionBy(*partition_cols).mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(path)
+    """Write ``df`` to ``path``, a directory that does not exist yet,
+    partitioned by ``partition_cols``; with none, each task writes one part
+    file.  Nothing is overwritten: an existing ``path`` raises."""
+    writer = df.write
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
 
 
 def append_table(df: DataFrame, path: str) -> None:
@@ -129,8 +137,6 @@ def write_bucketed(
             or e.endswith(".parquet")
             for e in entries
         ):
-            import shutil
-
             shutil.rmtree(loc, ignore_errors=True)
         else:
             raise RuntimeError(
@@ -145,6 +151,10 @@ def write_bucketed(
 
 
 # --- Manifest (Iceberg snapshot stand-in) -----------------------------------
+
+# The partition column of the snapshot directories.
+SNAPSHOT_COL = "snapshot_id"
+
 
 def manifest_path(table_path: str) -> str:
     return os.path.join(table_path, "_manifest.json")
@@ -169,20 +179,34 @@ def read_manifest(table_path: str) -> dict:
         return json.load(f)
 
 
+def next_snapshot_id(manifest: dict) -> int:
+    """The id the next commit to ``manifest``'s table assigns: one above
+    the all-time high-water mark (``last_snapshot_id``, or the highest id
+    listed, for a manifest written before the mark existed).  A writer puts
+    the snapshot's files in ``snapshot_dir`` of this id, then
+    ``commit_snapshot`` assigns it: one writer per table."""
+    return max(
+        int(manifest.get("last_snapshot_id", 0)),
+        max((s["snapshot_id"] for s in manifest["snapshots"]), default=0),
+    ) + 1
+
+
+def snapshot_dir(table_path: str, snapshot_id: int) -> str:
+    """The directory of snapshot ``snapshot_id``'s files."""
+    return os.path.join(table_path, f"{SNAPSHOT_COL}={snapshot_id}")
+
+
 def commit_snapshot(table_path: str, committed_parts: list[int],
                     counters: dict, run_id: str) -> dict:
     """Append a snapshot entry; atomic via tmp+rename (single-FS sandbox).
 
-    Ids are ALL-TIME monotonic via a persisted high-water mark: after a
-    rollback, new commits continue from the highest id ever issued
-    instead of reusing the rolled-back ids — a consumer that recorded a
-    snapshot_id can never silently resolve it to different-era data
-    (``parts_as_of`` raises on ids no longer in the manifest)."""
+    Ids are ALL-TIME monotonic (``next_snapshot_id``): after a rollback,
+    new commits continue from the highest id ever issued instead of
+    reusing the rolled-back ids — a consumer that recorded a snapshot_id
+    can never silently resolve it to different-era data (``parts_as_of``
+    raises on ids no longer in the manifest)."""
     manifest = read_manifest(table_path)
-    next_id = max(
-        int(manifest.get("last_snapshot_id", 0)),
-        max((s["snapshot_id"] for s in manifest["snapshots"]), default=0),
-    ) + 1
+    next_id = next_snapshot_id(manifest)
     manifest["last_snapshot_id"] = next_id
     manifest["snapshots"].append(
         {
@@ -203,6 +227,31 @@ def committed_parts(table_path: str) -> set[int]:
     for snap in manifest["snapshots"]:
         parts.update(snap["parts"])
     return parts
+
+
+def remove_orphan_snapshots(table_path: str) -> None:
+    """Remove every ``snapshot_id=`` directory the manifest does not list:
+    a snapshot written but never committed (a crash before its commit), or
+    one a rollback dropped before crashing ahead of its removal.  The
+    Iceberg ``remove_orphan_files`` analog.
+
+    Raises ``ValueError`` on any other directory that is not hidden: a
+    table laid out otherwise cannot take snapshot directories beside it."""
+    if not os.path.isdir(table_path):
+        return
+    dirs = {}
+    for entry in os.scandir(table_path):
+        if entry.is_dir() and not entry.name.startswith(("_", ".")):
+            col, _, value = entry.name.partition("=")
+            if col != SNAPSHOT_COL or not value.isdigit():
+                raise ValueError(
+                    f"{entry.path} is not a {SNAPSHOT_COL}= directory"
+                )
+            dirs[int(value)] = entry.path
+    live = {s["snapshot_id"] for s in read_manifest(table_path)["snapshots"]}
+    for snapshot_id, path in dirs.items():
+        if snapshot_id not in live:
+            shutil.rmtree(path)
 
 
 # --- Snapshot operations (Iceberg metadata-table / time-travel analogs) ------
@@ -229,8 +278,8 @@ def snapshots(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def parts_as_of(table_path: str, snapshot_id: int) -> list[int]:
-    """Partition ids committed at or before ``snapshot_id``.
+def _snapshots_as_of(table_path: str, snapshot_id: int) -> list[dict]:
+    """The manifest's snapshots up to ``snapshot_id``.
 
     Raises on an id not present in the manifest — it either never
     existed or was rolled back, and serving a silent guess for a
@@ -241,11 +290,25 @@ def parts_as_of(table_path: str, snapshot_id: int) -> list[int]:
             f"snapshot {snapshot_id} not in manifest at {table_path} "
             f"(never committed, or removed by rollback)"
         )
-    parts: set[int] = set()
-    for s in snaps:
-        if s["snapshot_id"] <= snapshot_id:
-            parts.update(s["parts"])
-    return sorted(parts)
+    return [s for s in snaps if s["snapshot_id"] <= snapshot_id]
+
+
+def parts_as_of(table_path: str, snapshot_id: int) -> list[int]:
+    """Partition ids committed at or before ``snapshot_id``; raises on an
+    id the manifest does not list."""
+    return sorted(
+        {p for s in _snapshots_as_of(table_path, snapshot_id) for p in s["parts"]}
+    )
+
+
+def read_committed(spark: SparkSession, table_path: str) -> DataFrame:
+    """The table as of its latest snapshot: the rows of every snapshot the
+    manifest lists, by one ``snapshot_id`` filter that lands in the scan's
+    PartitionFilters, so a directory it does not list is never read."""
+    ids = [s["snapshot_id"] for s in read_manifest(table_path)["snapshots"]]
+    return read_table(spark, table_path).where(
+        partition_filter(SNAPSHOT_COL, ids)
+    )
 
 
 def read_table_as_of(
@@ -253,45 +316,44 @@ def read_table_as_of(
     table_path: str,
     snapshot_id: int,
 ) -> DataFrame:
-    """Read the table as of ``snapshot_id``: only ``phash_prefix``
-    partitions committed by then are scanned — the membership filter lands
-    in the scan's PartitionFilters, so later partitions are never read
-    from storage (pinned by tests/test_bucketing.py).
-
-    Honest boundary vs real Iceberg: this layout commits *partitions* and
-    rewrites them in place (dynamic partition overwrite), so a partition
-    RE-committed after ``snapshot_id`` serves its current bytes — the
-    partition SET is as-of, the bytes of rewritten partitions are not.
-    Full byte-level time travel needs file-retaining snapshots (Iceberg's
-    expire-managed data files), which is exactly the swap this module's
-    API isolates.  For the primary consumer — resume/rollback of an
-    append-style decisions run, where each partition commits once — the
-    two semantics coincide.
-    """
+    """Read the table as of ``snapshot_id``: the files of the live
+    snapshots up to it, by a ``snapshot_id`` partition filter, so later
+    snapshots' directories are never read (pinned by
+    tests/test_pipeline.py).  A commit only adds a snapshot's files and
+    none is rewritten, so the read is exact at the file level, as
+    Iceberg's.  Raises on an id the manifest does not list."""
+    ids = [s["snapshot_id"] for s in _snapshots_as_of(table_path, snapshot_id)]
     return read_table(spark, table_path).where(
-        partition_filter("phash_prefix", parts_as_of(table_path, snapshot_id))
+        partition_filter(SNAPSHOT_COL, ids)
     )
 
 
 def rollback_to_snapshot(table_path: str, snapshot_id: int) -> dict:
     """Drop every snapshot after ``snapshot_id`` from the manifest (atomic
-    tmp+rename).  The Iceberg ``rollback_to_snapshot`` analog — and fully
-    sound in this layout: rolled-back partitions simply leave the
-    committed set, so the resumable pipeline's todo recomputes
-    and re-overwrites them on the next run (idempotent dynamic partition
-    overwrite)."""
+    tmp+rename), then remove the dropped snapshots' directories.  The
+    Iceberg ``rollback_to_snapshot`` analog plus the expiry of the dropped
+    files: the dropped parts leave the committed set, so the resumable
+    pipeline's todo recomputes them into a new snapshot on its next run.
+    A crash between the swap and the removal leaves directories the
+    manifest does not list: no read scans them, and the next
+    ``run_pipeline`` removes them (``remove_orphan_snapshots``)."""
     manifest = read_manifest(table_path)
-    kept = [
-        s for s in manifest["snapshots"] if s["snapshot_id"] <= snapshot_id
+    dropped = [
+        s["snapshot_id"] for s in manifest["snapshots"]
+        if s["snapshot_id"] > snapshot_id
     ]
-    if len(kept) == len(manifest["snapshots"]):
+    if not dropped:
         return manifest
     # seed the high-water mark from the ids being DROPPED too: a
     # pre-upgrade manifest (no last_snapshot_id key) must not let the
     # next commit reuse a rolled-back id
-    manifest["last_snapshot_id"] = max(
-        int(manifest.get("last_snapshot_id", 0)),
-        max(s["snapshot_id"] for s in manifest["snapshots"]),
-    )
-    manifest["snapshots"] = kept
-    return _write_manifest(table_path, manifest)
+    manifest["last_snapshot_id"] = next_snapshot_id(manifest) - 1
+    manifest["snapshots"] = [
+        s for s in manifest["snapshots"] if s["snapshot_id"] <= snapshot_id
+    ]
+    _write_manifest(table_path, manifest)
+    for i in dropped:
+        path = snapshot_dir(table_path, i)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+    return manifest

@@ -264,9 +264,10 @@ def test_decisions_op_spark_jobs(spark, tmp_root, fixture_tables):
 
 
 def test_one_group_op_writes_only_data(spark, tmp_root, fixture_tables):
-    """A decisions op writes one table, ``{out}/data``: its parquet files,
-    the commit markers and the manifest; no lineage table, no checksum
-    files."""
+    """A decisions op writes one table, ``{out}/data``: the manifest and one
+    ``snapshot_id=`` directory holding its commit marker and no more part
+    files than the op's scan tasks; no lineage table, no checksum files,
+    no ``phash_prefix=`` directories."""
     import os
 
     images_path, _ = fixture_tables
@@ -274,10 +275,14 @@ def test_one_group_op_writes_only_data(spark, tmp_root, fixture_tables):
     run_pipeline(spark, images_path, out, prefixes_per_commit=256,
                  materialize_bytes=False)
     assert os.listdir(out) == ["data"]
-    names = {f for _, _, files in os.walk(f"{out}/data") for f in files}
-    assert "_manifest.json" in names
-    other = {f for f in names if not f.endswith(".parquet")}
-    assert other <= {"_manifest.json", "_SUCCESS"}, other
+    assert sorted(os.listdir(f"{out}/data")) == [
+        "_manifest.json", "snapshot_id=1"
+    ]
+    names = os.listdir(f"{out}/data/snapshot_id=1")
+    parts = [f for f in names if f.endswith(".parquet")]
+    assert set(names) - set(parts) == {"_SUCCESS"}, names
+    scan_tasks = spark.read.parquet(images_path).rdd.getNumPartitions()
+    assert 0 < len(parts) <= scan_tasks, (parts, scan_tasks)
 
 
 def test_partition_values_from_listing(spark, tmp_root, fixture_tables):
@@ -486,7 +491,7 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_root, fixture_tables):
     plan = buf.getvalue()
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters:", 1)[1].split("]", 1)[0]
-    assert "phash_prefix" in seg, plan
+    assert "snapshot_id" in seg, plan
 
     full = spark.read.parquet(data_path).count()
 
@@ -522,8 +527,8 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_root, fixture_tables):
 
 def test_rollback_drops_parts_from_lineage(spark, tmp_root, fixture_tables):
     """read_lineage follows the manifest: after a rollback the rolled-back
-    parts have no row, though their data is still on disk, and every row
-    left equals a direct count of its part's data."""
+    parts have no row, and every row left equals a direct count of its
+    part's data."""
     from pii_redactor_spark.sources.storage import (
         parts_as_of,
         rollback_to_snapshot,
@@ -539,6 +544,114 @@ def test_rollback_drops_parts_from_lineage(spark, tmp_root, fixture_tables):
     kept = set(parts_as_of(f"{out}/data", 1))
     assert len(kept) == 20 and set(data) > kept
     assert _lineage_counters(spark, out) == {p: data[p] for p in kept}
+
+
+def test_rollback_removes_dropped_snapshot_dirs(spark, tmp_root,
+                                               fixture_tables):
+    """A rollback removes the directories of the snapshots it drops, after
+    its manifest swap; the rerun recomputes their parts into new snapshot
+    directories, and a raw read of the table holds every input row once."""
+    import os
+
+    from pii_redactor_spark.sources.storage import (
+        read_manifest,
+        rollback_to_snapshot,
+    )
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_rollback_dirs"
+    data_path = f"{out}/data"
+    run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                 materialize_bytes=False)
+    ids = [s["snapshot_id"] for s in read_manifest(data_path)["snapshots"]]
+    assert sorted(os.listdir(data_path)) == sorted(
+        ["_manifest.json", *(f"snapshot_id={i}" for i in ids)]
+    )
+    rollback_to_snapshot(data_path, 1)
+    assert sorted(os.listdir(data_path)) == ["_manifest.json", "snapshot_id=1"]
+    first = read_manifest(data_path)["snapshots"][0]["counters"]["n_in"]
+    assert spark.read.parquet(data_path).count() == first
+
+    summary = run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                           materialize_bytes=False)
+    assert summary["resumed_skipped"] == 20
+    new_ids = [s["snapshot_id"] for s in read_manifest(data_path)["snapshots"]]
+    assert sorted(os.listdir(data_path)) == sorted(
+        ["_manifest.json", *(f"snapshot_id={i}" for i in new_ids)]
+    )
+    data = spark.read.parquet(data_path)
+    assert data.count() == N_ROWS
+    assert data.select("image_id").distinct().count() == N_ROWS
+
+
+def test_unlisted_snapshot_dirs_never_read_and_removed(spark, tmp_root,
+                                                      fixture_tables,
+                                                      crash_on_call):
+    """A ``snapshot_id=`` directory the manifest does not list — one
+    written by a group that crashed before its commit, and one made by
+    hand — is never read by ``read_lineage`` or ``read_table_as_of``, and
+    the next ``run_pipeline`` removes both before its first write."""
+    import os
+    import shutil
+
+    from pii_redactor_spark.pipeline.run import read_lineage
+    from pii_redactor_spark.sources.storage import (
+        read_manifest,
+        read_table_as_of,
+    )
+
+    images_path, _ = fixture_tables
+    out = f"{tmp_root}/out_orphans"
+    data_path = f"{out}/data"
+    with crash_on_call("commit_snapshot", 2):
+        run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                     materialize_bytes=False)
+    (snap,) = read_manifest(data_path)["snapshots"]
+    assert snap["snapshot_id"] == 1
+    shutil.copytree(f"{data_path}/snapshot_id=1", f"{data_path}/snapshot_id=99")
+    assert sorted(os.listdir(data_path)) == [
+        "_manifest.json", "snapshot_id=1", "snapshot_id=2", "snapshot_id=99"
+    ]
+    raw = spark.read.parquet(data_path).count()
+    assert raw > 2 * snap["counters"]["n_in"]
+
+    lineage = read_lineage(spark, out).collect()
+    assert {r["part_id"] for r in lineage} == set(snap["parts"])
+    assert sum(r["n_in"] for r in lineage) == snap["counters"]["n_in"]
+    asof = read_table_as_of(spark, data_path, 1)
+    assert asof.count() == snap["counters"]["n_in"]
+    assert {r[0] for r in asof.select("snapshot_id").distinct().collect()} \
+        == {1}
+
+    summary = run_pipeline(spark, images_path, out, prefixes_per_commit=20,
+                           materialize_bytes=False)
+    assert summary["resumed_skipped"] == 20
+    assert "snapshot_id=99" not in os.listdir(data_path)
+    ids = {s["snapshot_id"] for s in read_manifest(data_path)["snapshots"]}
+    assert {f"snapshot_id={i}" for i in ids} == {
+        d for d in os.listdir(data_path) if d.startswith("snapshot_id=")
+    }
+    data = spark.read.parquet(data_path)
+    assert data.count() == N_ROWS
+    assert data.select("image_id").distinct().count() == N_ROWS
+
+
+def test_orphan_sweep_refuses_other_layouts(tmp_root):
+    """A table with a data directory that is not a ``snapshot_id=``
+    directory (a run written one directory per ``phash_prefix``) is never
+    swept or resumed: the sweep raises before it removes anything."""
+    import os
+
+    from pii_redactor_spark.sources.storage import remove_orphan_snapshots
+
+    path = os.path.join(tmp_root, "old_layout_table")
+    for d in ("phash_prefix=3", "snapshot_id=7", "_temporary"):
+        os.makedirs(os.path.join(path, d), exist_ok=True)
+    with pytest.raises(ValueError, match="phash_prefix=3"):
+        remove_orphan_snapshots(path)
+    assert sorted(os.listdir(path)) == [
+        "_temporary", "phash_prefix=3", "snapshot_id=7"
+    ]
 
 
 def test_rollback_pre_upgrade_manifest_never_reuses_ids(tmp_root):
